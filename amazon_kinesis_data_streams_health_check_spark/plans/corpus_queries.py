@@ -63,6 +63,10 @@ from amazon_kinesis_data_streams_health_check_spark.sources.tables import (
     load_table,
     parallel_scan,
 )
+from amazon_kinesis_data_streams_health_check_spark.streaming.pipeline import (
+    drain,
+    replay_feed,
+)
 
 _SPARK_TOK = f"regexp_extract_all(lower(text), '{TOKEN_RE}', 0)"
 _DUCK_TOK = f"regexp_extract_all(lower(text), '{TOKEN_RE}')"
@@ -5285,9 +5289,6 @@ def streaming_decontamination_gate(spark: SparkSession, sf_dir: str) -> DataFram
     atomic manifest commit; nothing ever re-reads or re-tokenizes history.
     The final rollup reads the verdict lake, not the stream lineage, so a
     persistence bug changes the counts and fails the oracle hash."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
     import tempfile as _tf
 
     from amazon_kinesis_data_streams_health_check_spark.sources.snapshots import (
@@ -5323,19 +5324,12 @@ def streaming_decontamination_gate(spark: SparkSession, sf_dir: str) -> DataFram
     )
     snapshot_overwrite(spark, bench_grams, gram_lake, partition_col="p")
 
-    # Two-chunk ascending feed of the training docs (mtimes pin the
-    # FileStreamSource batch order).
-    src_dir = _tf.mkdtemp(prefix="decon_gate_src_")
     train = docs.filter(~is_bench)
-    for i in range(2):
-        part_dir = _tf.mkdtemp(prefix=f"decon_gate_part{i}_")
-        train.filter(F.pmod(F.col("doc_id"), F.lit(2)) == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(part_dir)
-        part = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        dst = _os.path.join(src_dir, f"b{i}.parquet")
-        _shutil.move(part, dst)
-        _os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
+    stream, _ = replay_feed(
+        spark,
+        [train.filter(F.pmod(F.col("doc_id"), F.lit(2)) == i) for i in range(2)],
+        "decon_gate_src_",
+    )
 
     flags_lake = _tf.mkdtemp(prefix="decon_gate_flags_")
 
@@ -5373,21 +5367,7 @@ def streaming_decontamination_gate(spark: SparkSession, sf_dir: str) -> DataFram
         )
         snapshot_append(spark, verdicts, flags_lake, partition_col="p")
 
-    stream = (
-        spark.readStream.schema("doc_id bigint, source string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", _tf.mkdtemp(prefix="decon_gate_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    # Hang guard only — sf100 tier batches legitimately exceed 300s.
-    q.awaitTermination(3600)
-    if q.isActive:  # pragma: no cover - defensive against a hung source
-        q.stop()
+    drain(stream.writeStream.foreachBatch(_gate), "decontamination_gate")
     if len(snapshot_history(spark, flags_lake)) != 2:
         raise RuntimeError("gate drive incomplete: expected 2 verdict commits")
     flags = read_snapshot(spark, flags_lake)
@@ -6280,9 +6260,6 @@ def _sbloom_drive(spark: SparkSession, sf_dir: str, n_chunks: int = 3) -> DataFr
     so total index writes over the stream's life are also bounded by
     m_bits. The exact-truth key lake rides the same pattern for FP
     accounting. Nothing ever re-hashes history."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
     import tempfile as _tf
 
     from amazon_kinesis_data_streams_health_check_spark.sources.snapshots import (
@@ -6313,23 +6290,17 @@ def _sbloom_drive(spark: SparkSession, sf_dir: str, n_chunks: int = 3) -> DataFr
         )
     span = int(hi) - int(lo) + 1
     step = max(1, (span + n_chunks - 1) // n_chunks)
-    src_dir = _tf.mkdtemp(prefix="sbloom_src_")
-    seq = 0
-    for i in range(n_chunks):
-        chunk = docs.filter(
-            (F.col("doc_id") >= int(lo) + i * step)
-            & (F.col("doc_id") < int(lo) + (i + 1) * step)
-        )
-        part_dir = _tf.mkdtemp(prefix=f"sbloom_part{i}_")
-        chunk.coalesce(1).write.mode("overwrite").parquet(part_dir)
-        parts = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))
-        if not parts:
-            continue
-        dst = _os.path.join(src_dir, f"b{seq}.parquet")
-        _shutil.move(parts[0], dst)
-        # Strictly increasing mtimes pin the FileStreamSource batch order.
-        _os.utime(dst, (1_600_000_000 + seq, 1_600_000_000 + seq))
-        seq += 1
+    stream, n_files = replay_feed(
+        spark,
+        [
+            docs.filter(
+                (F.col("doc_id") >= int(lo) + i * step)
+                & (F.col("doc_id") < int(lo) + (i + 1) * step)
+            )
+            for i in range(n_chunks)
+        ],
+        "sbloom_src_",
+    )
 
     pos_lake = _tf.mkdtemp(prefix="sbloom_pos_")
     tk_lake = _tf.mkdtemp(prefix="sbloom_tk_")
@@ -6419,24 +6390,10 @@ def _sbloom_drive(spark: SparkSession, sf_dir: str, n_chunks: int = 3) -> DataFr
         )
         snapshot_append(spark, new_tk, tk_lake, partition_col="p")
 
-    stream = (
-        spark.readStream.schema("doc_id bigint, source string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", _tf.mkdtemp(prefix="sbloom_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    # Hang guard only — sf100 tier batches legitimately exceed 300s.
-    q.awaitTermination(3600)
-    if q.isActive:  # pragma: no cover - defensive against a hung source
-        q.stop()
-    if len(snapshot_history(spark, verdict_lake)) != seq:
+    drain(stream.writeStream.foreachBatch(_ingest), "bloom_ingest")
+    if len(snapshot_history(spark, verdict_lake)) != n_files:
         raise RuntimeError(
-            f"ingest drive incomplete: expected {seq} verdict commits"
+            f"ingest drive incomplete: expected {n_files} verdict commits"
         )
     v = read_snapshot(spark, verdict_lake)
     return v.groupBy("source").agg(

@@ -46,6 +46,10 @@ from amazon_kinesis_data_streams_health_check_spark.sources.tables import (
     load_table,
     parallel_scan,
 )
+from amazon_kinesis_data_streams_health_check_spark.streaming.pipeline import (
+    drain,
+    replay_feed,
+)
 
 # ---------------------------------------------------------------------------
 # Deterministic stratified sampling: rebalance languages (downsample the
@@ -2458,9 +2462,6 @@ def _scc_drive(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> DataFrame
     candidates only; index maintenance is three append-only lake commits.
     Nothing ever re-LSHes history.
     """
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
     import tempfile as _tf
 
     from pyspark.sql import Window
@@ -2484,23 +2485,17 @@ def _scc_drive(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> DataFrame
     lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
     span = int(hi) - int(lo) + 1
     step = max(1, (span + n_chunks - 1) // n_chunks)
-    src_dir = _tf.mkdtemp(prefix="scc_src_")
-    seq = 0
-    for i in range(n_chunks):
-        chunk = docs.filter(
-            (F.col("doc_id") >= int(lo) + i * step)
-            & (F.col("doc_id") < int(lo) + (i + 1) * step)
-        )
-        part_dir = _tf.mkdtemp(prefix=f"scc_part{i}_")
-        chunk.coalesce(1).write.mode("overwrite").parquet(part_dir)
-        parts = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))
-        if not parts:
-            continue
-        dst = _os.path.join(src_dir, f"b{seq}.parquet")
-        _shutil.move(parts[0], dst)
-        # Strictly increasing mtimes pin the FileStreamSource batch order.
-        _os.utime(dst, (1_600_000_000 + seq, 1_600_000_000 + seq))
-        seq += 1
+    stream, n_files = replay_feed(
+        spark,
+        [
+            docs.filter(
+                (F.col("doc_id") >= int(lo) + i * step)
+                & (F.col("doc_id") < int(lo) + (i + 1) * step)
+            )
+            for i in range(n_chunks)
+        ],
+        "scc_src_",
+    )
 
     fp_lake = _tf.mkdtemp(prefix="scc_fp_")
     band_lake = _tf.mkdtemp(prefix="scc_bands_")
@@ -2612,30 +2607,11 @@ def _scc_drive(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> DataFrame
             partition_col="p",
         )
 
-    stream = (
-        spark.readStream.schema("doc_id bigint, source string, lang string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", _tf.mkdtemp(prefix="scc_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    # Hang guard only — never a throughput bound. At the sf100 tier (5M
-    # docs) the four micro-batches legitimately exceed the old 600s cap;
-    # the completion check below raises on any truncated drive.
-    q.awaitTermination(3600)
-    if q.isActive:  # pragma: no cover - defensive against a hung source
-        q.stop()
-    from amazon_kinesis_data_streams_health_check_spark.sources.snapshots import (
-        snapshot_history as _sh,
-    )
-
-    if len(_sh(spark, fp_lake)) != seq:
+    drain(stream.writeStream.foreachBatch(_ingest), "curation_cascade")
+    n_commits = len(snapshot_history(spark, fp_lake))
+    if n_commits != n_files:
         raise RuntimeError(
-            f"cascade drive incomplete: {len(_sh(spark, fp_lake))} of {seq} commits"
+            f"cascade drive incomplete: {n_commits} of {n_files} commits"
         )
 
     tot = spark.read.parquet(stats_dir).agg(

@@ -30,6 +30,10 @@ from amazon_kinesis_data_streams_health_check_spark.operators.curation import (
 from amazon_kinesis_data_streams_health_check_spark.plans.registry import register
 from amazon_kinesis_data_streams_health_check_spark.session import configure_session
 from amazon_kinesis_data_streams_health_check_spark.sources.tables import load_table, parallel_scan
+from amazon_kinesis_data_streams_health_check_spark.streaming.pipeline import (
+    drain,
+    replay_feed,
+)
 
 _DUCK_TOK = f"regexp_extract_all(lower(text), '{TOKEN_RE}')"
 
@@ -1973,9 +1977,6 @@ def streaming_dedup_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest commit per micro-batch. This is the deployment shape for a
     crawl pipeline that must reject near-dups of anything already ingested
     without ever re-LSHing history."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
     import tempfile as _tf
 
     from amazon_kinesis_data_streams_health_check_spark.sources.snapshots import (
@@ -1986,17 +1987,11 @@ def streaming_dedup_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    src_dir = _tf.mkdtemp(prefix="dedup_ingest_src_")
-    for i in range(2):
-        part_dir = _tf.mkdtemp(prefix=f"dedup_ingest_part{i}_")
-        docs.filter(F.pmod(F.col("doc_id"), F.lit(2)) == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(part_dir)
-        part = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        dst = _os.path.join(src_dir, f"b{i}.parquet")
-        _shutil.move(part, dst)
-        # Strictly increasing mtimes pin the FileStreamSource batch order.
-        _os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
+    stream, _ = replay_feed(
+        spark,
+        [docs.filter(F.pmod(F.col("doc_id"), F.lit(2)) == i) for i in range(2)],
+        "dedup_ingest_src_",
+    )
 
     bands_lake = _tf.mkdtemp(prefix="dedup_ingest_bands_")
     sh_lake = _tf.mkdtemp(prefix="dedup_ingest_sh_")
@@ -2085,20 +2080,7 @@ def streaming_dedup_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             partition_col="p",
         )
 
-    stream = (
-        spark.readStream.schema("doc_id bigint, source string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", _tf.mkdtemp(prefix="dedup_ingest_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    if q.isActive:  # pragma: no cover - defensive against a hung source
-        q.stop()
+    drain(stream.writeStream.foreachBatch(_ingest), "dedup_index_ingest")
     if len(snapshot_history(spark, bands_lake)) != 2:
         raise RuntimeError("ingest drive incomplete: expected 2 index commits")
     return spark.read.parquet(report_dir)
@@ -4408,9 +4390,6 @@ def streaming_novelty_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the batch side as the build); maintenance appends only NOVEL
     shingles, so the index is the distinct-shingle set, never the stream.
     The report is one row per ingest."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
     import tempfile as _tf
 
     from amazon_kinesis_data_streams_health_check_spark.operators.dedup import (
@@ -4424,16 +4403,14 @@ def streaming_novelty_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    src_dir = _tf.mkdtemp(prefix="novelty_src_")
-    for i in range(_SNI_BATCHES):
-        part_dir = _tf.mkdtemp(prefix=f"novelty_part{i}_")
-        docs.filter(F.pmod(F.col("doc_id"), F.lit(_SNI_BATCHES)) == i).coalesce(
-            1
-        ).write.mode("overwrite").parquet(part_dir)
-        part = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        dst = _os.path.join(src_dir, f"b{i}.parquet")
-        _shutil.move(part, dst)
-        _os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
+    stream, _ = replay_feed(
+        spark,
+        [
+            docs.filter(F.pmod(F.col("doc_id"), F.lit(_SNI_BATCHES)) == i)
+            for i in range(_SNI_BATCHES)
+        ],
+        "novelty_src_",
+    )
 
     index_lake = _tf.mkdtemp(prefix="novelty_index_")
     report_dir = _tf.mkdtemp(prefix="novelty_report_")
@@ -4467,20 +4444,7 @@ def streaming_novelty_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             partition_col="p",
         )
 
-    stream = (
-        spark.readStream.schema("doc_id bigint, source string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", _tf.mkdtemp(prefix="novelty_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    if q.isActive:  # pragma: no cover - defensive against a hung source
-        q.stop()
+    drain(stream.writeStream.foreachBatch(_ingest), "novelty_ingest")
     if len(snapshot_history(spark, index_lake)) != _SNI_BATCHES:
         raise RuntimeError(
             f"novelty ingest incomplete: expected {_SNI_BATCHES} index commits"
@@ -6583,9 +6547,6 @@ def streaming_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     never with the full history, and k growing with the bootstrap corpus
     keeps expected cluster size ~constant (the SemDeDup stance). Index
     maintenance is append-only lake commits; no vector is ever re-fit."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
     import tempfile as _tf
 
     from amazon_kinesis_data_streams_health_check_spark.sources.snapshots import (
@@ -6596,16 +6557,11 @@ def streaming_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    src_dir = _tf.mkdtemp(prefix="semingest_src_")
-    for i in range(2):
-        part_dir = _tf.mkdtemp(prefix=f"semingest_part{i}_")
-        emb.filter(F.pmod(F.col("vec_id"), F.lit(2)) == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(part_dir)
-        part = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        dst = _os.path.join(src_dir, f"b{i}.parquet")
-        _shutil.move(part, dst)
-        _os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
+    stream, _ = replay_feed(
+        spark,
+        [emb.filter(F.pmod(F.col("vec_id"), F.lit(2)) == i) for i in range(2)],
+        "semingest_src_",
+    )
 
     cent_lake = _tf.mkdtemp(prefix="semingest_cents_")
     fine_lake = _tf.mkdtemp(prefix="semingest_fine_")
@@ -6724,21 +6680,7 @@ def streaming_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             partition_col="pj",
         )
 
-    stream = (
-        spark.readStream.schema("vec_id bigint, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    qy = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", _tf.mkdtemp(prefix="semingest_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    # Hang guard only — sf100 tier batches legitimately exceed 600s.
-    qy.awaitTermination(3600)
-    if qy.isActive:  # pragma: no cover - defensive against a hung source
-        qy.stop()
+    drain(stream.writeStream.foreachBatch(_ingest), "semantic_ingest")
     if len(snapshot_history(spark, member_lake)) != 2:
         raise RuntimeError("semantic ingest drive incomplete: expected 2 member commits")
     return spark.read.parquet(report_dir)

@@ -37,6 +37,10 @@ from amazon_kinesis_data_streams_health_check_spark.sources.kinesis_events impor
 from amazon_kinesis_data_streams_health_check_spark.plans.registry import register
 from amazon_kinesis_data_streams_health_check_spark.session import configure_session
 from amazon_kinesis_data_streams_health_check_spark.sources.tables import load_table, parallel_scan
+from amazon_kinesis_data_streams_health_check_spark.streaming.pipeline import (
+    drain,
+    replay_feed,
+)
 
 #: Alarm threshold for the flagship on the driver's ``events`` table. The
 #: reference uses 1s against sub-second Kinesis lag (KinesisHealthCheckStack.java:175);
@@ -1930,7 +1934,6 @@ def streaming_put_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink's oracle proves the drain lost and duplicated nothing."""
     import glob as _glob
     import os as _os
-    import shutil as _shutil
     import tempfile as _tf
 
     from amazon_kinesis_data_streams_health_check_spark.operators.producer import (
@@ -1947,33 +1950,18 @@ def streaming_put_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     reqs = to_kinesis_put_requests(
         tracer_records(events, F.col("ts"), F.col("event_type")), _PUT_SHARDS
     ).withColumn("slice", F.pmod(F.expr("CAST(conv(substr(md5(partitionKey), 1, 8), 16, 10) AS BIGINT)"), F.lit(3)))
-    src_dir = _tf.mkdtemp(prefix="put_stream_src_")
-    for i in range(3):
-        part_dir = _tf.mkdtemp(prefix=f"put_stream_part{i}_")
-        reqs.filter(F.col("slice") == i).drop("slice").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(part_dir)
-        part = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        dst = _os.path.join(src_dir, f"b{i}.parquet")
-        _shutil.move(part, dst)
-        _os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
-    dest = _tf.mkdtemp(prefix="put_stream_sink_")
-    stream = (
-        spark.readStream.schema(
-            "stream_name string, partitionKey string, data binary"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+    stream, _ = replay_feed(
+        spark,
+        [reqs.filter(F.col("slice") == i).drop("slice") for i in range(3)],
+        "put_stream_src_",
     )
-    q = (
+    dest = _tf.mkdtemp(prefix="put_stream_sink_")
+    drain(
         stream.writeStream.format("kinesis_put")
         .option("path", dest)
-        .option("numshards", _PUT_SHARDS)
-        .option("checkpointLocation", _tf.mkdtemp(prefix="put_stream_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+        .option("numshards", _PUT_SHARDS),
+        "put_sink",
     )
-    q.awaitTermination()
     n_manifests = len(_glob.glob(_os.path.join(dest, "_manifest-*.json")))
     if n_manifests != 3:
         raise RuntimeError(f"expected 3 per-batch manifests, got {n_manifests}")

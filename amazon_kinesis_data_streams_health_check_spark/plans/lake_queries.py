@@ -26,6 +26,10 @@ from amazon_kinesis_data_streams_health_check_spark.sources.snapshots import (
     snapshot_overwrite,
 )
 from amazon_kinesis_data_streams_health_check_spark.sources.tables import load_table
+from amazon_kinesis_data_streams_health_check_spark.streaming.pipeline import (
+    drain,
+    replay_feed,
+)
 
 _INGEST_BATCHES = 3
 
@@ -108,10 +112,6 @@ def streaming_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest layer makes each commit atomic, and the maintained aggregate
     only ever reads delta files. The foreachBatch hook raises if any refresh
     silently degrades to a full rescan."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
     configure_session(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -119,18 +119,15 @@ def streaming_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 1e6).cast("long").alias("val_micros"),
     )
-    src_dir = tempfile.mkdtemp(prefix="incagg_stream_src_")
-    for i in range(_INGEST_BATCHES):
-        part_dir = tempfile.mkdtemp(prefix=f"incagg_stream_part{i}_")
-        batch = events.filter(
-            F.pmod(F.col("event_id"), F.lit(_INGEST_BATCHES)) == i
-        ).select("user_id", "event_type", "val_micros")
-        batch.coalesce(1).write.mode("overwrite").parquet(part_dir)
-        part = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        dst = _os.path.join(src_dir, f"b{i}.parquet")
-        _shutil.move(part, dst)
-        # Strictly increasing mtimes pin the FileStreamSource batch order.
-        _os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
+    stream, _ = replay_feed(
+        spark,
+        [
+            events.filter(F.pmod(F.col("event_id"), F.lit(_INGEST_BATCHES)) == i)
+            .select("user_id", "event_type", "val_micros")
+            for i in range(_INGEST_BATCHES)
+        ],
+        "incagg_stream_src_",
+    )
     lake = tempfile.mkdtemp(prefix="incagg_stream_lake_")
     state = tempfile.mkdtemp(prefix="incagg_stream_state_")
 
@@ -149,18 +146,7 @@ def streaming_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"batch {batch_id} refresh was {info['mode']}: {info}"
             )
 
-    stream = (
-        spark.readStream.schema("user_id bigint, event_type string, val_micros bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="incagg_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(_ingest), "incremental_agg")
     return read_snapshot(spark, state).select(
         "user_id",
         "event_type",
@@ -1024,10 +1010,6 @@ def streaming_lake_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     version must not advance in the second drain. At 100 TB this is the
     difference between an idempotent ingest pipeline and silent row
     duplication on every executor hiccup."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
     from amazon_kinesis_data_streams_health_check_spark.sources.snapshots import (
         snapshot_history,
         snapshot_stream_sink,
@@ -1041,28 +1023,18 @@ def streaming_lake_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 1e6).cast("long").alias("val_micros"),
     )
-    src_dir = tempfile.mkdtemp(prefix="lake_ingest_src_")
-    for i in range(n_batches):
-        part_dir = tempfile.mkdtemp(prefix=f"lake_ingest_part{i}_")
-        batch = events.filter(
-            F.pmod(F.col("event_id"), F.lit(n_batches)) == i
-        ).select("user_id", "event_type", "val_micros")
-        batch.coalesce(1).write.mode("overwrite").parquet(part_dir)
-        part = _glob.glob(_os.path.join(part_dir, "part-*.parquet"))[0]
-        dst = _os.path.join(src_dir, f"b{i}.parquet")
-        _shutil.move(part, dst)
-        # Strictly increasing mtimes pin the FileStreamSource batch order.
-        _os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
+    stream, _ = replay_feed(
+        spark,
+        [
+            events.filter(F.pmod(F.col("event_id"), F.lit(n_batches)) == i)
+            .select("user_id", "event_type", "val_micros")
+            for i in range(n_batches)
+        ],
+        "lake_ingest_src_",
+    )
     lake = tempfile.mkdtemp(prefix="lake_ingest_lake_")
 
     def _drain(ckpt_prefix: str) -> None:
-        stream = (
-            spark.readStream.schema(
-                "user_id bigint, event_type string, val_micros bigint"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
         q = snapshot_stream_sink(
             stream,
             lake,
@@ -1070,7 +1042,7 @@ def streaming_lake_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             app_id="lake-ingest",
             partition_col="event_type",
         )
-        q.awaitTermination()
+        drain(q, "lake_ingest")
 
     _drain("lake_ingest_ckpt1_")
     v_first = snapshot_history(spark, lake)[-1]["version"]

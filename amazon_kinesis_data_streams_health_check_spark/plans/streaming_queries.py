@@ -8,17 +8,19 @@ applies verbatim as the oracle (e.g. ``streaming_stateful_alarm``,
 The few genuinely wall-clock-dependent drives register rows-only; tests pin
 the semantics either way (tests/test_streaming.py).
 
-Each builder drives a real streaming query to completion hermetically —
-``availableNow`` trigger + memory sink — and returns the sink's DataFrame.
-That is the verify recipe's preferred drive mode and also exactly how a
-backfill of the production pipeline runs: identical code, bounded input.
+Each builder drives a real streaming query to completion hermetically
+through ``streaming/pipeline.py``: ``replay_feed`` turns ordered chunk
+DataFrames into a one-file-per-trigger stream, and ``drain`` (or its
+memory-sink form ``drain_to_memory``) runs it under the ``availableNow``
+trigger and raises on a failed or hung drive. That is the verify recipe's
+preferred drive mode and also exactly how a backfill of the production
+pipeline runs: identical code, bounded input.
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,45 +48,23 @@ from amazon_kinesis_data_streams_health_check_spark.sources.tables import (
 )
 from amazon_kinesis_data_streams_health_check_spark.streaming.pipeline import (
     consumer_stream,
+    drain,
+    drain_to_memory,
     producer_stream,
+    replay_feed,
     windowed_max_stream,
 )
 
 
-def _run_to_memory(stream: DataFrame, name_prefix: str, output_mode: str = "append") -> DataFrame:
-    """Drive a bounded stream to completion into a memory sink; return it.
-
-    The stateful operators' state-store partition count is frozen from
-    ``spark.sql.shuffle.partitions`` at the first micro-batch. Under the
-    driver's default session that is 200, and AQE does NOT coalesce
-    streaming stateful shuffles — so a 4-chunk drive schedules 800 near
-    -empty state tasks (~70s observed for the EWMA/forecast drives at
-    sf0.01). Clamp to the session's core count for the drive and restore
-    after; results are partitioning-independent (every drive value-hashes
-    against its batch twin regardless).
-    """
-    spark = stream.sparkSession
-    qname = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name_prefix}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    clamp = max(4, min(int(spark.sparkContext.defaultParallelism), 16))
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(clamp))
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        if q.isActive:  # pragma: no cover - defensive against a hung source
-            q.stop()
-    finally:
-        if prev_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(qname)
+def _range_chunks(
+    df: DataFrame, col: str, lo: int, hi: int, unit: int = 60
+) -> list[DataFrame]:
+    """Four ascending ranges of ``col`` over ``[lo, hi]``, cut on ``unit``
+    boundaries: the replay order of the period feeds."""
+    step = max(unit, ((hi - lo + unit) // 4 // unit) * unit)
+    cuts = [lo + i * step for i in range(4)] + [hi + 2 * unit]
+    c = F.col(col)
+    return [df.filter((c >= a) & (c < b)) for a, b in zip(cuts, cuts[1:])]
 
 
 #: Pinned schedule for the oracle-compared producer drive: an availableNow
@@ -119,7 +99,7 @@ FROM b
 )
 def streaming_tracer_produce(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure_session(spark)
-    return _run_to_memory(
+    return drain_to_memory(
         producer_stream(
             spark,
             "health-check-stream",
@@ -189,7 +169,7 @@ def streaming_consumer_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         event_time_source="coalesce",
         now=F.lit(now_val),
     )
-    return _run_to_memory(metrics, "consumer_metrics_stream")
+    return drain_to_memory(metrics, "consumer_metrics_stream")
 
 
 _STREAM_WINDOW_SQL = """
@@ -230,7 +210,7 @@ def streaming_window_max(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("stream_name"),
         F.col("value"),
     )
-    return _run_to_memory(
+    return drain_to_memory(
         windowed_max_stream(metrics), "windowed_max_stream", output_mode="complete"
     )
 
@@ -283,7 +263,7 @@ def streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.symlink(path, os.path.join(src_dir, "events.parquet"))
     raw = restore_timestamp(spark.readStream.schema(schema).parquet(src_dir), "ts")
     events = raw.select("ts", "user_id")
-    return _run_to_memory(
+    return drain_to_memory(
         sessionized_stream(events), "sessionized_stream", output_mode="complete"
     )
 
@@ -328,7 +308,7 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(src_dir),
         "ts",
     )
-    return _run_to_memory(raw.dropDuplicates(["event_id"]), "dedup_stream")
+    return drain_to_memory(raw.dropDuplicates(["event_id"]), "dedup_stream")
 
 
 _AUDIT_SQL = f"""
@@ -384,23 +364,6 @@ def streaming_delivery_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub = load_table(spark, sf_dir, "events").filter(F.expr(_STREAM_FILTER))
     hi = sub.agg(F.max("ts")).collect()[0][0]
 
-    def _two_files(df, sentinel_df, prefix: str) -> str:
-        """Write df then sentinel as two mtime-ordered single files."""
-        import shutil
-
-        out = tempfile.mkdtemp(prefix=prefix)
-        for i, part_df in enumerate((df, sentinel_df)):
-            tmp = tempfile.mkdtemp(prefix=f"{prefix}{i}_")
-            part_df.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(
-                p for p in sorted(os.listdir(tmp))
-                if p.startswith("part-") and p.endswith(".parquet")
-            )
-            dst = os.path.join(out, f"chunk_{i:02d}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-        return out
-
     tracer_rows = sub.select(
         F.col("event_type").alias("stream_name"),
         scalar.instant_iso(F.col("ts")).alias("partition_key"),
@@ -426,23 +389,13 @@ def streaming_delivery_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(hi) + F.expr("INTERVAL 1 HOUR")).alias("arrival_ts"),
     )
 
-    tdir = _two_files(tracer_rows, tracer_sentinel, "audit_tracers_")
-    rdir = _two_files(receipt_rows, receipt_sentinel, "audit_receipts_")
-    tracers = (
-        spark.readStream.schema(
-            "stream_name string, partition_key string, sent_ts timestamp"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(tdir)
+    # Data then sentinel, one micro-batch each per leg.
+    tracers, _ = replay_feed(spark, [tracer_rows, tracer_sentinel], "audit_tracers_")
+    receipts, _ = replay_feed(
+        spark, [receipt_rows, receipt_sentinel], "audit_receipts_"
     )
-    receipts = (
-        spark.readStream.schema("partitionKey string, arrival_ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(rdir)
-    )
-
     audited = delivery_audit_join(tracers, receipts)
-    sunk = _run_to_memory(audited, "delivery_audit", output_mode="append")
+    sunk = drain_to_memory(audited, "delivery_audit", output_mode="append")
     return sunk.filter(F.col("stream_name") != "_sentinel")
 
 
@@ -475,8 +428,6 @@ def streaming_stateful_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     The wall-clock heartbeat-timeout leg (processing-/event-time timeouts)
     stays pinned hermetically in tests/test_streaming.py.
     """
-    import shutil
-
     from amazon_kinesis_data_streams_health_check_spark.operators.lag import (
         staleness_at_window_close,
     )
@@ -515,38 +466,13 @@ def streaming_stateful_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("long").alias("n_datapoints"),
     )
 
-    # 4 single-file chunks by period range, mtimes strictly ascending:
-    # maxFilesPerTrigger=1 then replays periods in order across 4 real
+    # 4 chunks by period range, replayed in order across 4 real
     # micro-batches, exercising cross-batch state persistence.
-    feed_dir = tempfile.mkdtemp(prefix="alarm_feed_")
-    n_chunks = 4
-    span = hi_s - lo_s + 60
-    step = max(60, (span // n_chunks // 60) * 60)
-    cuts = [lo_s + i * step for i in range(n_chunks)] + [hi_s + 120]
-    for i in range(n_chunks):
-        chunk = metrics.filter(
-            (F.col("ws_s") >= cuts[i]) & (F.col("ws_s") < cuts[i + 1])
-        )
-        if i == n_chunks - 1:
-            chunk = chunk.unionByName(sentinels)
-        tmp = tempfile.mkdtemp(prefix=f"alarm_chunk{i}_")
-        chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p for p in sorted(os.listdir(tmp)) if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dst = os.path.join(feed_dir, f"chunk_{i:02d}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-
-    feed = (
-        spark.readStream.schema(
-            "stream_name string, ws_s long, max_value double, n_datapoints long"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
-    )
+    chunks = _range_chunks(metrics, "ws_s", lo_s, hi_s)
+    chunks[-1] = chunks[-1].unionByName(sentinels)
+    feed, _ = replay_feed(spark, chunks, "alarm_feed_")
     alarms = period_alarm_stream(feed, threshold=30.0, lo_s=lo_s, hi_s=hi_s)
-    sunk = _run_to_memory(alarms, "stateful_alarm", output_mode="update")
+    sunk = drain_to_memory(alarms, "stateful_alarm", output_mode="update")
     return sunk.select(
         "stream_name",
         F.timestamp_seconds("ws_s").alias("window_start"),
@@ -1163,7 +1089,7 @@ def streaming_kpl_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("payload_epoch_s"),
         F.octet_length("user_data").cast("long").alias("payload_len"),
     )
-    return _run_to_memory(decoded, "kpl_consume")
+    return drain_to_memory(decoded, "kpl_consume")
 
 
 # ---------------------------------------------------------------------------
@@ -1400,7 +1326,7 @@ def streaming_kinesis_sim_consume(spark: SparkSession, sf_dir: str) -> DataFrame
             )
         ).alias("value"),
     )
-    return _run_to_memory(metrics, "kinesis_sim_consume")
+    return drain_to_memory(metrics, "kinesis_sim_consume")
 
 
 @register(
@@ -1439,10 +1365,7 @@ def metrics_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink_dir = tempfile.mkdtemp(prefix="metrics_sink_")
     ckpt = tempfile.mkdtemp(prefix="metrics_sink_ckpt_")
-    q = write_metrics_sink(metrics, sink_dir, ckpt)
-    q.awaitTermination(300)
-    if q.isActive:  # pragma: no cover - defensive against a hung source
-        q.stop()
+    drain(write_metrics_sink(metrics, sink_dir, ckpt), "metrics_sink")
     return spark.read.parquet(sink_dir)
 
 
@@ -1491,7 +1414,7 @@ def streaming_corpus_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stopword_ratio",
         "quality_score",
     )
-    return _run_to_memory(out, "corpus_quality_stream")
+    return drain_to_memory(out, "corpus_quality_stream")
 
 
 # ---------------------------------------------------------------------------
@@ -1558,7 +1481,7 @@ def streaming_trending_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.window(F.col("ts"), f"{_TREND_WINDOW_S} seconds", f"{_TREND_SLIDE_S} seconds").alias("w"),
         "event_type",
     ).agg(F.count(F.lit(1)).alias("n_events"))
-    drained = _run_to_memory(counts, "trending_stream", output_mode="complete")
+    drained = drain_to_memory(counts, "trending_stream", output_mode="complete")
     ranked = drained.select(
         F.unix_timestamp(F.col("w.start")).alias("window_start_s"),
         "event_type",
@@ -1628,7 +1551,7 @@ def streaming_enriched_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_veteran"),
     )
-    return _run_to_memory(out, "enriched_stream", output_mode="complete")
+    return drain_to_memory(out, "enriched_stream", output_mode="complete")
 
 
 # ---------------------------------------------------------------------------
@@ -1656,8 +1579,6 @@ def streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     Because the carry pair is mergeable, a backfill replay from any
     checkpoint reproduces the identical statistic — the property that makes
     CUSUM deployable as a continuous query."""
-    import shutil
-
     from amazon_kinesis_data_streams_health_check_spark.streaming.cusum import (
         cusum_stream,
     )
@@ -1684,37 +1605,12 @@ def streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = feed_rows.agg(F.min("ws").alias("lo"), F.max("ws").alias("hi")).collect()[0]
     lo_s, hi_s = int(b["lo"]), int(b["hi"])
 
-    # 4 single-file chunks by period range, mtimes strictly ascending:
-    # maxFilesPerTrigger=1 replays periods in order across 4 real
+    # 4 chunks by period range, replayed in order across 4 real
     # micro-batches, exercising the cross-batch carry.
-    feed_dir = tempfile.mkdtemp(prefix="cusum_feed_")
-    n_chunks = 4
-    span = hi_s - lo_s + 60
-    step = max(60, (span // n_chunks // 60) * 60)
-    cuts = [lo_s + i * step for i in range(n_chunks)] + [hi_s + 120]
-    for i in range(n_chunks):
-        chunk = feed_rows.filter(
-            (F.col("ws") >= cuts[i]) & (F.col("ws") < cuts[i + 1])
-        )
-        tmp = tempfile.mkdtemp(prefix=f"cusum_chunk{i}_")
-        chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p
-            for p in sorted(os.listdir(tmp))
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dst = os.path.join(feed_dir, f"chunk_{i:02d}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-
-    feed = (
-        spark.readStream.schema(
-            "stream_name string, ws long, x long, mu_milli long, slack_milli long"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
+    feed, _ = replay_feed(
+        spark, _range_chunks(feed_rows, "ws", lo_s, hi_s), "cusum_feed_"
     )
-    return _run_to_memory(cusum_stream(feed), "cusum", output_mode="update")
+    return drain_to_memory(cusum_stream(feed), "cusum", output_mode="update")
 
 
 # ---------------------------------------------------------------------------
@@ -1740,8 +1636,6 @@ def streaming_hysteresis_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     can carry; each micro-batch folds its periods in O(rows). The batch
     window form and this fold are the same recurrence, which the shared
     oracle enforces forever."""
-    import shutil
-
     from amazon_kinesis_data_streams_health_check_spark.streaming.cusum import (
         hysteresis_stream,
     )
@@ -1765,30 +1659,8 @@ def streaming_hysteresis_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = m.agg(F.min("ws").alias("lo"), F.max("ws").alias("hi")).collect()[0]
     lo_s, hi_s = int(b["lo"]), int(b["hi"])
 
-    feed_dir = tempfile.mkdtemp(prefix="hyst_feed_")
-    n_chunks = 4
-    span = hi_s - lo_s + 60
-    step = max(60, (span // n_chunks // 60) * 60)
-    cuts = [lo_s + i * step for i in range(n_chunks)] + [hi_s + 120]
-    for i in range(n_chunks):
-        chunk = m.filter((F.col("ws") >= cuts[i]) & (F.col("ws") < cuts[i + 1]))
-        tmp = tempfile.mkdtemp(prefix=f"hyst_chunk{i}_")
-        chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p
-            for p in sorted(os.listdir(tmp))
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dst = os.path.join(feed_dir, f"chunk_{i:02d}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-
-    feed = (
-        spark.readStream.schema("stream_name string, ws long, x long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
-    )
-    return _run_to_memory(hysteresis_stream(feed), "hyst", output_mode="update")
+    feed, _ = replay_feed(spark, _range_chunks(m, "ws", lo_s, hi_s), "hyst_feed_")
+    return drain_to_memory(hysteresis_stream(feed), "hyst", output_mode="update")
 
 
 # ---------------------------------------------------------------------------
@@ -2279,7 +2151,7 @@ def streaming_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "key", "early")
         .agg(F.count(F.lit(1)).cast("long").alias("n_key"))
     )
-    counts = _run_to_memory(
+    counts = drain_to_memory(
         keyed, "schema_drift_counts", output_mode="complete"
     ).localCheckpoint(eager=False)  # MemoryPlan self-joins trip dedup otherwise
     totals = counts.filter(F.col("key") == "schemaVersion").select(
@@ -2403,7 +2275,7 @@ def streaming_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("sum_value_micros"),
     )
-    return _run_to_memory(out, "scd2_enrich_stream", output_mode="complete")
+    return drain_to_memory(out, "scd2_enrich_stream", output_mode="complete")
 
 
 # ---------------------------------------------------------------------------
@@ -2440,8 +2312,6 @@ def streaming_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Arrow-batched, no per-row Python round trips); emission is one
     cumulative row per touched user per batch and the final read is a
     max-of-struct per user — no window, no sort."""
-    import shutil
-
     from amazon_kinesis_data_streams_health_check_spark.streaming.rate_limit import (
         rate_limit_stream,
     )
@@ -2453,30 +2323,13 @@ def streaming_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b = rows.agg(F.min("s").alias("lo"), F.max("s").alias("hi")).collect()[0]
     lo, hi = int(b["lo"]), int(b["hi"])
-    feed_dir = tempfile.mkdtemp(prefix="rl_feed_")
-    n_chunks = 4
-    step = (hi - lo) // n_chunks + 1
-    for i in range(n_chunks):
-        chunk = rows.filter(
-            (F.col("s") >= lo + i * step) & (F.col("s") < lo + (i + 1) * step)
-        )
-        tmp = tempfile.mkdtemp(prefix=f"rl_chunk{i}_")
-        chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p
-            for p in sorted(os.listdir(tmp))
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dst = os.path.join(feed_dir, f"chunk_{i:02d}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-
-    feed = (
-        spark.readStream.schema("user_id long, s long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
-    )
-    drained = _run_to_memory(
+    step = (hi - lo) // 4 + 1
+    chunks = [
+        rows.filter((F.col("s") >= lo + i * step) & (F.col("s") < lo + (i + 1) * step))
+        for i in range(4)
+    ]
+    feed, _ = replay_feed(spark, chunks, "rl_feed_")
+    drained = drain_to_memory(
         rate_limit_stream(feed, _RL_CAP, _RL_REFILL_S),
         "rate_limit",
         output_mode="update",
@@ -2559,8 +2412,6 @@ def streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     N's watermark derives from batch N-1's data; the poison value and the
     dropped-row counter turn any future regression of that rule into a
     loud hash/assert failure rather than silent acceptance."""
-    import shutil
-
     configure_session(spark)
     e = _LATE_EPOCH
     files = [
@@ -2569,24 +2420,10 @@ def streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(s, e + m * 60 + 30, 999) for s in _LATE_STREAMS for m in range(_LATE_REPLAYED)]
         + [(s, e + m * 60 + 30, 100 + m) for s in _LATE_STREAMS for m in range(20, _LATE_MINUTES)],
     ]
-    feed_dir = tempfile.mkdtemp(prefix="late_feed_")
-    for i, rows in enumerate(files):
-        df = spark.createDataFrame(rows, "stream_name string, sec long, x long")
-        tmp = tempfile.mkdtemp(prefix=f"late_chunk{i}_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p
-            for p in sorted(os.listdir(tmp))
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dst = os.path.join(feed_dir, f"chunk_{i:02d}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-
-    feed = (
-        spark.readStream.schema("stream_name string, sec long, x long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
+    feed, _ = replay_feed(
+        spark,
+        [spark.createDataFrame(rows, "stream_name string, sec long, x long") for rows in files],
+        "late_feed_",
     )
     agg = (
         feed.withColumn("ts", F.timestamp_seconds("sec"))
@@ -2603,19 +2440,7 @@ def streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_x",
         )
     )
-    qname = f"late_audit_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_late_audit_")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    if q.isActive:  # pragma: no cover - defensive
-        q.stop()
+    q = drain(agg.writeStream.format("memory").outputMode("append"), "late_audit")
     # Loud audit: the late replays must be dropped BY THE WATERMARK, not
     # silently absorbed — a regression of the batch/watermark rule would
     # otherwise only show as a value change.
@@ -2629,7 +2454,7 @@ def streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"watermark dropped {dropped} rows, expected {expected} — "
             "microbatch watermark semantics changed"
         )
-    return spark.table(qname)
+    return spark.table(q.name)
 
 
 # ---------------------------------------------------------------------------
@@ -2858,7 +2683,7 @@ def streaming_fanin_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("pay_s"),
     )
-    drained = _run_to_memory(decoded, "fanin_union")
+    drained = drain_to_memory(decoded, "fanin_union")
     return drained.groupBy("stream_name", "shard_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_records"),
         F.min("seq").cast("long").alias("first_seq"),
@@ -2901,20 +2726,14 @@ def streaming_lease_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     — never overwriting the version being read), exactly how a lease table
     would be swapped in object storage."""
     import glob as _glob
-    import shutil as _shutil
 
     configure_session(spark)
-    feed = tempfile.mkdtemp(prefix="hb_feed_")
     fleets = [["w0", "w1", "w2", "w3"], ["w0", "w1", "w2"]]
-    for i, fleet in enumerate(fleets):
-        part_dir = tempfile.mkdtemp(prefix=f"hb_part{i}_")
-        spark.createDataFrame(
-            [(w,) for w in fleet], "worker string"
-        ).coalesce(1).write.mode("overwrite").parquet(part_dir)
-        part = _glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-        dst = os.path.join(feed, f"b{i}.parquet")
-        _shutil.move(part, dst)
-        os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
+    stream, _ = replay_feed(
+        spark,
+        [spark.createDataFrame([(w,) for w in f], "worker string") for f in fleets],
+        "hb_feed_",
+    )
 
     state_root = tempfile.mkdtemp(prefix="lease_state_")
     seen: list[list[str]] = []
@@ -2945,21 +2764,8 @@ def streaming_lease_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(state_root, f"v{batch_id}")
         )
 
-    stream = (
-        spark.readStream.schema("worker string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_reconcile)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="lease_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    if q.isActive:  # pragma: no cover - defensive against a hung source
-        q.stop()
-    if seen != [["w0", "w1", "w2", "w3"], ["w0", "w1", "w2"]]:
+    drain(stream.writeStream.foreachBatch(_reconcile), "lease_rebalance")
+    if seen != fleets:
         raise RuntimeError(f"lease drive incomplete or misordered: {seen}")
     final = sorted(_glob.glob(os.path.join(state_root, "v*")))[-1]
     return spark.read.parquet(final).select(
@@ -3034,8 +2840,6 @@ def streaming_ewma_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch folds its periods in O(rows * H). Because the carry is the
     literal lag history, a backfill replay from any checkpoint reproduces
     the identical chart — what makes the EWMA deployable continuously."""
-    import shutil
-
     from amazon_kinesis_data_streams_health_check_spark.streaming.ewma import (
         ewma_stream,
     )
@@ -3055,32 +2859,10 @@ def streaming_ewma_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = feed_rows.agg(F.min("ws").alias("lo"), F.max("ws").alias("hi")).collect()[0]
     lo_s, hi_s = int(b["lo"]), int(b["hi"])
 
-    feed_dir = tempfile.mkdtemp(prefix="ewma_feed_")
-    n_chunks = 4
-    span = hi_s - lo_s + 60
-    step = max(60, (span // n_chunks // 60) * 60)
-    cuts = [lo_s + i * step for i in range(n_chunks)] + [hi_s + 120]
-    for i in range(n_chunks):
-        chunk = feed_rows.filter(
-            (F.col("ws") >= cuts[i]) & (F.col("ws") < cuts[i + 1])
-        )
-        tmp = tempfile.mkdtemp(prefix=f"ewma_chunk{i}_")
-        chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p
-            for p in sorted(os.listdir(tmp))
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dst = os.path.join(feed_dir, f"chunk_{i:02d}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-
-    feed = (
-        spark.readStream.schema("stream_name string, ws long, x long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
+    feed, _ = replay_feed(
+        spark, _range_chunks(feed_rows, "ws", lo_s, hi_s), "ewma_feed_"
     )
-    return _run_to_memory(ewma_stream(feed), "ewma", output_mode="update")
+    return drain_to_memory(ewma_stream(feed), "ewma", output_mode="update")
 
 
 # ---------------------------------------------------------------------------
@@ -3114,8 +2896,6 @@ def streaming_control_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream and each micro-batch folds its periods in O(rows * 60). Because
     the state is exactly what the batch windows read, a backfill replay
     from any checkpoint reproduces the identical page decisions."""
-    import shutil
-
     from amazon_kinesis_data_streams_health_check_spark.streaming.ensemble import (
         ensemble_stream,
     )
@@ -3145,34 +2925,10 @@ def streaming_control_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = feed_rows.agg(F.min("ws").alias("lo"), F.max("ws").alias("hi")).collect()[0]
     lo_s, hi_s = int(b["lo"]), int(b["hi"])
 
-    feed_dir = tempfile.mkdtemp(prefix="ens_feed_")
-    n_chunks = 4
-    span = hi_s - lo_s + 60
-    step = max(60, (span // n_chunks // 60) * 60)
-    cuts = [lo_s + i * step for i in range(n_chunks)] + [hi_s + 120]
-    for i in range(n_chunks):
-        chunk = feed_rows.filter(
-            (F.col("ws") >= cuts[i]) & (F.col("ws") < cuts[i + 1])
-        )
-        tmp = tempfile.mkdtemp(prefix=f"ens_chunk{i}_")
-        chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p
-            for p in sorted(os.listdir(tmp))
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dst = os.path.join(feed_dir, f"chunk_{i:02d}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-
-    feed = (
-        spark.readStream.schema(
-            "stream_name string, ws long, x long, mu_milli long, slack_milli long"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
+    feed, _ = replay_feed(
+        spark, _range_chunks(feed_rows, "ws", lo_s, hi_s), "ens_feed_"
     )
-    return _run_to_memory(ensemble_stream(feed), "ens", output_mode="update")
+    return drain_to_memory(ensemble_stream(feed), "ens", output_mode="update")
 
 
 # ---------------------------------------------------------------------------
@@ -3433,8 +3189,6 @@ def streaming_forecast_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: state is O(streams * 3); the feed is the bounded daily
     grid, not raw events; the post-drain rollup and winner window run on
     (streams x 3 models) rows."""
-    import shutil
-
     from pyspark.sql import Window
 
     from amazon_kinesis_data_streams_health_check_spark.streaming.forecast import (
@@ -3465,33 +3219,10 @@ def streaming_forecast_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b = dense.agg(F.min("d_s").alias("lo"), F.max("d_s").alias("hi")).collect()[0]
     lo_s, hi_s = int(b["lo"]), int(b["hi"])
-    feed_dir = tempfile.mkdtemp(prefix="fcst_feed_")
-    n_chunks = 4
-    day = 86400
-    span = hi_s - lo_s + day
-    step = max(day, (span // n_chunks // day) * day)
-    cuts = [lo_s + i * step for i in range(n_chunks)] + [hi_s + 2 * day]
-    for i in range(n_chunks):
-        chunk = dense.filter(
-            (F.col("d_s") >= cuts[i]) & (F.col("d_s") < cuts[i + 1])
-        )
-        tmp = tempfile.mkdtemp(prefix=f"fcst_chunk{i}_")
-        chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p
-            for p in sorted(os.listdir(tmp))
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dst = os.path.join(feed_dir, f"chunk_{i:02d}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-
-    feed = (
-        spark.readStream.schema("stream_name string, d_s long, y long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
+    feed, _ = replay_feed(
+        spark, _range_chunks(dense, "d_s", lo_s, hi_s, unit=86400), "fcst_feed_"
     )
-    drained = _run_to_memory(
+    drained = drain_to_memory(
         forecast_stream(feed), "fcst", output_mode="update"
     )
     forecasts = drained.select(
@@ -3545,8 +3276,6 @@ def streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: state is two BIGINTs per stream; the feed is the
     bounded minute rollup; post-drain reduction is an arg-min over the
     crossing rows plus a stream-keyed join of tiny tables."""
-    import shutil
-
     from amazon_kinesis_data_streams_health_check_spark.streaming.sprt import (
         SPRT_BOUND_MBITS,
         sprt_stream,
@@ -3568,32 +3297,10 @@ def streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b = trials.agg(F.min("m_s").alias("lo"), F.max("m_s").alias("hi")).collect()[0]
     lo_s, hi_s = int(b["lo"]), int(b["hi"])
-    feed_dir = tempfile.mkdtemp(prefix="sprt_feed_")
-    n_chunks = 4
-    span = hi_s - lo_s + 60
-    step = max(60, (span // n_chunks // 60) * 60)
-    cuts = [lo_s + i * step for i in range(n_chunks)] + [hi_s + 120]
-    for i in range(n_chunks):
-        chunk = trials.filter(
-            (F.col("m_s") >= cuts[i]) & (F.col("m_s") < cuts[i + 1])
-        )
-        tmp = tempfile.mkdtemp(prefix=f"sprt_chunk{i}_")
-        chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p
-            for p in sorted(os.listdir(tmp))
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dst = os.path.join(feed_dir, f"chunk_{i:02d}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-
-    feed = (
-        spark.readStream.schema("stream_name string, m_s long, n long, s long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
+    feed, _ = replay_feed(
+        spark, _range_chunks(trials, "m_s", lo_s, hi_s), "sprt_feed_"
     )
-    walk = _run_to_memory(sprt_stream(feed), "sprt", output_mode="update")
+    walk = drain_to_memory(sprt_stream(feed), "sprt", output_mode="update")
     walk = walk.localCheckpoint(eager=False)  # totals AND crossings
     crossings = walk.filter(F.expr(f"abs(llr_mbits) >= {SPRT_BOUND_MBITS}"))
     first_cross = crossings.groupBy("stream_name").agg(
@@ -3699,8 +3406,6 @@ def streaming_journey_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     the drive's sink independent of how the feed is sliced — the
     strongest replay-equivalence check available for per-key running
     state."""
-    import shutil
-
     from pyspark.sql import Window
 
     from amazon_kinesis_data_streams_health_check_spark.streaming.journey import (
@@ -3752,34 +3457,10 @@ def streaming_journey_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]
     lo_s, hi_s = int(b["lo"]), int(b["hi"])
 
-    feed_dir = tempfile.mkdtemp(prefix="journey_feed_")
-    n_chunks = 4
-    span = hi_s - lo_s + 1
-    step = max(1, span // n_chunks)
-    cuts = [lo_s + i * step for i in range(n_chunks)] + [hi_s + 1]
-    for i in range(n_chunks):
-        chunk = feed_rows.filter(
-            (F.col("ts_us") >= cuts[i]) & (F.col("ts_us") < cuts[i + 1])
-        )
-        tmp = tempfile.mkdtemp(prefix=f"journey_chunk{i}_")
-        chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p
-            for p in sorted(os.listdir(tmp))
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dst = os.path.join(feed_dir, f"chunk_{i:02d}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-
-    feed = (
-        spark.readStream.schema(
-            "user_id long, event_id long, ts_us long, event_type string"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
+    feed, _ = replay_feed(
+        spark, _range_chunks(feed_rows, "ts_us", lo_s, hi_s, unit=1), "journey_feed_"
     )
-    return _run_to_memory(
+    return drain_to_memory(
         journey_stream(feed, costs), "journey", output_mode="update"
     )
 
@@ -3841,8 +3522,6 @@ def streaming_pack_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-key ranges so per-source arrival order equals the batch
     window's order — the condition the real layout service guarantees by
     construction (it IS the thing emitting the order)."""
-    import shutil
-
     from amazon_kinesis_data_streams_health_check_spark.operators.curation import (
         hash_uniform,
     )
@@ -3865,36 +3544,13 @@ def streaming_pack_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("n_tokens"),
     ).localCheckpoint(eager=False)
 
-    # 4 single-file chunks cut on shuffle-key (ou) ranges, mtimes strictly
-    # ascending: per-source arrival order across micro-batches equals the
-    # batch window's (ou, doc_id) order.
-    feed_dir = tempfile.mkdtemp(prefix="spack_feed_")
-    n_chunks = 4
-    step = (1 << 32) // n_chunks
-    cuts = [i * step for i in range(n_chunks)] + [1 << 32]
-    for i in range(n_chunks):
-        chunk = feed_rows.filter(
-            (F.col("ou") >= cuts[i]) & (F.col("ou") < cuts[i + 1])
-        )
-        tmp = tempfile.mkdtemp(prefix=f"spack_chunk{i}_")
-        chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p
-            for p in sorted(os.listdir(tmp))
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dst = os.path.join(feed_dir, f"chunk_{i:02d}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-
-    feed = (
-        spark.readStream.schema(
-            "source string, ou long, doc_id long, n_tokens long"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
+    # 4 chunks cut on shuffle-key (ou) ranges of [0, 2^32), replayed in
+    # order: per-source arrival order across micro-batches equals the batch
+    # window's (ou, doc_id) order.
+    feed, _ = replay_feed(
+        spark, _range_chunks(feed_rows, "ou", 0, (1 << 32) - 1, unit=1), "spack_feed_"
     )
-    return _run_to_memory(
+    return drain_to_memory(
         pack_stream(feed, _SPACK_BUDGET), "spack", output_mode="update"
     )
 
@@ -3949,8 +3605,6 @@ def streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold only counts booleans). The drive cuts feed files on shuffle-key
     ranges so per-source arrival order equals the batch window's order —
     the same replay-equivalence device as streaming_pack_assign."""
-    import shutil
-
     from amazon_kinesis_data_streams_health_check_spark.operators.curation import (
         hash_uniform,
     )
@@ -3974,32 +3628,9 @@ def streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
 
-    feed_dir = tempfile.mkdtemp(prefix="sgate_feed_")
-    n_chunks = 4
-    step = (1 << 32) // n_chunks
-    cuts = [i * step for i in range(n_chunks)] + [1 << 32]
-    for i in range(n_chunks):
-        chunk = feed_rows.filter(
-            (F.col("ou") >= cuts[i]) & (F.col("ou") < cuts[i + 1])
-        )
-        tmp = tempfile.mkdtemp(prefix=f"sgate_chunk{i}_")
-        chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p
-            for p in sorted(os.listdir(tmp))
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dst = os.path.join(feed_dir, f"chunk_{i:02d}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-
-    feed = (
-        spark.readStream.schema(
-            "source string, ou long, doc_id long, passed boolean"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
+    feed, _ = replay_feed(
+        spark, _range_chunks(feed_rows, "ou", 0, (1 << 32) - 1, unit=1), "sgate_feed_"
     )
-    return _run_to_memory(
+    return drain_to_memory(
         quality_gate_stream(feed), "sgate", output_mode="update"
     )

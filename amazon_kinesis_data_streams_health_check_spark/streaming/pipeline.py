@@ -13,12 +13,25 @@ connector or — hermetically — a file stream of kinesis-event JSON with
 (KinesisHealthCheckStack.java:157). ``startingposition=LATEST`` (W2,
 ``:160``) corresponds to starting a file stream against an empty directory /
 the connector's latest offset, with checkpointed offsets thereafter.
+
+Bounded drives (backfills, oracle-compared replays, tests) share two
+helpers: ``replay_feed`` turns ordered chunk DataFrames into that same
+one-file-per-trigger stream, and ``drain`` runs a writer to completion
+under the ``availableNow`` trigger, failing loudly instead of returning a
+partial sink; ``drain_to_memory`` is its memory-sink form.
 """
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+import tempfile
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from amazon_kinesis_data_streams_health_check_spark.functions import scalar
 from amazon_kinesis_data_streams_health_check_spark.operators.consumer import (
@@ -228,3 +241,102 @@ def alerts_foreach_batch_sink(
         .outputMode("update")
         .start()
     )
+
+
+#: Hang guard of every bounded drive, in seconds: a drive still running
+#: after this long is hung, not slow (the sf100 corpus ingests legitimately
+#: take minutes per micro-batch).
+DRAIN_TIMEOUT_S = 3600
+
+#: mtime of the first replayed file; each later file is 10 s newer.
+_REPLAY_EPOCH_S = 1_700_000_000
+
+
+def replay_feed(
+    spark: SparkSession, chunks: list[DataFrame], prefix: str
+) -> tuple[DataFrame, int]:
+    """Bounded ESM ``batchSize=1`` replay: one micro-batch per chunk, in order.
+
+    Each chunk is written as ONE parquet file into a fresh feed dir with
+    strictly ascending mtimes; the file source orders by mtime, so the
+    ``maxFilesPerTrigger=1`` stream consumes the chunks in the order given,
+    one per trigger (an empty chunk still yields its empty micro-batch).
+    The writes go through one staging dir, removed after the moves. The
+    stream schema is the first chunk's.
+
+    Returns ``(stream, n_files)``, the file count a drive checks its
+    commits against.
+    """
+    feed_dir = tempfile.mkdtemp(prefix=prefix)
+    staging = tempfile.mkdtemp(prefix=f"{prefix}staging_")
+    try:
+        for i, chunk in enumerate(chunks):
+            out = os.path.join(staging, str(i))
+            chunk.coalesce(1).write.parquet(out)
+            (part,) = glob.glob(os.path.join(out, "part-*.parquet"))
+            dst = os.path.join(feed_dir, f"chunk_{i:04d}.parquet")
+            shutil.move(part, dst)
+            mtime = _REPLAY_EPOCH_S + 10 * i
+            os.utime(dst, (mtime, mtime))
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+    stream = (
+        spark.readStream.schema(chunks[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(feed_dir)
+    )
+    return stream, len(chunks)
+
+
+def drain(sink: DataStreamWriter | StreamingQuery, name: str) -> StreamingQuery:
+    """Run a bounded stream to completion; return the finished query.
+
+    ``sink`` is a writer, started here as ``name`` (plus a unique suffix)
+    with a fresh checkpoint and the ``availableNow`` trigger, or a query a
+    sink helper already started. A failed query raises. A query still
+    active after ``DRAIN_TIMEOUT_S`` is stopped and raises too, naming the
+    micro-batches it completed: a partial sink is never a result.
+    """
+    if isinstance(sink, DataStreamWriter):
+        sink = (
+            sink.queryName(f"{name}_{uuid.uuid4().hex[:8]}")
+            .option("checkpointLocation", tempfile.mkdtemp(prefix=f"ckpt_{name}_"))
+            .trigger(availableNow=True)
+            .start()
+        )
+    if not sink.awaitTermination(DRAIN_TIMEOUT_S):
+        done = len(sink.recentProgress)
+        sink.stop()
+        raise TimeoutError(
+            f"stream drive {name!r} still active after {DRAIN_TIMEOUT_S}s "
+            f"with {done} micro-batches completed; stopped"
+        )
+    return sink
+
+
+def drain_to_memory(
+    stream: DataFrame, name: str, output_mode: str = "append"
+) -> DataFrame:
+    """``drain`` into a memory sink; return the sink's table.
+
+    The stateful operators' state-store partition count is frozen from
+    ``spark.sql.shuffle.partitions`` at the first micro-batch. Under a
+    default Spark session that is 200, and AQE does NOT coalesce
+    streaming stateful shuffles — so a 4-chunk drive schedules 800 near
+    -empty state tasks (~70s observed for the EWMA/forecast drives at
+    sf0.01). Clamp to the session's core count for the drive and restore
+    after; results are partitioning-independent (every drive value-hashes
+    against its batch twin regardless).
+    """
+    spark = stream.sparkSession
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
+    clamp = max(4, min(int(spark.sparkContext.defaultParallelism), 16))
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", str(clamp))
+        q = drain(
+            stream.writeStream.format("memory").outputMode(output_mode), name
+        )
+    finally:
+        if prev_parts is not None:
+            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    return spark.table(q.name)

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from amazon_kinesis_data_streams_health_check_spark.sources.kinesis_sim import (
     register_kinesis_sim,
 )
+from amazon_kinesis_data_streams_health_check_spark.streaming.pipeline import drain_to_memory
 
 
 def _read(spark, **opts):
@@ -48,22 +49,15 @@ def test_batch_is_deterministic_and_shard_parallel(spark):
     assert seqs == list(range(10))
 
 
-def test_stream_drain_mode_consumes_backlog(spark, tmp_path):
+def test_stream_drain_mode_consumes_backlog(spark):
     register_kinesis_sim(spark)
-    q = (
+    got = drain_to_memory(
         spark.readStream.format("kinesis_sim")
         .option("numShards", 3)
         .option("recordsPerShard", 7)
-        .load()
-        .writeStream.format("memory")
-        .queryName("ks_drain")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .load(),
+        "ks_drain",
     )
-    q.awaitTermination(120)
-    got = spark.table("ks_drain")
     assert got.count() == 21
     # Streaming rows match the batch read exactly (same generator).
     batch = _read(spark, numShards=3, recordsPerShard=7)

@@ -17,6 +17,7 @@ from amazon_kinesis_data_streams_health_check_spark.sources.snapshots import (
     snapshot_overwrite,
     vacuum_snapshots,
 )
+from amazon_kinesis_data_streams_health_check_spark.streaming.pipeline import drain
 
 SCHEMA = "key string, ts string, version int, payload string"
 
@@ -263,8 +264,10 @@ def test_streaming_exactly_once_into_snapshot_lake(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .json(str(src))
         )
-        q = snapshot_stream_sink(stream, path, str(tmp_path / ckpt), app_id="ingest-a")
-        q.awaitTermination(300)
+        drain(
+            snapshot_stream_sink(stream, path, str(tmp_path / ckpt), app_id="ingest-a"),
+            "snapshot_ingest",
+        )
 
     run("ckpt1")
     assert read_snapshot(spark, path).count() == 3

@@ -1,20 +1,27 @@
 """Streaming lifts: producer rate source, file-stream consumer, watermarked
 window agg, checkpoint restart (W2), stateful heartbeat-timeout alarm (W4/W6).
 
-All hermetic: file sources + memory/parquet sinks, availableNow triggers
-where possible (the verify recipe's preferred drive mode)."""
+All hermetic: file sources + memory/parquet sinks, bounded drives through
+``replay_feed``/``drain`` where possible (the verify recipe's preferred
+drive mode)."""
 
 from __future__ import annotations
 
 import json
+import os
+import tempfile
 import time
 
 import pytest
 from pyspark.sql import functions as F
 
+from amazon_kinesis_data_streams_health_check_spark.streaming import pipeline
 from amazon_kinesis_data_streams_health_check_spark.streaming.pipeline import (
     consumer_stream,
+    drain,
+    drain_to_memory,
     producer_stream,
+    replay_feed,
     windowed_max_stream,
     write_metrics_sink,
 )
@@ -48,17 +55,8 @@ def _write_event(dirpath, name: str, arrival: float, seq: str = "01") -> None:
     (dirpath / name).write_text(json.dumps(e))
 
 
-def test_producer_stream_emits_tracers(spark, tmp_path):
-    q = (
-        producer_stream(spark, "health-check-stream")
-        .writeStream.format("memory")
-        .queryName("tracers")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    rows = spark.table("tracers").collect()
+def test_producer_stream_emits_tracers(spark):
+    rows = drain_to_memory(producer_stream(spark, "health-check-stream"), "tracers").collect()
     assert len(rows) >= 1
     r = rows[0]
     assert r.stream_name == "health-check-stream"
@@ -72,15 +70,7 @@ def test_consumer_stream_file_source(spark, tmp_path):
     src.mkdir()
     _write_event(src, "e1.json", 1666014770.0)
     metrics = consumer_stream(spark, str(src), event_time_source="arrival")
-    q = (
-        metrics.writeStream.format("memory")
-        .queryName("consumer_metrics_stream")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    rows = spark.table("consumer_metrics_stream").collect()
+    rows = drain_to_memory(metrics, "consumer_metrics_stream").collect()
     assert len(rows) == 1
     assert rows[0].stream_name == "lambda-stream"
     assert rows[0].metric_name == "HealthCheckSinceSeconds"
@@ -96,17 +86,8 @@ def test_windowed_max_stream_complete_mode(spark, tmp_path):
     metrics = consumer_stream(
         spark, str(src), max_files_per_trigger=10, event_time_source="arrival"
     )
-    agg = windowed_max_stream(metrics)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("windowed_metrics")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    rows = {r.window_start.isoformat(): r for r in spark.table("windowed_metrics").collect()}
+    agg = drain_to_memory(windowed_max_stream(metrics), "windowed_metrics", "complete")
+    rows = {r.window_start.isoformat(): r for r in agg.collect()}
     assert len(rows) == 2  # 13:52 and 13:53 windows
     counts = sorted(r.n_datapoints for r in rows.values())
     assert counts == [1, 2]
@@ -118,17 +99,21 @@ def test_metrics_sink_checkpoint_restart(spark, tmp_path):
     src.mkdir()
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     _write_event(src, "e1.json", 1666014770.0, "01")
-    q = write_metrics_sink(
-        consumer_stream(spark, str(src), event_time_source="arrival"), out, ckpt
+    drain(
+        write_metrics_sink(
+            consumer_stream(spark, str(src), event_time_source="arrival"), out, ckpt
+        ),
+        "metrics_sink",
     )
-    q.awaitTermination(60)
     assert spark.read.parquet(out).count() == 1
     # new file arrives; restart the query from the same checkpoint
     _write_event(src, "e2.json", 1666014771.0, "02")
-    q2 = write_metrics_sink(
-        consumer_stream(spark, str(src), event_time_source="arrival"), out, ckpt
+    drain(
+        write_metrics_sink(
+            consumer_stream(spark, str(src), event_time_source="arrival"), out, ckpt
+        ),
+        "metrics_sink_restart",
     )
-    q2.awaitTermination(60)
     df = spark.read.parquet(out)
     assert df.count() == 2  # exactly-once per file: no duplicates of e1
     assert df.select("stream_name").distinct().collect()[0][0] == "lambda-stream"
@@ -199,16 +184,7 @@ def test_watermark_dedup_drops_redelivered(spark, tmp_path):
         .json(str(src))
     )
     agg = windowed_max_stream(stream, dedup_ids=True)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("dedup_windowed")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    rows = spark.table("dedup_windowed").collect()
+    rows = drain_to_memory(agg, "dedup_windowed", "complete").collect()
     assert len(rows) == 1
     assert rows[0].n_datapoints == 2  # e1 once + e2, not e1 twice
     assert rows[0].max_value == 2.0
@@ -261,16 +237,7 @@ def test_delivery_audit_join_finds_lost_tracer(spark, tmp_path):
     audited = delivery_audit_join(
         tracers, receipts, max_delay="1 minute", watermark="1 minute"
     )
-    q = (
-        audited.writeStream.format("memory")
-        .queryName("delivery_audit")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {r.partition_key: r for r in spark.table("delivery_audit").collect()
+    rows = {r.partition_key: r for r in drain_to_memory(audited, "delivery_audit").collect()
             if not r.partition_key.startswith("sentinel")}
     assert rows["2024-01-01T12:00:00Z"].delivered and rows["2024-01-01T12:00:00Z"].lag_seconds == 2
     assert rows["2024-01-01T12:00:10Z"].delivered and rows["2024-01-01T12:00:10Z"].lag_seconds == 1
@@ -303,16 +270,7 @@ def test_event_time_alarm_gap_detected_deterministically(spark, tmp_path):
         .json(str(src))
     )
     alarms = alarm_state_stream_event_time(metrics, threshold=1.0, gap_ms=120_000)
-    q = (
-        alarms.writeStream.format("memory")
-        .queryName("et_alarm_states")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "et_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    rows = spark.table("et_alarm_states").collect()
+    rows = drain_to_memory(alarms, "et_alarm_states", "update").collect()
 
     gaps = [r for r in rows if r.reason == "gap"]
     assert gaps and all(r.stream_name == "dead-stream" for r in gaps), rows
@@ -322,12 +280,10 @@ def test_event_time_alarm_gap_detected_deterministically(spark, tmp_path):
     assert any(r.reason == "data" and r.stream_name == "dead-stream" for r in rows)
 
 
-def test_period_alarm_slicing_invariant_vs_batch(spark, tmp_path):
+def test_period_alarm_slicing_invariant_vs_batch(spark):
     """The period-walk stateful alarm (W4/W6 oracle form) emits identical
     rows whether the feed arrives as one micro-batch or four, and both match
     the batch alarm_pipeline evaluation on the same metrics."""
-    import os
-
     from amazon_kinesis_data_streams_health_check_spark.operators.alarm import (
         evaluate_alarm,
         with_period_grid,
@@ -355,8 +311,6 @@ def test_period_alarm_slicing_invariant_vs_batch(spark, tmp_path):
     )
 
     def drive(split: bool, tag: str):
-        src = tmp_path / f"feed_{tag}"
-        os.makedirs(src)
         if split:
             chunks = [
                 feed_df.filter(F.col("ws_s") < lo_s + 120),
@@ -367,32 +321,10 @@ def test_period_alarm_slicing_invariant_vs_batch(spark, tmp_path):
             ]
         else:
             chunks = [feed_df.unionByName(sentinels)]
-        for i, c in enumerate(chunks):
-            d = tmp_path / f"w_{tag}_{i}"
-            c.coalesce(1).write.parquet(str(d))
-            part = next(p for p in os.listdir(d) if p.endswith(".parquet"))
-            dst = src / f"chunk_{i:02d}.parquet"
-            os.rename(d / part, dst)
-            os.utime(dst, (1_700_000_000 + i * 10,) * 2)
-        stream = (
-            spark.readStream.schema(
-                "stream_name string, ws_s long, max_value double, n_datapoints long"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(src))
-        )
+        stream, _ = replay_feed(spark, chunks, f"pw_{tag}_")
         alarms = period_alarm_stream(stream, threshold=10.0, lo_s=lo_s, hi_s=hi_s)
-        q = (
-            alarms.writeStream.format("memory")
-            .queryName(f"pw_{tag}")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / f"ckpt_{tag}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
         return sorted(
-            spark.table(f"pw_{tag}").collect(),
+            drain_to_memory(alarms, f"pw_{tag}", "update").collect(),
             key=lambda r: (r.stream_name, r.ws_s),
         )
 
@@ -440,12 +372,10 @@ def test_streaming_cusum_matches_batch(spark, sf_small):
     assert got == want
 
 
-def test_ewma_slicing_invariant_and_matches_python(spark, tmp_path):
+def test_ewma_slicing_invariant_and_matches_python(spark):
     """The streaming EWMA chart emits identical rows whether the feed
     arrives as one micro-batch or three, and the emitted numerators match
     an independent Python recurrence over the same series."""
-    import os
-
     from amazon_kinesis_data_streams_health_check_spark.streaming.ewma import (
         EWMA_H,
         ewma_stream,
@@ -465,8 +395,6 @@ def test_ewma_slicing_invariant_and_matches_python(spark, tmp_path):
     feed_df = spark.createDataFrame(feed_rows, ddl)
 
     def drive(n_chunks: int, tag: str):
-        src = tmp_path / f"feed_{tag}"
-        os.makedirs(src)
         per = 15 // n_chunks + 1
         chunks = [
             feed_df.filter(
@@ -475,31 +403,9 @@ def test_ewma_slicing_invariant_and_matches_python(spark, tmp_path):
             )
             for i in range(n_chunks)
         ]
-        for i, c in enumerate(chunks):
-            d = tmp_path / f"w_{tag}_{i}"
-            c.coalesce(1).write.parquet(str(d))
-            part = next(p for p in os.listdir(d) if p.endswith(".parquet"))
-            dst = src / f"chunk_{i:02d}.parquet"
-            os.rename(d / part, dst)
-            os.utime(dst, (1_700_000_000 + i * 10,) * 2)
-        stream = (
-            spark.readStream.schema(ddl)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        q = (
-            ewma_stream(stream)
-            .writeStream.format("memory")
-            .queryName(f"ewma_{tag}")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / f"ckpt_{tag}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        return sorted(
-            (tuple(r) for r in spark.table(f"ewma_{tag}").collect())
-        )
+        stream, _ = replay_feed(spark, chunks, f"ewma_{tag}_")
+        drained = drain_to_memory(ewma_stream(stream), f"ewma_{tag}", "update")
+        return sorted(tuple(r) for r in drained.collect())
 
     one = drive(1, "one")
     three = drive(3, "three")
@@ -519,12 +425,10 @@ def test_ewma_slicing_invariant_and_matches_python(spark, tmp_path):
     assert spikes == [r for r in one if r[0] == "a" and r[1] == base + 12 * 60]
 
 
-def test_ensemble_slicing_invariant(spark, tmp_path):
+def test_ensemble_slicing_invariant(spark):
     """The streaming ensemble emits identical voted rows whether the feed
     arrives as one micro-batch or three (cross-batch state carries the
     59-count history and the CUSUM pair)."""
-    import os
-
     from amazon_kinesis_data_streams_health_check_spark.streaming.ensemble import (
         ensemble_stream,
     )
@@ -536,36 +440,17 @@ def test_ensemble_slicing_invariant(spark, tmp_path):
     feed_df = spark.createDataFrame(feed_rows, ddl)
 
     def drive(n_chunks: int, tag: str):
-        src = tmp_path / f"feed_{tag}"
-        os.makedirs(src)
         per = len(xs) // n_chunks + 1
-        for i in range(n_chunks):
-            c = feed_df.filter(
+        chunks = [
+            feed_df.filter(
                 (F.col("ws") >= base + i * per * 60)
                 & (F.col("ws") < base + (i + 1) * per * 60)
             )
-            d = tmp_path / f"w_{tag}_{i}"
-            c.coalesce(1).write.parquet(str(d))
-            part = next(p for p in os.listdir(d) if p.endswith(".parquet"))
-            dst = src / f"chunk_{i:02d}.parquet"
-            os.rename(d / part, dst)
-            os.utime(dst, (1_700_000_000 + i * 10,) * 2)
-        stream = (
-            spark.readStream.schema(ddl)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        q = (
-            ensemble_stream(stream)
-            .writeStream.format("memory")
-            .queryName(f"ens_{tag}")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / f"ck_{tag}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        return sorted(tuple(r) for r in spark.table(f"ens_{tag}").collect())
+            for i in range(n_chunks)
+        ]
+        stream, _ = replay_feed(spark, chunks, f"ens_{tag}_")
+        drained = drain_to_memory(ensemble_stream(stream), f"ens_{tag}", "update")
+        return sorted(tuple(r) for r in drained.collect())
 
     one = drive(1, "one")
     three = drive(3, "three")
@@ -577,12 +462,10 @@ def test_ensemble_slicing_invariant(spark, tmp_path):
         assert r[7] == (r[6] >= 2), r
 
 
-def test_journey_stream_slicing_invariant_and_matches_python(spark, tmp_path):
+def test_journey_stream_slicing_invariant_and_matches_python(spark):
     """The streaming journey scorer emits identical prefix rows whether the
     feed arrives as one micro-batch or three, and the running bits match a
     direct Python fold with the same cost matrix."""
-    import os
-
     from amazon_kinesis_data_streams_health_check_spark.streaming.journey import (
         journey_stream,
     )
@@ -606,36 +489,17 @@ def test_journey_stream_slicing_invariant_and_matches_python(spark, tmp_path):
     feed_df = spark.createDataFrame(feed_rows, ddl)
 
     def drive(n_chunks: int, tag: str):
-        src = tmp_path / f"jfeed_{tag}"
-        os.makedirs(src)
         lo, hi = 1000, 1000 + 5 * 7
         per = (hi - lo) // n_chunks + 1
-        for i in range(n_chunks):
-            c = feed_df.filter(
+        chunks = [
+            feed_df.filter(
                 (F.col("ts_us") >= lo + i * per) & (F.col("ts_us") < lo + (i + 1) * per)
             )
-            d = tmp_path / f"jw_{tag}_{i}"
-            c.coalesce(1).write.parquet(str(d))
-            part = next(p for p in os.listdir(d) if p.endswith(".parquet"))
-            dst = src / f"chunk_{i:02d}.parquet"
-            os.rename(d / part, dst)
-            os.utime(dst, (1_700_000_000 + i * 10,) * 2)
-        stream = (
-            spark.readStream.schema(ddl)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        q = (
-            journey_stream(stream, costs)
-            .writeStream.format("memory")
-            .queryName(f"journey_{tag}")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / f"jckpt_{tag}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        return sorted(tuple(r) for r in spark.table(f"journey_{tag}").collect())
+            for i in range(n_chunks)
+        ]
+        stream, _ = replay_feed(spark, chunks, f"journey_{tag}_")
+        drained = drain_to_memory(journey_stream(stream, costs), f"journey_{tag}", "update")
+        return sorted(tuple(r) for r in drained.collect())
 
     one = drive(1, "one")
     three = drive(3, "three")
@@ -650,12 +514,10 @@ def test_journey_stream_slicing_invariant_and_matches_python(spark, tmp_path):
     assert one == sorted(want)
 
 
-def test_pack_stream_slicing_invariant_and_matches_python(spark, tmp_path):
+def test_pack_stream_slicing_invariant_and_matches_python(spark):
     """The streaming packer emits identical bin assignments whether the
     feed arrives as one micro-batch or three, matching a direct Python
     cumsum in shuffle-key order."""
-    import os
-
     from amazon_kinesis_data_streams_health_check_spark.streaming.pack import (
         pack_stream,
     )
@@ -668,35 +530,14 @@ def test_pack_stream_slicing_invariant_and_matches_python(spark, tmp_path):
     feed_df = spark.createDataFrame(rows, ddl)
 
     def drive(n_chunks: int, tag: str):
-        src = tmp_path / f"pfeed_{tag}"
-        os.makedirs(src)
         per = 50 // n_chunks + 1
-        for i in range(n_chunks):
-            c = feed_df.filter(
-                (F.col("ou") >= i * per) & (F.col("ou") < (i + 1) * per)
-            )
-            d = tmp_path / f"pw_{tag}_{i}"
-            c.coalesce(1).write.parquet(str(d))
-            part = next(p for p in os.listdir(d) if p.endswith(".parquet"))
-            dst = src / f"chunk_{i:02d}.parquet"
-            os.rename(d / part, dst)
-            os.utime(dst, (1_700_000_000 + i * 10,) * 2)
-        stream = (
-            spark.readStream.schema(ddl)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        q = (
-            pack_stream(stream, 512)
-            .writeStream.format("memory")
-            .queryName(f"pack_{tag}")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / f"pckpt_{tag}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        return sorted(tuple(r) for r in spark.table(f"pack_{tag}").collect())
+        chunks = [
+            feed_df.filter((F.col("ou") >= i * per) & (F.col("ou") < (i + 1) * per))
+            for i in range(n_chunks)
+        ]
+        stream, _ = replay_feed(spark, chunks, f"pack_{tag}_")
+        drained = drain_to_memory(pack_stream(stream, 512), f"pack_{tag}", "update")
+        return sorted(tuple(r) for r in drained.collect())
 
     one = drive(1, "one")
     three = drive(3, "three")
@@ -708,3 +549,43 @@ def test_pack_stream_slicing_invariant_and_matches_python(spark, tmp_path):
         cum[s] = cum.get(s, 0) + n
         want.append((d, s, n, cum[s], (cum[s] - 1) // 512))
     assert one == sorted(want)
+
+
+def test_replay_feed_one_chunk_per_micro_batch_in_order(spark, tmp_path, monkeypatch):
+    """Chunks are consumed in the order given, one micro-batch each, and
+    the staging dir is gone once the feed is written."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sizes = [3, 1, 4, 2]
+    chunks = [
+        spark.range(n).select(F.lit(i).alias("chunk"), F.col("id")) for i, n in enumerate(sizes)
+    ]
+    stream, n_files = replay_feed(spark, chunks, "order_feed_")
+    assert n_files == len(sizes)
+    (feed_dir,) = os.listdir(tmp_path)  # no staging dir left behind
+    assert sorted(os.listdir(tmp_path / feed_dir)) == [
+        f"chunk_{i:04d}.parquet" for i in range(len(sizes))
+    ]
+
+    seen: list[tuple[int, list[int]]] = []
+
+    def _record(df, batch_id: int) -> None:
+        seen.append((batch_id, sorted({r.chunk for r in df.collect()})))
+
+    q = drain(stream.writeStream.foreachBatch(_record), "replay_order")
+    assert seen == [(i, [i]) for i in range(len(sizes))]
+    assert [p["numInputRows"] for p in q.recentProgress] == sizes
+
+
+def test_drain_raises_on_hung_drive(spark, monkeypatch):
+    """A drive still running at the hang guard is stopped and raises,
+    naming the query and its completed micro-batches, instead of
+    returning a partial sink."""
+    monkeypatch.setattr(pipeline, "DRAIN_TIMEOUT_S", 1)
+    stream, _ = replay_feed(spark, [spark.range(1)], "hung_feed_")
+
+    def _hang(df, batch_id: int) -> None:
+        time.sleep(4)
+
+    with pytest.raises(TimeoutError, match=r"'hung_drive'.* 0 micro-batches completed"):
+        drain(stream.writeStream.foreachBatch(_hang), "hung_drive")
+    assert not [q for q in spark.streams.active if (q.name or "").startswith("hung_drive")]

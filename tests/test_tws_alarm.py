@@ -177,6 +177,9 @@ def test_tws_stream_end_to_end(spark, tmp_path):  # pragma: no cover
 
     from pyspark.sql import functions as F
 
+    from amazon_kinesis_data_streams_health_check_spark.streaming.pipeline import (
+        drain_to_memory,
+    )
     from amazon_kinesis_data_streams_health_check_spark.streaming.tws_alarm import (
         alarm_tws_stream,
     )
@@ -194,14 +197,5 @@ def test_tws_stream_end_to_end(spark, tmp_path):  # pragma: no cover
     )
     stream = spark.readStream.schema("stream_name string, value double").json(str(src))
     out = alarm_tws_stream(stream.select("stream_name", F.col("value")))
-    q = (
-        out.writeStream.format("memory")
-        .queryName("tws_alarm")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.table("tws_alarm").collect()
+    rows = drain_to_memory(out, "tws_alarm", "update").collect()
     assert any(r.state == "ALARM" for r in rows)
