@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from amazon_kinesis_data_streams_health_check_spark.plans.registry import register
-from amazon_kinesis_data_streams_health_check_spark.session import configure_session
 from amazon_kinesis_data_streams_health_check_spark.sources.tables import (
     load_table,
     parallel_scan,
@@ -79,7 +78,6 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     user-keyed and the final fold groups on the bounded (cohort, offset)
     key. Exact distinct users per cell comes from the pair-distinct, never
     a countDistinct window."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select("user_id", "ts")
     first_seen = events.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).alias("cohort_week")
@@ -167,7 +165,6 @@ def funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``user_id`` key — sequence matching by join composition, not by
     collecting per-user event lists. The final conversion fold is 3 rows
     joined to a 1-row broadcast."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type"
     )
@@ -266,7 +263,6 @@ def scd2_state_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions — the standard sessionization assumption); runs collapse via
     one keyed agg; interval close-out is a lead over the already-collapsed
     (small) run set."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
@@ -347,7 +343,6 @@ def rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-range join, whose comparison cost grows with the calendar span —
     and a second pair-distinct + keyed count finishes. The calendar grid is
     a broadcast left-join so silent drop-out days appear as zeros."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select("user_id", "ts")
     pairs = events.select(
         "user_id", F.to_date(F.date_trunc("day", "ts")).alias("d")
@@ -417,7 +412,6 @@ def user_event_type_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded). Entries sort by key BEFORE map_from_entries, so to_json is
     byte-deterministic — unsorted map serialization is engine- and
     partitioning-dependent and would never hash-match."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select("user_id", "event_type")
     counts = events.groupBy("user_id", "event_type").agg(
         F.count("*").alias("n")
@@ -492,7 +486,6 @@ def session_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     single ordered partition is a bounded-grid stance, same as the alarm
     period grid, and categorically cheaper than the O(sessions x minutes)
     interval join it replaces."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select("user_id", "ts")
     w = Window.partitionBy("user_id").orderBy("ts")
     # unix_micros keeps the gap test microsecond-exact (the oracle's interval
@@ -571,7 +564,6 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic under ties."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = events.select(
@@ -647,7 +639,6 @@ def funnel_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ties in recency break on the globally unique event id."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     purchases = events.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("p_id"),
@@ -741,7 +732,6 @@ def event_journey_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluations over the compressed string — the heavy lifting of sequence
     matching costs one shuffle total. Ordering ties break on the globally
     unique event id, so journeys are layout-stable."""
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     j = events.groupBy("user_id").agg(
         F.expr(
@@ -820,7 +810,6 @@ def interval_coalesce_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     floats, no engine-ordered accumulation."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     spans = events.select(
         "user_id",
@@ -909,7 +898,6 @@ def funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     the delay domain, not converter count), so a billion converters still
     window over at most a few hundred thousand rows. All-BIGINT epoch
     arithmetic keeps the picks exact."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type"
     )
@@ -1004,7 +992,6 @@ def decayed_activity_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     incrementally maintainable: next week's refresh halves the stored
     score and adds the new week — no history rescan. Top-k is a
     TakeOrdered, never a full sort."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     d = events.groupBy(
         "user_id",
@@ -1093,7 +1080,6 @@ def churn_label_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
     number of users costs one scan. The disjointness audit is structural
     (both windows derive from one cutoff) but emitting it keeps the
     contract in the hash — the leakage_safe_split stance applied to time."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     hi = events.agg(F.max(F.unix_timestamp("ts")).cast("long").alias("hi"))
     cut = hi.select((F.col("hi") - 7 * 86400).alias("cutoff"))
@@ -1200,7 +1186,6 @@ def user_data_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     join + one summary row. Order-free checksums (sum of md5-uint32 of the
     row key) mean the export verifies across engines and layouts — and
     running it after an erasure proves the erasure by checksum change."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
@@ -1315,7 +1300,6 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side partials; the distinct-user count is the only wide part and
     keys on the same tuple), then a rollup on the bounded stream
     dimension. Nothing row-sized leaves the first aggregation."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     cells = events.groupBy(
         "event_type",
@@ -1420,7 +1404,6 @@ def kaplan_meier_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded cohort key — the fold consumes the window-collected prefix
     array of that TINY table, never user rows. Censoring adds no pass: it
     is a comparison against the broadcast 1-row max week."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     weeks = events.select(
         "user_id",
@@ -1576,7 +1559,6 @@ def log_rank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOUNDED pooled event-week table (one row per distinct lifetime) — the
     risk-set windows and the ordered fold never see user rows. The output
     is one row."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     weeks = events.select(
         "user_id",
@@ -1731,7 +1713,6 @@ def session_gap_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     user-keyed aggregation with map-side partials, and a bounded final
     fold per threshold. Events are scanned once; text of the sweep never
     re-sessionizes."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ordered = events.select(
@@ -1842,7 +1823,6 @@ def preference_copeland_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     type-cardinality (a constant), never |events|^2; matchups and scores
     are bounded by the type vocabulary, so the final rank window runs on
     a handful of rows."""
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     totals = events.groupBy("user_id", "event_type").agg(
         F.sum(F.expr("CAST(floor(value * 1000) AS BIGINT)"))
@@ -1965,7 +1945,6 @@ def ips_offpolicy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     key, a bounded per-segment rollup, and a broadcast join back — the raw
     log is scanned once and never re-shuffled; every estimator term is an
     integer division over per-action totals."""
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     logged = events.select(
         (F.col("user_id") % 4).cast("long").alias("segment"),
@@ -2065,7 +2044,6 @@ def anonymization_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, not three), the cell aggregation keys on the uniform (level,
     stream, qi) tuple, and the chosen-level window runs on the bounded
     (streams x 3) rollup only."""
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     melted = events.select(
         "event_type",
@@ -2256,7 +2234,6 @@ def bradley_terry_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     collected aggregate — the k-means/PCA bounded-iteration pattern — and
     the fitted strengths broadcast back onto the per-item aggregate. No
     iteration ever touches raw events."""
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     totals = events.groupBy("user_id", "event_type").agg(
         F.sum(F.expr("CAST(floor(value * 1000) AS BIGINT)"))
@@ -2387,7 +2364,6 @@ def journey_markov_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     final aggregation shuffles on the uniform user key."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = (
@@ -2555,7 +2531,6 @@ def funnel_absorbing_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-state row. No iteration touches raw events."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = events.select(
@@ -2670,7 +2645,6 @@ def pass_at_k_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     table; each k-leg is a bounded arithmetic projection + single-row
     aggregate over it (the task table is |users|-sized, the output is
     |ks| rows). No windows, no joins, no floats."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     tasks = events.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -2786,7 +2760,6 @@ def pass_at_k_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         _boot_weight_case,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     tasks = events.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n"),

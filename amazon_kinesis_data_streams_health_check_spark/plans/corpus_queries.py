@@ -57,7 +57,6 @@ from amazon_kinesis_data_streams_health_check_spark.operators.dedup import (
 )
 from amazon_kinesis_data_streams_health_check_spark.operators.textstats import TOKEN_RE
 from amazon_kinesis_data_streams_health_check_spark.plans.registry import register
-from amazon_kinesis_data_streams_health_check_spark.session import configure_session
 from amazon_kinesis_data_streams_health_check_spark.sources.tables import (
     corpus_count,
     load_table,
@@ -154,7 +153,6 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform compound key ``(doc_id, gram)`` and then on ``doc_id``. Totals
     (``n_2grams``) come free from ``size()`` on the narrow side, so the
     aggregation only carries distinct/max."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     # The n-gram arrays feed three consumers (narrow totals + the 2-gram and
     # 3-gram aggregations); pin the tokenize+ngram stage once so Catalyst
@@ -271,7 +269,6 @@ def substring_dup_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
     already done row-locally; one shuffle groups the uniform shingle key, one
     joins it back, one groups per doc. Join keys are 32-hex md5 — short and
     uniform regardless of shingle text length."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     parts = ", ".join(f"element_at(t, i + {j})" for j in range(_SHINGLE_N))
     sh = docs.select(
@@ -421,7 +418,6 @@ def dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     length. No self-join over positions, no global sort."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     parts = ", ".join(f"element_at(t, i + {j})" for j in range(_SPAN_N))
     sh = docs.select(
@@ -550,7 +546,6 @@ def split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation on the tiny (source, split) key space. ``membership_sum``
     (exact BIGINT sum of the per-row hash) pins assignment identity, not
     just counts."""
-    configure_session(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
@@ -650,7 +645,6 @@ def hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     the doc->vector join is id-keyed; the query side broadcasts; top-k is
     the shared two-phase merge. Plan-pinned: filters reach PushedFilters,
     no per-query window."""
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents").filter(
         (F.col("lang") == "en") & (F.col("n_chars") >= _HYBRID_MIN_CHARS)
@@ -703,7 +697,6 @@ def knn_graph_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the narrow side; the per-query top-k is the two-phase local-then-merge
     pattern shared with the ANN queries. This is the whole-corpus analogue
     of ``ann_lsh_bucketed`` (every vector is a query, directed edges)."""
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     # Both self-join legs consume the bucket+norm projection; pin it once
     # (lazy localCheckpoint) so the sign-pattern and squared-norm arithmetic
@@ -790,7 +783,6 @@ def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups on the uniform (col_name, value_key) pair carrying count + typed
     extrema, phase 2 folds per column. Both shuffles partial-aggregate
     map-side; no column ever concentrates on one task."""
-    configure_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     rows = []
     for c, kind in _PROFILE_COLS:
@@ -893,7 +885,6 @@ def pagerank_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     grow per round); each iteration is one uniform-key join + one keyed sum
     whose contributions are BIGINT micro-units — order-free, so the result
     is independent of partitioning and identical to the unrolled SQL."""
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     edges = (
         knn_graph_lsh(spark, sf_dir)
@@ -965,7 +956,6 @@ def skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     counting shuffles once on the uniform pair key; the global top-k is the
     two-phase slice — the only single-task stage merges ``partitions x k``
     candidate rows, never the full pair-count table."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     # i stops at size-1: for i = size, Spark's sequence(size+1, size)
     # DESCENDS instead of returning empty and fabricates null pairs from
@@ -1057,7 +1047,6 @@ def embedding_linear_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     only wide stage is the bounded (label x class) confusion aggregation.
     A real model swaps the weight expression for a broadcast weight array;
     the plan shape is identical."""
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
 
     def spark_score(cls: int) -> str:
@@ -1131,7 +1120,6 @@ def curation_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     no source's full candidate set ever sits in one task. This is the
     weight-proportional analogue of ``stratified_sample``'s rate-based
     filter (both: data-keyed decisions, zero randomness)."""
-    configure_session(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "source", "doc_id", "n_chars"
     )
@@ -1210,7 +1198,6 @@ def triangle_count_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     form approximates for kNN graphs (bounded out-degree k). All outputs
     integer-exact; the coefficient is floor micro-units (engine-identical
     BIGINT division)."""
-    configure_session(spark)
     edges = knn_graph_lsh(spark, sf_dir)
     und = (
         edges.select(
@@ -1288,7 +1275,6 @@ def epoch_global_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartitioning, retries, and cluster size by construction."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     keyed = docs.select(
         "doc_id",
@@ -1370,7 +1356,6 @@ def source_overlap_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs anything. The per-source sizes and the source-pair grid are
     |sources|-bounded and broadcast; zero-overlap pairs surface from the
     grid's left join rather than being silently dropped by the inner join."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     h = docs.select("source", F.md5("text").alias("h")).distinct()
     h = h.localCheckpoint(eager=False)  # feeds sizes AND both join legs
@@ -1449,7 +1434,6 @@ def adaptive_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergeable and map-side partial. The |sources|-row threshold table
     broadcasts; pass 2 is a narrow scan + broadcast join + counting
     aggregation. No data-sized shuffle carries document text anywhere."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     thr = docs.groupBy("source").agg(
         F.expr(f"percentile(n_chars, {_ADAPTIVE_Q})").alias("thr")
@@ -1523,7 +1507,6 @@ def doc_surprisal_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     concentrate on one reducer. (A vocabulary too big to broadcast would
     fall back to an AQE skew join.) The total-count scalar rides the same
     broadcast. Per-doc aggregation shuffles on doc_id — uniform."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(F.expr(_SPARK_TOK)).alias("t"))
     tok = tok.localCheckpoint(eager=False)  # feeds vocab AND the scoring pass
@@ -1601,7 +1584,6 @@ def source_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     source missing a token still contributes |0 - c_rest * N_s|), which a
     naive join-only formulation silently drops. DECIMAL(38) sums make the
     reduction order-free."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     tok = docs.select("source", F.explode(F.expr(_SPARK_TOK)).alias("t"))
     cst = tok.groupBy("source", "t").agg(F.count(F.lit(1)).alias("c"))
@@ -1685,7 +1667,6 @@ def contrastive_pairs_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages move O(partitions * k) rows per anchor, never the candidate set.
     Hard negatives fall out of the same pass as positives — no second
     scoring job."""
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     bucketed = with_sq_norm(with_lsh_bucket(emb), "embedding", "n2").localCheckpoint(
         eager=False
@@ -1796,7 +1777,6 @@ def grouped_linear_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     each output is ONE IEEE division of exactly-representable integers).
     Group-size/value preconditions are guarded with identical lazy error
     branches in both engines."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     x_raw = F.col("n_chars").cast("long")
     y_raw = F.expr(f"CAST(size({_SPARK_TOK}) AS BIGINT)")
@@ -1919,7 +1899,6 @@ def doc_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     outgrow a broadcast, so this leg is a shuffle join by design — the
     prefix table broadcasts). The smoothing keeps every ratio a positive
     integer division, so the floor-log2 bits are exact in both engines."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     # Tokenize ONCE into a projected array column before the bigram lambda:
     # inlining the regexp_extract_all into size()/element_at() re-runs the
@@ -2041,7 +2020,6 @@ def pii_redaction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     only shuffle is the final |sources|-key counting aggregation (map-side
     partial). At 100 TB this is the ideal operator shape: embarrassingly
     parallel, zero data-plane shuffle, scan-bound."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     plant = (
         F.when(
@@ -2171,7 +2149,6 @@ def knn_graph_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bounded, and frontier/visited sets are localCheckpoint-pinned per
     round to keep lineage flat (the dedup_clusters discipline). Vertex ids
     are uniform keys; nothing ever collects the graph to one task."""
-    configure_session(spark)
     edges = knn_graph_lsh(spark, sf_dir)
     adj = (
         edges.select(F.col("query_id").alias("a"), F.col("neighbor_id").alias("b"))
@@ -2332,7 +2309,6 @@ def rrf_fusion_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     operate on <= 2k rows per query (the two top-k lists), which is the
     point of fuse-by-rank: the expensive full-corpus stages never meet.
     """
-    configure_session(spark)
     from pyspark.sql import Window
 
     lex, vec = _rrf_rankers(spark, sf_dir)
@@ -2436,7 +2412,6 @@ def curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpartitioned cumulative window before its offsets broadcast back."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     thr = docs.agg(
         F.expr("percentile(n_chars, 0.25)").alias("t1"),
@@ -2560,7 +2535,6 @@ def kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     — so the joins are keyed on uniform word types and the threshold filter
     lands before the join. The token stream itself is touched exactly once;
     at 100 TB the LM fits in the type tables, never in the stream."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     bg = docs.select(F.expr(_SPARK_TOK).alias("t")).select(
         F.explode(
@@ -2671,7 +2645,6 @@ def ngram_novelty_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_shingles,
     )
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     shingled = with_shingles(docs).select("doc_id", "sh")
     shingled = shingled.localCheckpoint(eager=False)  # feeds totals + firsts
@@ -2797,7 +2770,6 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer points per source — the statistics never see the corpus."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     w_rank = Window.partitionBy("source").orderBy("doc_id")
     ranked = docs.select(
@@ -2963,7 +2935,6 @@ def zipf_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched exactly once."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     wc = (
         docs.select("source", F.explode(F.expr(_SPARK_TOK)).alias("word"))
@@ -3066,7 +3037,6 @@ def link_prediction_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     census), shuffling on vertex ids; existing edges are removed by a
     keyed anti-join; degrees attach by two uniform-key joins. No windows,
     no global sort — output is the data-bounded prediction set itself."""
-    configure_session(spark)
     edges = knn_graph_lsh(spark, sf_dir)
     und = (
         edges.select(
@@ -3198,7 +3168,6 @@ def ranker_agreement_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     intersection/union sizes), both rankers are two-phase top-k slices of
     the SAME scored pass, and the pair join runs on the <= k-row shared
     lists per query (k^2 bounded). The corpus is touched exactly once."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     corpus = docs.select(
         "doc_id", F.expr(f"array_distinct({_SPARK_TOK})").alias("tok")
@@ -3354,7 +3323,6 @@ def boilerplate_line_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the uniform (source, hash) key and joins back on the same key, then
     two keyed rollups (doc, source). Nothing is ever sorted globally; the
     hot key domain is line hashes, uniform by construction."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     lines = docs.select(
         "source",
@@ -3530,7 +3498,6 @@ def _spark_lcp(a: str, b: str) -> str:
 def _sfx_suffixes(spark: SparkSession, sf_dir: str):
     """Checkpointed tokenized docs + the (doc_id, p, anchor, ext) suffix
     relation — mirrors the ``_SFX_BASE_CTES`` SQL prefix."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", "source", F.expr(_SPARK_TOK).alias("t")
@@ -3869,7 +3836,6 @@ def knn_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     lazy DAG — Pregel-by-joins, the classic Spark formulation. At 100 TB
     the per-round shuffle keys on (dst, label): bounded by the kNN fanout,
     no skew beyond community size itself."""
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     knn = knn_graph_lsh(spark, sf_dir).select(
         F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst")
@@ -4012,7 +3978,6 @@ def _mmr_parts(spark: SparkSession, sf_dir: str):
     ``_MMR_CTES`` SQL prefix."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < _MMR_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qemb")
@@ -4224,7 +4189,6 @@ def length_emd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows partition by source over {_EMD_BINS}-row frames."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     lens = docs.select(
         "source",
@@ -4516,7 +4480,6 @@ def heldout_unigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the single scoring pass over ALL tokens (train and held-out score
     in the same pass, split by a CASE); the rollup keys on the bounded
     source dimension."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     split = docs.select(
         "doc_id",
@@ -4649,7 +4612,6 @@ def source_containment_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle — the saturation blow-up the naive self-join formulation
     measured (growth exponent 0.79) is gone, and the round-5 version's
     second corpus-scale shuffle (a pre-aggregation ``distinct``) with it."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     # Round-10: pin COMBOS (distinct source-sets, hundreds of rows), not the
     # per-shingle SETS relation (~|distinct shingles| rows). Same two
@@ -4943,7 +4905,6 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded stream against the BROADCAST 1024-row delta table and folds
     per doc_id. Nothing anywhere scales worse than the token stream, and
     the model state is bucket-bounded exactly as in the paper."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     from amazon_kinesis_data_streams_health_check_spark.operators.curation import (
         hash_uniform,
@@ -5084,7 +5045,6 @@ def eval_contamination_13gram(spark: SparkSession, sf_dir: str) -> DataFrame:
         hash_uniform,
     )
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
@@ -5200,7 +5160,6 @@ def eval_decontamination_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     a broadcast hash join, and the exact-Jaccard verify touches only
     candidate pairs (eval shingle sets ride the same broadcast). The only
     exchange is the final per-source rollup."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     sh = (
         with_shingles(docs)
@@ -5298,7 +5257,6 @@ def streaming_decontamination_gate(spark: SparkSession, sf_dir: str) -> DataFram
         snapshot_overwrite,
     )
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
@@ -5476,7 +5434,6 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sharing aggregation, and winnowing's density guarantee bounds that
     at ~2/(w+1) of the token stream. The sharing join is keyed on the
     md5-uniform hash value."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     grams = _spark_ngrams("t", _WIN_K)
     fps = (
@@ -5679,7 +5636,6 @@ def bloom_dedup_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     a doc are born co-partitioned), leaving one exchange for the per-config
     rollup. Build-side distinct is the only corpus-sized shuffle and is
     capped at min(k * n_build, m_bits) rows."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
@@ -5887,7 +5843,6 @@ def bloom_dedup_presized(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc rollup, both on uniform keys. No corpus-proportional state
     anywhere — this is the variant that clears the audit's documented
     corpus-proportional-broadcast caveat."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
@@ -6095,7 +6050,6 @@ def contamination_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source rollup; no self-join, no global sort."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     g = (
         docs.select(
@@ -6268,7 +6222,6 @@ def _sbloom_drive(spark: SparkSession, sf_dir: str, n_chunks: int = 3) -> DataFr
         snapshot_history,
     )
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )

@@ -41,7 +41,6 @@ from amazon_kinesis_data_streams_health_check_spark.operators.dedup import (
 )
 from amazon_kinesis_data_streams_health_check_spark.operators.textstats import TOKEN_RE, duck_stop_list
 from amazon_kinesis_data_streams_health_check_spark.plans.registry import register
-from amazon_kinesis_data_streams_health_check_spark.session import configure_session
 from amazon_kinesis_data_streams_health_check_spark.sources.tables import (
     load_table,
     parallel_scan,
@@ -78,7 +77,6 @@ WHERE {duck_hash_uniform('doc_id')} * 100 < ({_DUCK_RATE}) * {HASH_SPACE}
     tags=("ext", "curation"),
 )
 def curation_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return stratified_sample(docs, "lang", "doc_id", _SAMPLE_RATES).select(
         "doc_id", "lang", "source"
@@ -119,7 +117,6 @@ FROM per, cap
     tags=("ext", "curation"),
 )
 def curation_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     avail = docs.groupBy(F.col("lang").alias("stratum")).agg(
         F.sum(F.expr(f"size(regexp_extract_all(lower(text), '{TOKEN_RE}', 0))"))
@@ -165,7 +162,6 @@ GROUP BY 1, 2
     tags=("ext", "curation"),
 )
 def curation_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
@@ -239,7 +235,6 @@ def _near_dup_pairs(docs: DataFrame) -> DataFrame:
     tags=("ext", "dedup"),
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     return connected_components(_near_dup_pairs(docs))
 
@@ -308,7 +303,6 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_token_stats,
     )
 
-    configure_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     scored = with_quality_score(with_token_stats(docs)).filter(F.col("n_tokens") > 0)
     kept = stratified_sample(
@@ -401,7 +395,6 @@ def dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_token_stats,
     )
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     labels = connected_components(_near_dup_pairs(docs))
     scored = with_quality_score(with_token_stats(docs))
@@ -485,7 +478,6 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         hash_uniform,
     )
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     assigned = docs.select(
         "doc_id",
@@ -592,7 +584,6 @@ def token_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     step. Monotonicity of (B - P_{{i-1}}) div (K-i+1) validity makes the
     max-valid-rank selection correct (the waterline function is the
     classic one from max-min fair allocation)."""
-    configure_session(spark)
     from pyspark.sql import Window
 
     docs = parallel_scan(spark, sf_dir, "documents")
@@ -714,7 +705,6 @@ def span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic — zero shuffles before the final per-doc aggregation,
     which map-side combines on the parallel scan's layout. Same-doc =>
     same masks under any partitioning, retry, or epoch replay."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
@@ -851,7 +841,6 @@ def quality_matched_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter, then a second bounded aggregation of survivors. Two scan-shaped
     passes, zero wide shuffles — the decision table a 100 TB resample
     actually ships to every executor."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
@@ -986,7 +975,6 @@ def padded_batch_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection, so both stay optimizer-visible and partition-local."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
@@ -1123,7 +1111,6 @@ def prefix_cache_hit_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the plan is one scan per depth feeding a single exchange, all
     partial-aggregated map-side. Prefix keys are near-uniform; the rollup
     output is (source x 3) rows."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     tok = f"regexp_extract_all(lower(text), '{TOKEN_RE}', 0)"
     levels = None
@@ -1237,7 +1224,6 @@ def dedup_survivorship_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_token_stats,
     )
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     labels = connected_components(_near_dup_pairs(docs))
     scored = with_quality_score(with_token_stats(docs))
@@ -1330,7 +1316,6 @@ def context_truncation_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: one narrow token-count projection, a 4-way explode of
     the candidate lengths, one bounded (source, C) keyed aggregation with
     map-side partials. Text never moves; no join, no window."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     tok = docs.select(
         "source",
@@ -1420,7 +1405,6 @@ def mixture_temperature_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     then pure integer arithmetic on the source-bounded relation with the
     2-value total as a broadcast. The sqrt correction keeps the weights
     engine-exact for any n < 2^53."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     tok = docs.groupBy("source").agg(
         F.expr(
@@ -1547,7 +1531,6 @@ def dataset_card_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_token_stats,
     )
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     base = with_quality_score(with_token_stats(docs)).select(
         "source",
@@ -1666,7 +1649,6 @@ def layout_determinism_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pack_sequences": curation_pack_sequences,
         "mixture_plan": curation_mixture_plan,
     }
-    configure_session(spark)
     saved = spark.conf.get("spark.sql.shuffle.partitions")
     rows = []
     try:
@@ -1758,7 +1740,6 @@ def domain_mw_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop-word hot keys never pile up); per-source sums are a bounded-key
     aggregation and the MW step itself runs on the |sources|-row table
     with a 1-row broadcast of the global mean."""
-    configure_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "source",
@@ -1904,7 +1885,6 @@ def gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     WholeStageCodegen and scales exactly with scan bandwidth (the ideal
     100 TB filter stage). Reference scope: quality filtering extends
     SURVEY.md section 2.10's curation block."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     return gopher_flags_df(docs)
 
@@ -2014,7 +1994,6 @@ def pack_efficiency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumsum partitioned by (budget, source) — the same per-source
     independence argument as pack_sequences, 4x the rows. Straddle and
     waste both fold from per-source aggregates (no per-bin grouping)."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     from pyspark.sql import Window
 
@@ -2246,7 +2225,6 @@ def curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoints so no stage re-derives its predecessors."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     tok_expr = f"regexp_extract_all(lower(text), '{TOKEN_RE}', 0)"
     base = docs.select(
@@ -2472,7 +2450,6 @@ def _scc_drive(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> DataFrame
         snapshot_history,
     )
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents").select(
         "doc_id", "source", "lang", "text"
     )

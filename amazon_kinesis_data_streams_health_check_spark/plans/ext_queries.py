@@ -28,7 +28,6 @@ from amazon_kinesis_data_streams_health_check_spark.operators.curation import (
     duck_hash_uniform,
 )
 from amazon_kinesis_data_streams_health_check_spark.plans.registry import register
-from amazon_kinesis_data_streams_health_check_spark.session import configure_session
 from amazon_kinesis_data_streams_health_check_spark.sources.tables import load_table, parallel_scan
 from amazon_kinesis_data_streams_health_check_spark.streaming.pipeline import (
     drain,
@@ -69,7 +68,6 @@ FROM s
     tags=("ext", "text", "bench"),
 )
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     out = with_quality_score(with_token_stats(docs))
     return out.select(
@@ -119,7 +117,6 @@ GROUP BY 1, 2
     tags=("ext", "text"),
 )
 def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     guessed = with_lang_guess(docs)
     return guessed.groupBy("lang", "lang_guess").agg(F.count(F.lit(1)).alias("n"))
@@ -147,7 +144,6 @@ GROUP BY source
     tags=("ext", "text"),
 )
 def token_counts_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     # Spark SQL string literals are backslash-escaped (DuckDB's are not):
     # regex backslashes must be doubled on this side only.
@@ -185,7 +181,6 @@ FROM documents
     tags=("ext", "text"),
 )
 def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     return with_fingerprints(docs).select(
         "doc_id", "content_hash", "min_gram_hash", "max_gram_hash"
@@ -241,7 +236,6 @@ GROUP BY source
     tags=("ext", "dedup"),
 )
 def dedup_exact_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     return docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -266,7 +260,6 @@ GROUP BY 1
     tags=("ext", "dedup"),
 )
 def dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     return docs.groupBy(F.md5("text").alias("content_hash")).agg(
         F.min("doc_id").alias("keeper_doc_id"),
@@ -308,7 +301,6 @@ JOIN tok tb ON tb.doc_id = p.doc_b
     tags=("ext", "dedup", "bench"),
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     shingled = with_shingles(docs).select("doc_id", "sh")
     banded = with_bands(with_minhash(shingled))
@@ -464,7 +456,6 @@ SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= {SIMHASH_REPORT_HAMMING
     tags=("ext", "dedup"),
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     sigs = simhash_words(docs)
     return simhash_near_pairs(sigs, max_hamming=SIMHASH_REPORT_HAMMING)
@@ -535,7 +526,6 @@ def dedup_simhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate-bounded); integer ppm output keeps the hash oracle-exact.
     Signatures are CENTERED (round-7): raw-sig bits are corpus-biased on
     boilerplate-heavy corpora and saturate band buckets at any key width."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     sigs = simhash_words_centered(docs, bits=SIMHASH_WIDE_BITS)
     cand = simhash_wide_near_pairs(sigs, max_hamming=SIMHASH_WIDE_MAX_HAMMING)
@@ -581,7 +571,6 @@ WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
     tags=("ext", "dedup"),
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     shingled = with_shingles(docs).select("doc_id", "source", "sh")
     a = shingled.select(
@@ -635,7 +624,6 @@ WHERE {duck_cosine('a.embedding', 'b.embedding')} >= {_NEARDUP_COS_THRESHOLD}
     tags=("ext", "similarity"),
 )
 def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     a = emb.select(F.col("vec_id").alias("vec_a"), F.col("label"), F.col("embedding").alias("emb_a"))
     b = emb.select(F.col("vec_id").alias("vec_b"), F.col("label"), F.col("embedding").alias("emb_b"))
@@ -677,7 +665,6 @@ FROM ranked WHERE rank <= {_ANN_K}
     tags=("ext", "similarity", "bench"),
 )
 def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _ANN_QUERY_LIMIT)
     return brute_force_topk(emb, queries, k=_ANN_K)
@@ -702,7 +689,6 @@ JOIN buckets b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
     tags=("ext", "similarity"),
 )
 def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     bucketed = with_lsh_bucket(emb)
     a = bucketed.select(F.col("vec_id").alias("vec_a"), F.col("bucket"), F.col("embedding").alias("emb_a"))
@@ -755,7 +741,6 @@ GROUP BY kind
     tags=("ext", "multimodal"),
 )
 def media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     media = synthesize_media(parallel_scan(spark, sf_dir, "documents"))
     return media.groupBy("kind").agg(
         F.count(F.lit(1)).alias("n_media"),
@@ -808,7 +793,6 @@ SELECT media_id, kind, CAST(n AS BIGINT) AS n_bytes,
     tags=("ext", "multimodal"),
 )
 def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     media = synthesize_media(parallel_scan(spark, sf_dir, "documents"))
     feats = decode_media(media, decoder="fake")
     return feats.select(
@@ -853,7 +837,6 @@ FROM video
     tags=("ext", "multimodal"),
 )
 def media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     media = synthesize_media(parallel_scan(spark, sf_dir, "documents"))
     return frame_sample(media).select(
         "media_id",
@@ -910,7 +893,6 @@ def media_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_windows,
     )
 
-    configure_session(spark)
     media = synthesize_media(parallel_scan(spark, sf_dir, "documents"))
     return audio_windows(media)
 
@@ -960,7 +942,6 @@ GROUP BY t.query_id
     tags=("ext", "similarity"),
 )
 def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _ANN_QUERY_LIMIT)
     topk = brute_force_topk(emb, queries, k=_ANN_K).select("query_id", "neighbor_id")
@@ -1018,7 +999,6 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     feat = emb.select(
         "vec_id",
@@ -1170,7 +1150,6 @@ def ann_ivf_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     the re-rank is the two-phase :func:`topk_per_query` merge. KMeans gives
     better centroids but is not cross-engine reproducible; the quantizer is
     pluggable — everything downstream of ``(vec_id, cluster)`` is identical."""
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     assigned = (
         assign_ivf_flat_clusters(emb, n_centroids=_IVF_FLAT_NC)
@@ -1227,7 +1206,6 @@ FROM media
     tags=("ext", "multimodal"),
 )
 def media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     media = synthesize_media(parallel_scan(spark, sf_dir, "documents"))
     return resize_media(media, max_dim=64).select(
         "media_id", "new_width", "new_height", "n_bytes"
@@ -1272,7 +1250,6 @@ def sketch_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_rollup,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     merged = merge_rollup(daily_sketch_rollup(events))
     # count(DISTINCT) kept out of the percentile groupBy — mixing them makes
@@ -1347,7 +1324,6 @@ def vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one reducer per hot word, plus Spark's distinct expand) is spread across
     doc_ids; the second groupBy then only merges pre-counted (token, doc)
     rows: sum(c) = occurrences, count(*) = document frequency, exactly."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode(F.expr(f"regexp_extract_all(lower(text), '{TOKEN_RE}', 0)")).alias("token")
@@ -1404,7 +1380,6 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~|labels|x|dims| key space, map-side partial sums, no window, no UDF.
     The integer-micro-unit trick keeps the reduction associative-exact, so
     partial aggregation order (and engine) cannot change the result."""
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     cells = emb.select(
         "label", F.posexplode("embedding").alias("dim", "x")
@@ -1482,7 +1457,6 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus_count,
     )
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     sh = shingles_expr("text", _CONTAM_NGRAM)
     emod = _contam_eval_mod(corpus_count(spark, sf_dir))
@@ -1556,7 +1530,6 @@ GROUP BY t.query_id
     tags=("ext", "similarity"),
 )
 def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _ANN_QUERY_LIMIT)
     topk = brute_force_topk(emb, queries, k=_ANN_K).select("query_id", "neighbor_id")
@@ -1679,7 +1652,6 @@ def embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated shuffle + broadcast-back, then narrow array work. The int8
     codes are what a 100 TB deployment would store — 4x smaller,
     rescannable for re-ranking via the kept (min, max) pair."""
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     recon = _with_quantized_recon(emb)
     return recon.select(
@@ -1775,7 +1747,6 @@ def ann_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     side, two-phase local/merge top-k); the quantize/dequantize adds one
     64-key partial-agg shuffle + broadcast-back. The intersection join is
     keyed on (query_id, neighbor_id) — k rows per query per side."""
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     exact = brute_force_topk(
         emb, emb.filter(F.col("vec_id") < _ANN_QUERY_LIMIT), k=_ANN_K
@@ -1878,7 +1849,6 @@ def incremental_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_overwrite,
     )
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     # Shingle sets feed the minhash chain AND both verify-join legs; band
     # rows feed the history write and the increment probe. Pin each once —
@@ -1985,7 +1955,6 @@ def streaming_dedup_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_history,
     )
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents").select("doc_id", "source", "text")
     stream, _ = replay_feed(
         spark,
@@ -2165,7 +2134,6 @@ def sketch_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep the grid bit-identical across engines; all counts are BIGINT-exact.
     The CM guarantee (estimate >= truth) is part of the checked output via
     the overestimate column."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select(
         F.to_date("ts").alias("d"), "user_id"
     )
@@ -2265,7 +2233,6 @@ def dedup_fuzzy_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bounded per pair regardless of document length. Prefixes ride the
     candidate pair via two doc_id-keyed joins — full text never enters the
     band shuffle."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     # Candidates = SimHash-near pairs (the cheap XOR+popcount Hamming gate
     # culls the band collisions BEFORE any quadratic string work); verify =
@@ -2366,7 +2333,6 @@ def fuzzy_blocking_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         hash_uniform,
     )
 
-    configure_session(spark)
     all_docs = parallel_scan(spark, sf_dir, "documents")
     smod = all_docs.agg(
         F.greatest(
@@ -2497,7 +2463,6 @@ def media_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the documented ASCII-corpus equivalence (ascii(substr) == payload byte,
     as in the media_features oracle); a real pixel decoder would produce
     the same integer rows from decoded luma instead."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     media = docs.filter(
         F.length(F.encode("text", "UTF-8")) >= _PHASH_MIN_BYTES
@@ -2614,7 +2579,6 @@ def ann_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_codes,
     )
 
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     pq = pq_codes(emb, m=_PQ_M, k=_PQ_K, dim=_PQ_DIM)
     orig = emb.select("vec_id", "embedding")
@@ -2715,7 +2679,6 @@ def ann_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         topk_per_query,
     )
 
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     cent = ivf_flat_centroids(emb, _PQ_K).select("centroid_id", "emb_c")
     codes = pq_codes(emb, m=_PQ_M, k=_PQ_K, dim=_PQ_DIM).select(
@@ -2829,7 +2792,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     unblocked scale path gates through MinHash bands first; containment's
     S-curve needs the same band keys). Both measures come from one
     intersect per pair."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     shingled = with_shingles(docs).select("doc_id", "source", "sh")
     a = shingled.select(
@@ -2904,7 +2866,6 @@ def dedup_jaccard_allpairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (narrow), candidate self-join on the uniform (rare-token) key, exact
     verify on the candidate set only. The threshold compare stays in
     integers (2*|intersect| >= |union|)."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     return jaccard_allpairs_pairs(docs, t_num=_APJ_T_NUM, t_den=_APJ_T_DEN)
 
@@ -3011,7 +2972,6 @@ def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         topk_per_query,
     )
 
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     assigned = assign_ivf_flat_clusters(emb, n_centroids=_IVF_FLAT_NC)
     cent = ivf_flat_centroids(emb, _PQ_K).select("centroid_id", "emb_c")
@@ -3187,7 +3147,6 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     the keep/drop verdicts — are bit-identical across engines and across
     partitionings.
     """
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     mm = emb.select(
         "vec_id",
@@ -3369,7 +3328,6 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     entries by 2^28 * n_rows, so the BIGINT arithmetic is overflow-safe to
     ~2^34 vectors; the renormalizing divisor (max//1024 + 1) keeps every
     matvec term under 2^56."""
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     q = emb.select(
         "vec_id",
@@ -3500,7 +3458,6 @@ def kmeans_lloyd_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer arithmetic is what makes a distributed iterative clusterer
     reproducible: float centroid sums would differ by partition order every
     round and compound across iterations."""
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     q = emb.select(
         "vec_id",
@@ -3652,7 +3609,6 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_shingles,
     )
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     sh = with_shingles(docs).select("doc_id", "sh").localCheckpoint(eager=False)
     n_true = (
@@ -3766,7 +3722,6 @@ def ann_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed (query_id, neighbor_id), k rows per query per side. At corpus
     scale the truncated pass is the cheap first stage that gates the
     full-dimension rerank."""
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     exact = brute_force_topk(
         emb, emb.filter(F.col("vec_id") < _ANN_QUERY_LIMIT), k=_ANN_K
@@ -3855,7 +3810,6 @@ def embedding_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     implementation reaches for. Quantizing each row to integer milli
     BEFORE summing makes the identity exact in BIGINT (a float vector sum
     would be reduction-order-dependent)."""
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     q = emb.select(
         "label",
@@ -3985,7 +3939,6 @@ def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-id flag sets join back onto the corpus on the uniform doc key and
     reduce to ONE summary row. The division-free Jaccard threshold
     (1000*|intersect| >= 500*|union|) keeps the near set integer-exact."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     docs = docs.localCheckpoint(eager=False)  # exact window AND minhash legs
     shingled = with_shingles(docs).select("doc_id", "sh")
@@ -4128,7 +4081,6 @@ def retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bounded label dimension; the metric itself is element_at into two
     broadcast literal arrays plus a per-query aggregation — evaluation
     adds nothing wider than the retrieval it measures."""
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     emb = emb.localCheckpoint(eager=False)  # feeds corpus, queries AND labels
     queries = emb.filter(F.col("vec_id") < _NDCG_QUERIES)
@@ -4276,7 +4228,6 @@ def media_interleave_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         hash_uniform,
     )
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     cost = docs.select(
         "doc_id",
@@ -4401,7 +4352,6 @@ def streaming_novelty_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_history,
     )
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents").select("doc_id", "source", "text")
     stream, _ = replay_feed(
         spark,
@@ -4520,7 +4470,6 @@ def maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     so wide stages move O(partitions * k) rows per query, never the scored
     corpus. The real ColBERT difference at 100 TB is |doc| sub-vectors per
     document, which changes the constants, not the plan."""
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.expr(
@@ -4663,7 +4612,6 @@ def dedup_threshold_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_shingles,
     )
 
-    configure_session(spark)
     p_min, q_min = _PRC_TAUS[0]
     docs = parallel_scan(spark, sf_dir, "documents")
     truth = (
@@ -4818,7 +4766,6 @@ def filter_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_token_stats,
     )
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     scored = with_lang_guess(with_quality_score(with_token_stats(docs)))
     flags = scored.select(
@@ -4976,7 +4923,6 @@ def lsh_s_curve_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_shingles,
     )
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     pairs = jaccard_allpairs_pairs(docs, 1, 3, keep_sizes=True).select(
         "doc_a",
@@ -5092,7 +5038,6 @@ def isotonic_cosine_dup_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the md5 text-hash attach broadcasts the 2-column doc digest; the
     corpus then reduces to <= {_COSCAL_BINS} bins and the PAV fit runs on
     that bounded table via broadcast-nested-loop self-joins."""
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     docs = parallel_scan(spark, sf_dir, "documents").select(
         "doc_id", F.md5(F.lower("text")).alias("h")
@@ -5813,7 +5758,6 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     giant cluster is AQE-skew-split territory, not a plan change.
     Reference cost anchor: the reference repo has no embedding surface —
     this extends SURVEY.md section 2.10's north-star scope."""
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     q = emb.select(
         "vec_id",
@@ -5976,7 +5920,6 @@ def semantic_blocking_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (two broadcast-join assignment hops, bounded control-plane Lloyd
     updates), with cell ids riding the sampled rows — no extra pass over
     the un-sampled corpus beyond the fit itself."""
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     q = _sem_quantized(emb).localCheckpoint(eager=False)  # count + fit + assign
     _coarse, fine, ga, k2 = _sem_fit_hier(spark, q)
@@ -6043,7 +5986,6 @@ def dedup_semantic_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus_count,
     )
 
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     q = _sem_quantized(emb).localCheckpoint(eager=False)  # sample + assign
     n = corpus_count(spark, sf_dir, "embeddings")
@@ -6069,7 +6011,6 @@ def semantic_blocking_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFr
         corpus_count,
     )
 
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     q = _sem_quantized(emb).localCheckpoint(eager=False)
     n = corpus_count(spark, sf_dir, "embeddings")
@@ -6252,7 +6193,6 @@ def simhash_blocking_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         hash_uniform,
     )
 
-    configure_session(spark)
     all_docs = parallel_scan(spark, sf_dir, "documents")
     # mod = ceil(n / target), computed as a broadcast 1-row aggregate (no
     # driver collect): the sampled table stays ~_SBR_SAMPLE_TARGET rows at
@@ -6388,7 +6328,6 @@ def retrieval_ndcg_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast. Metrics are pure per-group integer folds."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < _ANN_QUERY_LIMIT).select(
         F.col("vec_id").alias("query_id"),
@@ -6555,7 +6494,6 @@ def streaming_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_history,
     )
 
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     stream, _ = replay_feed(
         spark,

@@ -35,7 +35,6 @@ from amazon_kinesis_data_streams_health_check_spark.sources.kinesis_events impor
     synthesize_from_events,
 )
 from amazon_kinesis_data_streams_health_check_spark.plans.registry import register
-from amazon_kinesis_data_streams_health_check_spark.session import configure_session
 from amazon_kinesis_data_streams_health_check_spark.sources.tables import load_table, parallel_scan
 from amazon_kinesis_data_streams_health_check_spark.streaming.pipeline import (
     drain,
@@ -105,7 +104,6 @@ WINDOW w AS (PARTITION BY stream_name ORDER BY window_start)
     tags=("core", "flagship", "bench"),
 )
 def health_lag_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     lagged = staleness_at_window_close(events, ts_col="ts", payload_col="props", key_col="event_type")
     metrics = lagged.groupBy("stream_name", "window_start", "window_end").agg(
@@ -145,7 +143,6 @@ FROM events
     tags=("core",),
 )
 def tracer_produce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     return tracer_records(events, F.col("ts"), F.col("event_type"))
 
@@ -189,7 +186,6 @@ WHERE ev IS NOT NULL
     tags=("core", "bench"),
 )
 def consumer_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     records = explode_records(synthesize_from_events(events))
     decoded = decoded_records(records)
@@ -224,7 +220,6 @@ FROM (
 def first_record_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     w = F.window(F.col("ts"), "1 minute")
     df = events.withColumn("window_start", w["start"])
@@ -267,7 +262,6 @@ FROM t
 def arn_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     from amazon_kinesis_data_streams_health_check_spark.functions import scalar
 
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     t = events.select("event_type").distinct()
     std = F.concat(F.lit(ARN_PREFIX), F.col("event_type"))
@@ -342,7 +336,6 @@ def alarm_nofm(spark: SparkSession, sf_dir: str) -> DataFrame:
         alarm_pipeline,
     )
 
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     renamed = events.select(
         F.col("ts"), F.col("event_type").alias("stream_name"), F.col("value")
@@ -385,7 +378,6 @@ ANTI JOIN metrics m
     tags=("core",),
 )
 def missing_periods(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     metrics = (
         events.groupBy(
@@ -493,7 +485,6 @@ def metric_gap_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window
 
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     metrics = tumbling_max(
         events.select(
@@ -612,7 +603,6 @@ def metric_anomaly_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarantees — BIGINT sums cannot drift."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     x_raw = F.floor(F.max("value") * 1000).cast("long")
     metrics = (
@@ -705,7 +695,6 @@ def utf8_strict_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: narrow per-row expressions + one keyed aggregation."""
     from amazon_kinesis_data_streams_health_check_spark.functions import scalar
 
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     js = scalar.tracer_json(scalar.instant_iso(F.col("ts")))
     corrupt = F.col("event_id") % 7 == 0
@@ -776,7 +765,6 @@ def consumer_error_suppression(spark: SparkSession, sf_dir: str) -> DataFrame:
     fails the hash. Scale shape: narrow per-row decode + one keyed agg."""
     from amazon_kinesis_data_streams_health_check_spark.functions import scalar
 
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     records = explode_records(synthesize_from_events(events))
     cls = F.pmod(F.col("sequenceNumber").cast("long"), F.lit(11))
@@ -853,7 +841,6 @@ def consumer_dlq_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         decoded_records,
     )
 
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     records = explode_records(synthesize_from_events(events))
     cls = F.pmod(F.col("sequenceNumber").cast("long"), F.lit(11))
@@ -983,7 +970,6 @@ def seasonal_baseline_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     derives from integer epoch division, so both engines season
     identically. The spike compare runs on exact milli integers against
     1.5 x an exactly-representable median."""
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     m = events.groupBy(
         F.col("event_type").alias("stream_name"),
@@ -1084,7 +1070,6 @@ def composite_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     the transition window partitions on the bounded stream key."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     metrics = (
         events.select(
@@ -1195,7 +1180,6 @@ def slo_burn_rate_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     compare never leaves BIGINT."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     m = events.groupBy(
         (F.col("user_id") % _SLO_SHARDS).cast("long").alias("shard"),
@@ -1324,7 +1308,6 @@ def shard_reshard_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
         hash_uniform,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
     lineage = spark.createDataFrame(
         [
@@ -1517,7 +1500,6 @@ def shard_autoscale_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         hash_uniform,
     )
 
-    configure_session(spark)
     n_shards = len(_ASP_WIDTHS)
     layout = spark.createDataFrame(_ASP_LAYOUT, "shard int, lo long, hi long")
     routed = (
@@ -1756,7 +1738,6 @@ def holt_forecast_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra shuffle. Integer state packing sidesteps both float accumulation
     order and cross-engine fold-semantics differences; the count guard
     fails loudly past the exact-arithmetic bound in both engines."""
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     bounds = events.agg(
         F.to_date(F.date_trunc("day", F.min("ts"))).alias("d0"),
@@ -1893,7 +1874,6 @@ def kinesis_put_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_kinesis_put,
     )
 
-    configure_session(spark)
     register_kinesis_put(spark)
     events = parallel_scan(spark, sf_dir, "events")
     reqs = to_kinesis_put_requests(
@@ -1944,7 +1924,6 @@ def streaming_put_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_kinesis_put,
     )
 
-    configure_session(spark)
     register_kinesis_put(spark)
     events = parallel_scan(spark, sf_dir, "events")
     reqs = to_kinesis_put_requests(
@@ -2054,7 +2033,6 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     M_i = min(P_1..P_i), the CUSUM S+_i = max(0, S+_{i-1} + d_i) equals
     P_i - min(0, M_i) (induction: subtracting the lowest prefix valley
     is exactly the "reset at zero" rule). Mirrored for the downward test."""
-    configure_session(spark)
     from pyspark.sql import Window
 
     events = parallel_scan(spark, sf_dir, "events")
@@ -2165,7 +2143,6 @@ def acf_by_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup-sized, not event-sized — the join input is already the
     aggregated minute table. The sqrt/division runs once per group on
     exact integers, so the doubles match DuckDB bit-for-bit."""
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     m = events.groupBy(
         F.col("event_type").alias("stream_name"),
@@ -2271,7 +2248,6 @@ def hysteresis_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     job would be carrying (last forced state) — one enum per stream.
     Dead-band width is the flap-suppression knob: transitions here require
     crossing BOTH thresholds, which is what de-flaps a noisy metric."""
-    configure_session(spark)
     from pyspark.sql import Window
 
     events = parallel_scan(spark, sf_dir, "events")
@@ -2361,7 +2337,6 @@ def alarm_flappiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     counting aggregation; all keys uniform, the lag window is the same
     per-stream timeline every alarm query walks. Day attribution uses the
     period start (transitions at midnight belong to the new day)."""
-    configure_session(spark)
     from pyspark.sql import Window
 
     events = parallel_scan(spark, sf_dir, "events")
@@ -2442,7 +2417,6 @@ def approx_quantile_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch, so the verdict tests the target rank against the band
     (count(x < a) - tol .. count(x <= a) + tol), not against a single
     count."""
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     v = events.select(
         F.col("event_type").alias("stream_name"),
@@ -2552,7 +2526,6 @@ def kinesis_cost_units(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload units); the aggregation factor matches the repo's KPL pack
     legs (operators/kpl_agg.py) so the savings number corresponds to what
     kinesis_kpl_produce_roundtrip actually ships."""
-    configure_session(spark)
     rec = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.expr(f"event_id div {_COST_KPL_MEMBERS}").alias("blob_id"),
@@ -2730,7 +2703,6 @@ def json_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference consumer hard-codes one payload key
     (HealthCheckProducerHandler.java's currentInstant JSON); this is the
     governance view a multi-producer stream needs when payloads evolve."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_type", "ts", "value", "user_id", "event_id"
     )
@@ -2881,7 +2853,6 @@ def rate_limit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     event scalar (second * 2^24 + event_id) makes the replay order total
     and engine-identical; both pack widths fail loud rather than wrap
     (metric_anomaly_flags stance)."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.expr(
@@ -2934,11 +2905,12 @@ counts AS (
          CAST(count(*) AS BIGINT) AS y
   FROM events GROUP BY event_type, minute
 ),
+minutes AS (
+  SELECT unnest(generate_series(b.lo, b.hi)) AS minute FROM bounds b
+),
 grid AS (
-  SELECT t.event_type, g.range AS minute
-  FROM (SELECT DISTINCT event_type FROM events) t,
-       bounds b, range(0, 100000000) g
-  WHERE g.range >= b.lo AND g.range <= b.hi
+  SELECT t.event_type, m.minute
+  FROM (SELECT DISTINCT event_type FROM events) t, minutes m
 ),
 series AS (
   SELECT g.event_type, g.minute, COALESCE(c.y, 0) AS y
@@ -2983,7 +2955,6 @@ def stream_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension fanning out |streams|^2 / 2 pairs per minute — shuffle
     volume is grid-sized, never row-sized, and every moment sum is an
     exactly-mergeable integer."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     counts = events.groupBy(
         "event_type",
@@ -3112,7 +3083,6 @@ def event_disorder_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     no global order exists anywhere."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     w_pos = Window.partitionBy("event_type").orderBy("event_id")
     ordered = events.select(
@@ -3235,7 +3205,6 @@ def watermark_policy_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the sweep never rescans or re-sorts the events."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     w_pos = Window.partitionBy("event_type").orderBy("event_id")
     ordered = events.select(
@@ -3530,7 +3499,6 @@ def kcl_lease_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     case (event-source-mapping on shardCount=1,
     KinesisHealthCheckStack.java:149-162); this is the fleet version every
     multi-shard deployment of the same health check needs."""
-    configure_session(spark)
     named = _lease_universe(spark, sf_dir)
     live = spark.range(0, _LEASE_LIVE).select(
         F.concat(F.lit("w"), F.col("id").cast("string")).alias("worker")
@@ -3605,7 +3573,6 @@ def ewma_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift exactly as in metric_anomaly_flags."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     metrics = events.groupBy(
         F.col("event_type").alias("stream_name"),
@@ -3675,7 +3642,6 @@ def kcl_lease_scale_out(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: identical to kcl_lease_rebalance — one narrow hash
     count over events, then lease-table-bounded planning with broadcast
     worker relations; only the live set differs."""
-    configure_session(spark)
     named = _lease_universe(spark, sf_dir)
     live = spark.range(0, _LEASE_SCALE_OUT).select(
         F.concat(F.lit("w"), F.col("id").cast("string")).alias("worker")
@@ -3733,7 +3699,6 @@ def checkpoint_interval_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     one (stream, interval, bucket) keyed aggregation with map-side
     partials, one bounded fold per (stream, interval). No join, no
     window, no global sort."""
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     ev = events.select(
         F.col("event_type").alias("stream_name"),
@@ -3858,7 +3823,6 @@ def control_chart_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     one window pass more than one chart."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     m = events.groupBy(
         F.col("event_type").alias("stream_name"),
@@ -4047,7 +4011,6 @@ def conformal_lag_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     is never sorted or windowed."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     ev = event_time(F.col("ts"), F.col("props"))
     scored = events.select(
@@ -4207,7 +4170,6 @@ def shadow_pipeline_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     each variant is a keyed aggregation to its bounded period grid, and
     the diff is a full-outer join of two grid-sized tables on the
     (stream, period) key."""
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     base = events.select(
         F.col("event_type").alias("stream_name"),

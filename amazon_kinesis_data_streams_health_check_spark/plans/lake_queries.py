@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from amazon_kinesis_data_streams_health_check_spark.plans.registry import register
-from amazon_kinesis_data_streams_health_check_spark.session import configure_session
 from amazon_kinesis_data_streams_health_check_spark.sources.snapshots import (
     read_snapshot,
     refresh_incremental_agg,
@@ -60,7 +59,6 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     silently fell back to a full rescan raises instead of returning —
     correctness AND incrementality are both load-bearing here.
     """
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -112,7 +110,6 @@ def streaming_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest layer makes each commit atomic, and the maintained aggregate
     only ever reads delta files. The foreachBatch hook raises if any refresh
     silently degrades to a full rescan."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -197,7 +194,6 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-outer shuffle join on the rollup key — state-sized, not
     fact-sized. The audit query every lake needs: 'what did last night's
     load change?'."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -282,7 +278,6 @@ def lake_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_append_with_stats,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
@@ -348,7 +343,6 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_cdc,
     )
 
-    configure_session(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", F.md5(F.col("text").cast("binary")).alias("fp")
     )
@@ -411,7 +405,6 @@ def lake_user_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_history,
     )
 
-    configure_session(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
@@ -510,7 +503,6 @@ def ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         parallel_scan,
     )
 
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     batch1 = emb.filter(F.pmod("vec_id", F.lit(2)) == 0)
     batch2 = emb.filter(F.pmod("vec_id", F.lit(2)) == 1)
@@ -592,7 +584,6 @@ def lake_compaction_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_history,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -660,7 +651,6 @@ def lake_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_overwrite_clustered,
     )
 
-    configure_session(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("orderkey"), "o_orderpriority"
     ).withColumn("shard", F.lit("all"))
@@ -751,7 +741,6 @@ def lake_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_append_with_stats,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id", "value"
     )
@@ -812,7 +801,6 @@ def lake_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the DECLARED schema of the version being read). The widening
     commit costs exactly its own data; history stays readable because old
     manifests keep their own schema JSON."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -888,7 +876,6 @@ def lake_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_merge,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         "ts",
@@ -956,7 +943,6 @@ def lake_bloom_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_append_with_blooms,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -1015,7 +1001,6 @@ def streaming_lake_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_stream_sink,
     )
 
-    configure_session(spark)
     n_batches = 4
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -1103,7 +1088,6 @@ def lake_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_append,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -1176,7 +1160,6 @@ def lake_vacuum_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         vacuum_snapshots,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -1249,7 +1232,6 @@ def lake_branch_workflow(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_append,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -1310,7 +1292,6 @@ def lake_metadata_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_partition_counts,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select("event_id", "event_type")
     lake = tempfile.mkdtemp(prefix="metacount_lake_")
     for i in range(2):
@@ -1361,7 +1342,6 @@ def lake_time_travel_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_history,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type"
     )
@@ -1421,7 +1401,6 @@ def lake_partition_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_overwrite_partitions,
     )
 
-    configure_session(spark)
     bad_type = "purchase"
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -1497,7 +1476,6 @@ def lake_replica_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_append,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -1603,7 +1581,6 @@ def lake_write_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_append_constrained,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -1720,7 +1697,6 @@ def ann_index_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
         parallel_scan,
     )
 
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     cent = ivf_flat_centroids(
         emb.filter(F.pmod("vec_id", F.lit(2)) == 0), _IVFP_NC
@@ -1859,7 +1835,6 @@ def lake_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra job). At 100 TB with years of monthly partitions this skips the
     cold months entirely — which zone maps (lake_pruned_scan) cannot do
     for join-driven predicates."""
-    configure_session(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_extendedprice",
         "l_discount",
@@ -1993,7 +1968,6 @@ def lake_clustering_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_column_stats,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select("event_id", "value")
     vm = events.select(
         "event_id", F.round(F.col("value") * 1e6).cast("long").alias("vm")
@@ -2145,7 +2119,6 @@ def cdc_apply_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     (arg-max by version — no window over the changelog), and the audit
     join is key-to-key co-partitioned. At 100 TB this is exactly the
     nightly CDC compaction shape: shuffle on the key, never sort the log."""
-    configure_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     keys = orders.select(
         F.col("o_orderkey").alias("ok"),

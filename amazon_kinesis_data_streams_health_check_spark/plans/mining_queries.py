@@ -40,7 +40,6 @@ from amazon_kinesis_data_streams_health_check_spark.operators.calibrate import (
 )
 from amazon_kinesis_data_streams_health_check_spark.operators.textstats import TOKEN_RE
 from amazon_kinesis_data_streams_health_check_spark.plans.registry import register
-from amazon_kinesis_data_streams_health_check_spark.session import configure_session
 from amazon_kinesis_data_streams_health_check_spark.sources.tables import parallel_scan
 
 _SPARK_TOK = f"regexp_extract_all(lower(text), '{TOKEN_RE}', 0)"
@@ -98,7 +97,6 @@ def market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pair counting shuffles on the uniform (part_a, part_b) key. The
     marginal table is |parts|-sized and BROADCASTS twice; the basket count
     is a broadcast scalar. Nothing ever pairs across orders."""
-    configure_session(spark)
     li = parallel_scan(spark, sf_dir, "lineitem")
     items = li.select(
         F.col("l_orderkey").alias("okey"), F.col("l_partkey").alias("part")
@@ -203,7 +201,6 @@ def collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     BROADCAST (Heaps' law — the hot 'the'-keys never concentrate on a
     reducer); the total is a broadcast scalar. The PMI itself is pure
     per-row integer arithmetic after the joins."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     pair_expr = (
         f"flatten(transform(sequence(1, size(t) - 1), i ->"
@@ -356,7 +353,6 @@ def bpe_merge_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoint-pinned once and each round's 1-row winner is pinned,
     so re-deriving round r-1 for round r's consumers replays only cheap
     broadcast-replace maps. No driver-side collect anywhere."""
-    configure_session(spark)
     bests, vocabs = _spark_bpe_chain(spark, sf_dir)
     out_parts = []
     for rnd in range(1, _BPE_ROUNDS + 1):
@@ -513,7 +509,6 @@ def bpe_tokenize_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform compound key — and the word->symbol-count segmentation table
     BROADCASTS onto it. Tokenizing 100 TB is therefore one count pass plus
     a broadcast join; no text ever moves through a shuffle."""
-    configure_session(spark)
     _, vocabs = _spark_bpe_chain(spark, sf_dir)
     seg = vocabs[_BPE_ROUNDS].select(
         "word", F.size(F.expr(_BPE_SYMS)).cast("long").alias("n_sym")
@@ -689,7 +684,6 @@ def naive_bayes_source_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     that cost) instead of an engine-specific argmin — portable and
     deterministic. Training 100 TB of labeled text = one shuffle on
     (class, word) and one on (doc, class). No float logs anywhere."""
-    configure_session(spark)
     scored = _nb_scored(spark, sf_dir)
     best = (
         scored.groupBy("doc_id")
@@ -794,7 +788,6 @@ def bootstrap_ci_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges. This is how you bootstrap 100 TB: never B scans, one weighted
     pass. Weights are md5-inverse-CDF draws, so any engine, partitioning,
     or retry reproduces the identical resample."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     u32 = (
         f"CAST(conv(substr(md5(CAST(doc_id * {_BOOT_B} + b AS STRING)), 1, 8),"
@@ -898,7 +891,6 @@ def chi2_independence_2x2(spark: SparkSession, sf_dir: str) -> DataFrame:
     The entire 100 TB cost is the scan + a 4-counter map-side-combined
     aggregation. DECIMAL(38,0) holds 1e6 * N * (ad-bc)^2 up to N ~ 3e9
     rows per stream; beyond that the counts themselves need sharding."""
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     flags = events.select(
         F.col("event_type").alias("stream_name"),
@@ -1090,7 +1082,6 @@ def naive_bayes_crossval(spark: SparkSession, sf_dir: str) -> DataFrame:
     key. k-fold evaluation of a counting classifier costs the same as
     1-fold because training is subtraction, not recomputation — the
     mergeability argument that also powers the sketch rollups."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     fold = (F.col("doc_id") % _NBCV_FOLDS).cast("long")
     tok = docs.select(
@@ -1282,7 +1273,6 @@ def key_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed form needs one rank-weighted sum — no pair joins."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     li = parallel_scan(spark, sf_dir, "lineitem")
     freq = li.groupBy(F.col("l_partkey").alias("k")).agg(
         F.count(F.lit(1)).cast("long").alias("f")
@@ -1410,7 +1400,6 @@ def ts_motif_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-uniform), never all-pairs; the exact verify is 6 integer
     multiplies per candidate. The global top-k is a TakeOrdered with
     full-column tie-breaks."""
-    configure_session(spark)
     from pyspark.sql import Window
 
     events = parallel_scan(spark, sf_dir, "events")
@@ -1552,7 +1541,6 @@ def dp_geometric_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartitioning, and engine choice reproduce the identical release
     (the property that makes the privacy layer testable); swapping the
     md5 input for a run-scoped secret seed makes it a real release."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     g = docs.groupBy("source", "lang").agg(
         F.count(F.lit(1)).cast("long").alias("c")
@@ -1643,7 +1631,6 @@ def ks_drift_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts. The decision arithmetic is per-stream on a |streams|-row
     table. At 100 TB the value-domain compression is what keeps the
     window input bounded (the weighted_median_price argument)."""
-    configure_session(spark)
     from pyspark.sql import Window
 
     events = parallel_scan(spark, sf_dir, "events")
@@ -1752,7 +1739,6 @@ def benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer cents — no float log in the data path), one 9-key counting
     aggregation, and a broadcast of the constant expectation table. The
     audit costs a scan at any scale."""
-    configure_session(spark)
     orders = parallel_scan(spark, sf_dir, "orders")
     digits = orders.filter(F.col("o_totalprice") > 0).select(
         F.expr(
@@ -1841,7 +1827,6 @@ def join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     The exact twin exists here to measure the estimator; production uses
     only the sampled leg — the point is that join-size estimation costs a
     key-domain join, not a data join."""
-    configure_session(spark)
     li = parallel_scan(spark, sf_dir, "lineitem")
     fa = li.groupBy(F.col("l_partkey").alias("k")).agg(
         F.count(F.lit(1)).cast("long").alias("ca")
@@ -1939,7 +1924,6 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     moment sums. Day indices come from a per-stream rank so gaps in the
     calendar don't skew the x spacing... they DO compress it — which is
     the standard index-based Theil-Sen convention and keeps x bounded."""
-    configure_session(spark)
     from pyspark.sql import Window
 
     events = parallel_scan(spark, sf_dir, "events")
@@ -2097,7 +2081,6 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the top-k is a TakeOrdered. The fixed-point log2 device (floor-log2 +
     mantissa LUT) is what makes a float-free BM25 possible — resolution
     ~0.09 bits, well under the gaps BM25 ranking cares about."""
-    configure_session(spark)
     from pyspark.sql import Window
 
     docs = parallel_scan(spark, sf_dir, "documents")
@@ -2217,7 +2200,6 @@ def source_entropy_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     BROADCAST, and a narrow integer scoring pass. No floats: entropy in
     milli-bits comes from the bit-length + mantissa-LUT log2, so any
     engine, layout, or retry reproduces the identical number."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     tok = docs.select("source", F.explode(F.expr(_SPARK_TOK)).alias("word"))
     cw = tok.groupBy("source", "word").agg(
@@ -2334,7 +2316,6 @@ def wordpiece_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching the repo's bom_cost_rollup stance (the DuckDB recursive twin
     is unbounded — silent truncation would diverge, so Spark fails loud
     instead)."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     types = (
         docs.select(F.explode(F.expr(_SPARK_TOK)).alias("word"))
@@ -2493,7 +2474,6 @@ def nb_margin_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-(doc, class) cost relation (`_nb_scored`); best/second/margin are
     keyed aggregations on doc_id (class dimension bounded), and the final
     rollup has at most {_NBCAL_MAX_BIN}+1 rows. No windows, no sorts."""
-    configure_session(spark)
     scored = _nb_scored(spark, sf_dir)
     best = scored.groupBy("doc_id").agg(F.min("cost_bits").alias("best_bits"))
     best = F.broadcast(best.localCheckpoint(eager=False))  # pred AND second legs
@@ -2608,7 +2588,6 @@ def auc_rank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     live in DECIMAL(38,0)."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     tok = f"regexp_extract_all(lower(text), '{TOKEN_RE}', 0)"
     base = docs.select(
@@ -2717,7 +2696,6 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lang, word)-keyed counting aggregation, the word->symbol-count table
     BROADCASTS onto it, and the fairness floor is a 1-row broadcast. Text
     never shuffles."""
-    configure_session(spark)
     _, vocabs = _spark_bpe_chain(spark, sf_dir)
     seg = vocabs[_BPE_ROUNDS].select(
         "word", F.size(F.expr(_BPE_SYMS)).cast("long").alias("n_sym")
@@ -2811,7 +2789,6 @@ def gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     order — and a bounded final fold with exact integer products."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     ucnt = events.groupBy("event_type", "user_id").agg(
         F.count(F.lit(1)).cast("long").alias("x")
@@ -2913,7 +2890,6 @@ def cuped_variance_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
         hash_uniform,
     )
 
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     b = events.agg(
         F.expr(
@@ -3021,7 +2997,6 @@ def vocab_oov_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     held-out token stream joins the BROADCAST vocab once — the stream
     never shuffles. At 100 TB the vocab is still 256 rows."""
     docs = parallel_scan(spark, sf_dir, "documents")
-    configure_session(spark)
     from amazon_kinesis_data_streams_health_check_spark.operators.curation import (
         hash_uniform,
     )
@@ -3175,7 +3150,6 @@ def entity_resolution_fs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE row broadcast back over the candidates; tier rollup is a 3-key
     aggregation. At 100 TB the block key is the knob: append name-suffix
     chars or balance bands to shrink blocks — same plan, smaller join."""
-    configure_session(spark)
     cust = parallel_scan(spark, sf_dir, "customer")
     base = cust.select(
         F.col("c_custkey").alias("ck"),
@@ -3364,7 +3338,6 @@ def forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid-sized inputs; the 3-model melt is a narrow per-row stack."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     daily = events.groupBy(
         F.col("event_type").alias("stream_name"),
@@ -3496,7 +3469,6 @@ def sprt_sequential_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     handful of rows."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     trials = events.groupBy(
         F.col("event_type").alias("stream_name"),
@@ -3640,7 +3612,6 @@ def embedding_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bounded (dim, bin) aggregation), share arithmetic on the 32-row
     bin table, and a per-dim rollup. The log2 is the shared fixed-point
     primitive — no floats anywhere."""
-    configure_session(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     lr = (
         _log2_milli(
@@ -3762,7 +3733,6 @@ FROM var, (VALUES (1000), (5000)) d(delta_milli)
 def sample_size_power_calc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: one keyed moment aggregation (map-side partials) and a
     2-row broadcast sweep; the squares live in DECIMAL(38,0)."""
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     dec = "CAST({} AS DECIMAL(38,0))"
     mo = events.groupBy(F.col("event_type").alias("stream_name")).agg(
@@ -3881,7 +3851,6 @@ def seasonality_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: the raw stream collapses once to the bounded hourly
     grid; slot means are a 24-key aggregation broadcast back; all squares
     in DECIMAL(38,0); no windows over raw rows."""
-    configure_session(spark)
     events = parallel_scan(spark, sf_dir, "events")
     dec = "CAST({} AS DECIMAL(38,0))"
     hourly = events.groupBy(
@@ -3983,7 +3952,6 @@ def isotonic_margin_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-joins (`operators/calibrate.py:isotonic_fit`). No new wide stage
     over raw data is introduced — the fit's cost is O(bins^3) on <= 8
     rows."""
-    configure_session(spark)
     base = nb_margin_calibration(spark, sf_dir).localCheckpoint(eager=False)
     bins = base.select("margin_bin", "n_docs", "n_correct")
     fitted = isotonic_fit(bins, "margin_bin", "n_correct", "n_docs")
@@ -4172,7 +4140,6 @@ def unigram_lm_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
     no Python. The per-(word, end) option lists ride a word-keyed map
     column, so the whole segmentation stage is embarrassingly parallel
     over types."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     types = (
         docs.select(F.explode(F.expr(_SPARK_TOK)).alias("word"))
@@ -4388,7 +4355,6 @@ def unigram_lm_em2(spark: SparkSession, sf_dir: str) -> DataFrame:
     different broadcast-derived cost map. The round-2 vocabulary derives
     from round-1 counts (Heaps-bounded), so the whole EM cycle is
     type-table arithmetic."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     types = (
         docs.select(F.explode(F.expr(_SPARK_TOK)).alias("word"))
@@ -4593,7 +4559,6 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     count outgrows a partition sort."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", "lang", F.explode(F.expr(_SPARK_TOK)).alias("w")

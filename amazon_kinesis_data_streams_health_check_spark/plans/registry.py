@@ -10,10 +10,13 @@ stable across engines.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from amazon_kinesis_data_streams_health_check_spark.session import configure_session
 
 
 @dataclass(frozen=True)
@@ -129,12 +132,25 @@ def register(
     doc: str = "",
     tags: tuple[str, ...] = (),
 ) -> Callable[[Callable[[SparkSession, str], DataFrame]], Callable[[SparkSession, str], DataFrame]]:
-    """Decorator: register a (spark, sf_dir) -> DataFrame builder."""
+    """Decorator: register a (spark, sf_dir) -> DataFrame builder.
+
+    ``Query.builder`` applies the session contract (``configure_session``)
+    before the plan function runs, so every registry entry point — the
+    driver contract, the CLI, the bench and the parity tests — builds on a
+    UTC, ANSI-off session even when the caller owns the session. The
+    decorator returns ``fn`` unchanged for direct module-level calls.
+    """
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        _REGISTRY[name] = Query(name=name, builder=fn, oracle=oracle, doc=doc or fn.__doc__ or "", tags=tags)
+
+        @functools.wraps(fn)
+        def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+            configure_session(spark)
+            return fn(spark, sf_dir)
+
+        _REGISTRY[name] = Query(name=name, builder=build, oracle=oracle, doc=doc or fn.__doc__ or "", tags=tags)
         return fn
 
     return deco

@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from amazon_kinesis_data_streams_health_check_spark.plans.registry import register
-from amazon_kinesis_data_streams_health_check_spark.session import configure_session
 from amazon_kinesis_data_streams_health_check_spark.sources.tables import load_table, parallel_scan
 
 # Exact-decimal building blocks (Spark side).
@@ -59,7 +58,6 @@ GROUP BY l_returnflag, l_linestatus
     tags=("relational", "bench"),
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
     )
@@ -101,7 +99,6 @@ LIMIT 10
     tags=("relational", "bench"),
 )
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     cust = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1997-06-01").cast("timestamp")
@@ -149,7 +146,6 @@ GROUP BY n_name
     tags=("relational", "bench"),
 )
 def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -199,7 +195,6 @@ FROM (
     tags=("relational",),
 )
 def top_suppliers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     supp = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation")
     w = Window.partitionBy("n_nationkey").orderBy(F.desc("s_acctbal"), F.asc("s_suppkey"))
@@ -230,7 +225,6 @@ GROUP BY ROLLUP (l_returnflag, l_linestatus)
     tags=("relational",),
 )
 def revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.sum(F.expr(_REVENUE)).cast("double").alias("revenue"),
@@ -260,7 +254,6 @@ def revenue_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One scan, one Expand (4 grouping sets), one shuffle — subtotals of
     every dimension combination without re-scanning, which at 100 TB replaces
     four separate aggregation jobs."""
-    configure_session(spark)
     orders = load_table(spark, sf_dir, "orders").withColumn(
         "order_year", F.year("o_orderdate").cast("int")
     )
@@ -296,7 +289,6 @@ SELECT user_id FROM (
     tags=("relational",),
 )
 def user_funnel_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     ev = load_table(spark, sf_dir, "events")
     by = lambda t: ev.filter(F.col("event_type") == t).select("user_id")  # noqa: E731
     return by("view").intersect(by("purchase")).subtract(by("error"))
@@ -322,7 +314,6 @@ GROUP BY c_mktsegment
     tags=("relational",),
 )
 def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     return (
@@ -355,7 +346,6 @@ GROUP BY o_orderpriority
     tags=("relational",),
 )
 def discounted_orders_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_discount") >= 0.06)
     return (
@@ -392,7 +382,6 @@ _EVENT_TYPES = ["view", "click", "signup", "purchase", "error"]
     tags=("relational",),
 )
 def user_event_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     ev = load_table(spark, sf_dir, "events")
     # Pinned pivot values: no extra distinct-collection job, stable schema.
     out = ev.groupBy("user_id").pivot("event_type", _EVENT_TYPES).count()
@@ -439,7 +428,6 @@ FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND v.ts <= p.ts
     tags=("relational", "temporal", "bench"),
 )
 def asof_view_before_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     views = events.filter(F.col("event_type") == "view").select(
         "user_id", "ts", "event_id", "value"
@@ -495,7 +483,6 @@ GROUP BY user_id, sid
     tags=("relational", "temporal", "bench"),
 )
 def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     return (
         events.groupBy("user_id", F.session_window("ts", "30 minutes"))
@@ -529,7 +516,6 @@ WHERE v.event_type = 'view' AND p.event_type = 'purchase'
     tags=("relational", "temporal"),
 )
 def range_join_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     views = events.filter(F.col("event_type") == "view").select(
         "user_id", F.col("ts").alias("vts"), F.col("event_id").alias("view_id")
@@ -574,7 +560,6 @@ GROUP BY event_type
     tags=("relational",),
 )
 def value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     return events.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -625,7 +610,6 @@ def event_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct user (~|users| sketch merges, 8x slower here). The distinct
     count runs in its own two-phase aggregation and joins back on the tiny
     event_type key set."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     sketches = events.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -678,7 +662,6 @@ GROUP BY event_type
     tags=("relational",),
 )
 def skew_resilient_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     counts = salted_agg(
         events.select("event_type"),
@@ -720,7 +703,6 @@ GROUP BY l.l_partkey
     tags=("relational",),
 )
 def small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     lineitem = load_table(spark, sf_dir, "lineitem")
     # Exact-rational threshold: avg as sum/count decimals, compare
     # l_quantity * 5 * count < sum (integer-ish cross-multiplication) to
@@ -769,7 +751,6 @@ LIMIT 100
     tags=("relational", "bench"),
 )
 def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
@@ -830,7 +811,6 @@ GROUP BY s.s_name
     tags=("relational",),
 )
 def q21_sole_late_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     lineitem = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     supplier = load_table(spark, sf_dir, "supplier")
@@ -911,7 +891,6 @@ def revenue_moving_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically."""
     from pyspark.sql import Window
 
-    configure_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(
         F.col("o_orderpriority").alias("priority"),
@@ -972,7 +951,6 @@ def dq_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
         check_expectations,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     return check_expectations(events, dict(_DQ_RULES_SQL))
 
@@ -999,7 +977,6 @@ def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         salted_join,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     profile = events.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events_user"))
     fact = events.select("event_id", "user_id", "event_type")
@@ -1038,7 +1015,6 @@ def json_shred_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     generated parser) — the standard log-ingest pattern where upstream hands
     you documents and the lake wants columns. Doubles round-trip exactly
     (Jackson shortest-repr print, exact parse)."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     docs = events.groupBy("user_id").agg(
         F.to_json(
@@ -1093,7 +1069,6 @@ def lineitem_measures_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is scanned ONCE for all four measures, where the UNION ALL oracle
     formulation scans it four times; the only shuffle is the 4-key final
     aggregation with map-side partials."""
-    configure_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     long = li.select(
         F.expr(
@@ -1161,7 +1136,6 @@ def lineitem_corr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     final r/cov expressions are per-group scalar math. The idiom generalizes
     to any moment statistic a 1000-executor job must reproduce bit-for-bit
     across retries and partitionings."""
-    configure_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     x = F.col("l_quantity").cast("bigint")
     y = F.round(F.col("l_extendedprice") * 100).cast("bigint")
@@ -1218,7 +1192,6 @@ def event_time_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: scan -> one keyed aggregation with map-side partials;
     bucket keys are bounded (types x 24 x value-range/width) so the final
     exchange moves a constant-size result regardless of input size."""
-    configure_session(spark)
     ev = load_table(spark, sf_dir, "events")
     return ev.groupBy(
         "event_type",
@@ -1260,7 +1233,6 @@ def revenue_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: one Expand (3 grouping sets) + one keyed aggregation —
     same single-shuffle structure as rollup/cube; output cardinality is the
     sum of the lattice levels, not their product."""
-    configure_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     orders.createOrReplaceTempView("_gs_orders")
     return spark.sql(
@@ -1326,7 +1298,6 @@ def user_first_last_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     state exactly once. min_by/max_by use struct(value, event_id) order keys
     — without the unique tie-break, ties make argmin nondeterministic on ANY
     engine, which is the bug this query's oracle would catch."""
-    configure_session(spark)
     from pyspark.sql.window import Window
 
     ev = load_table(spark, sf_dir, "events")
@@ -1398,7 +1369,6 @@ def sql_surface_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``spark.sql`` with the exact oracle text. Catalyst still owns pushdown/
     pruning (the WHERE reaches the parquet scan like the DataFrame twin
     q6's does)."""
-    configure_session(spark)
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(_SQL_SURFACE)
 
@@ -1445,7 +1415,6 @@ def order_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     step is either a correctly-rounded single double op (identical on any
     engine) or BIGINT — the reconciliation verdict cannot flip with
     partitioning, retries, or cluster size."""
-    configure_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     line_cents = li.groupBy("l_orderkey").agg(
@@ -1532,7 +1501,6 @@ def market_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject — every metric derives from exact BIGINT counts,
     so support/confidence/lift are single IEEE ops with one rounding,
     bit-identical cross-engine."""
-    configure_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     di = li.select("l_orderkey", "l_partkey").distinct()
     baskets = di.groupBy("l_orderkey").agg(
@@ -1635,7 +1603,6 @@ def sketch_set_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     path makes unnecessary. Estimate rows fan out |types|-1 ways from the
     distinct (user, type) pass — a narrow broadcast-join explode, keys
     uniform."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     di = events.select("user_id", "event_type").distinct().localCheckpoint(eager=False)
     # Exact sides (the oracle's values).
@@ -1739,7 +1706,6 @@ def incremental_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     nightly refresh costs O(|delta|), not O(|history|). All sums are exact
     cents — folding order cannot change the result, which is what makes
     incremental maintenance safe under retries."""
-    configure_session(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         "o_orderdate",
@@ -1840,7 +1806,6 @@ def bom_ancestor_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact BIGINT cents sums; the builder raises if any chain failed to
     reach the root within the round budget (a cycle or fanout bug would
     otherwise silently truncate)."""
-    configure_session(spark)
     parts = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("node"),
         F.round(F.col("p_retailprice") * 100).cast("long").alias("cents"),
@@ -1927,7 +1892,6 @@ def pareto_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     it back, and keep rows beaten by neither the suffix max (bigger size,
     >= price) nor their own size's max (same size, > price). One pass over
     the fact side, no O(n^2) dominance join."""
-    configure_session(spark)
     parts = load_table(spark, sf_dir, "part").select(
         "p_partkey",
         F.col("p_size").cast("long").alias("p_size"),
@@ -1989,7 +1953,6 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative-weight pick is exact BIGINT — no interpolation, no float
     accumulation. This aggregate-then-window shape is the general recipe
     for exact order statistics over skewed group keys."""
-    configure_session(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("price_cents"),
@@ -2069,7 +2032,6 @@ def customer_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     device) if a single nation outgrows a task. percent_rank/cume_dist are
     exact rational values (rank/(n-1), rank/n) of integers, so rounding to
     6 places is engine-identical."""
-    configure_session(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     cv = (
@@ -2136,7 +2098,6 @@ def variant_props_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the right 100 TB call when documents have hundreds of fields touched
     sparsely — extraction cost is per-FIELD-ACCESS, not per-document
     schema materialization."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     k = F.expr("variant_get(parse_json(props), '$.k', 'bigint')")
     return (
@@ -2197,7 +2158,6 @@ def bom_cost_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     key. Contrast with the naive self-join-per-level plan (depth shuffles)
     or a driver-side recursion (none here — the chain is a narrow
     codegen'd fold per row)."""
-    configure_session(spark)
     part = load_table(spark, sf_dir, "part")
     chain = (
         f"aggregate(sequence(1, {_BOMROLL_MAX_DEPTH}), array(p_partkey),"
@@ -2289,7 +2249,6 @@ def aqe_skew_join_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same shape), inspects the executed adaptive plan, and returns the
     bounded per-stream aggregate as a local relation — the join output
     itself was already reduced distributedly before collection."""
-    configure_session(spark)
     saved = {k: spark.conf.get(k, None) for k in _ASJ_CONFS}
     try:
         for k, v in _ASJ_CONFS.items():
@@ -2381,7 +2340,6 @@ def runtime_bloom_join_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholds here only force the rule on test-sized inputs (the
     application-side default of 10GB is exactly a real fact scan). Confs
     are saved and restored; the audited plan is the exact plan executed."""
-    configure_session(spark)
     saved = {k: spark.conf.get(k, None) for k in _RBF_CONFS}
     try:
         for k, v in _RBF_CONFS.items():

@@ -41,10 +41,10 @@ from amazon_kinesis_data_streams_health_check_spark.plans.mining_queries import 
     _SPRT_SQL,
 )
 from amazon_kinesis_data_streams_health_check_spark.plans.registry import register
-from amazon_kinesis_data_streams_health_check_spark.session import configure_session
 from amazon_kinesis_data_streams_health_check_spark.sources.tables import (
     load_table,
     restore_timestamp,
+    stream_table,
 )
 from amazon_kinesis_data_streams_health_check_spark.streaming.pipeline import (
     consumer_stream,
@@ -54,6 +54,12 @@ from amazon_kinesis_data_streams_health_check_spark.streaming.pipeline import (
     replay_feed,
     windowed_max_stream,
 )
+
+
+def _mod_chunks(df: DataFrame, key: str) -> list[DataFrame]:
+    """Four chunks of ``df`` by ``key`` mod 4: the replay feed of a
+    per-row or complete-mode drive, whose output is slicing-independent."""
+    return [df.filter(F.pmod(F.col(key), F.lit(4)) == i) for i in range(4)]
 
 
 def _range_chunks(
@@ -98,7 +104,6 @@ FROM b
     tags=("core", "streaming"),
 )
 def streaming_tracer_produce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     return drain_to_memory(
         producer_stream(
             spark,
@@ -157,7 +162,6 @@ def streaming_consumer_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesizes kinesis-event JSON from the events table (bounded), then
     runs the REAL consumer file-stream over it — schema, PERMISSIVE parse,
     explode, decode, metric projection all exercised under streaming."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").filter(F.expr(_STREAM_FILTER))
     now_val = events.agg(F.max("ts")).collect()[0][0]
     src_dir = tempfile.mkdtemp(prefix="kinesis_events_")
@@ -197,15 +201,7 @@ GROUP BY 1, 2
 def streaming_window_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-streams the events parquet (bounded backfill) through the
     watermarked tumbling-max aggregation (A1/W3)."""
-    configure_session(spark)
-    path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
-    # FileStreamSource wants a directory; the table is a single file — expose
-    # it through a temp dir symlink (zero-copy).
-    src_dir = tempfile.mkdtemp(prefix="events_stream_")
-    os.symlink(path, os.path.join(src_dir, "events.parquet"))
-    raw = restore_timestamp(spark.readStream.schema(schema).parquet(src_dir), "ts")
-    metrics = raw.select(
+    metrics = stream_table(spark, sf_dir, "events").select(
         "ts",
         F.col("event_type").alias("stream_name"),
         F.col("value"),
@@ -256,13 +252,7 @@ def streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         sessionized_stream,
     )
 
-    configure_session(spark)
-    path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
-    src_dir = tempfile.mkdtemp(prefix="sessions_stream_")
-    os.symlink(path, os.path.join(src_dir, "events.parquet"))
-    raw = restore_timestamp(spark.readStream.schema(schema).parquet(src_dir), "ts")
-    events = raw.select("ts", "user_id")
+    events = stream_table(spark, sf_dir, "events").select("ts", "user_id")
     return drain_to_memory(
         sessionized_stream(events), "sessionized_stream", output_mode="complete"
     )
@@ -293,7 +283,6 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup keeps the drive deterministic; the watermark-bounded variant
     (``dropDuplicatesWithinWatermark``, state that evicts) is semantically
     trigger-dependent and stays pinned in tests/test_streaming.py."""
-    configure_session(spark)
     sub = load_table(spark, sf_dir, "events").filter(F.expr(_STREAM_FILTER)).select(
         "event_id", "ts", "event_type", "value"
     )
@@ -360,7 +349,6 @@ def streaming_delivery_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         delivery_audit_join,
     )
 
-    configure_session(spark)
     sub = load_table(spark, sf_dir, "events").filter(F.expr(_STREAM_FILTER))
     hi = sub.agg(F.max("ts")).collect()[0][0]
 
@@ -435,7 +423,6 @@ def streaming_stateful_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
         period_alarm_stream,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     lagged = staleness_at_window_close(
         events, ts_col="ts", payload_col="props", key_col="event_type"
@@ -527,7 +514,6 @@ def kinesis_sim_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_kinesis_sim,
     )
 
-    configure_session(spark)
     register_kinesis_sim(spark)
     raw = (
         spark.read.format("kinesis_sim")
@@ -610,7 +596,6 @@ def kinesis_kpl_deaggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_kinesis_sim,
     )
 
-    configure_session(spark)
     register_kinesis_sim(spark)
     raw = (
         spark.read.format("kinesis_sim")
@@ -735,7 +720,6 @@ def kinesis_kpl_produce_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
         register_kinesis_sim,
     )
 
-    configure_session(spark)
     register_kinesis_sim(spark)
     register_kinesis_put(spark)
     raw = (
@@ -852,7 +836,6 @@ def shard_throughput_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_kinesis_sim,
     )
 
-    configure_session(spark)
     register_kinesis_sim(spark)
     raw = (
         spark.read.format("kinesis_sim")
@@ -954,7 +937,6 @@ def consumer_iterator_age(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_kinesis_sim,
     )
 
-    configure_session(spark)
     register_kinesis_sim(spark)
     raw = (
         spark.read.format("kinesis_sim")
@@ -1054,7 +1036,6 @@ def streaming_kpl_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_kinesis_sim,
     )
 
-    configure_session(spark)
     register_kinesis_sim(spark)
     raw = (
         spark.read.format("kinesis_sim")
@@ -1138,7 +1119,6 @@ def streaming_trigger_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_kinesis_sim,
     )
 
-    configure_session(spark)
     register_kinesis_sim(spark)
     stream = (
         spark.readStream.format("kinesis_sim")
@@ -1230,7 +1210,6 @@ def shard_order_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_kinesis_sim,
     )
 
-    configure_session(spark)
     register_kinesis_sim(spark)
     raw = (
         spark.read.format("kinesis_sim")
@@ -1304,7 +1283,6 @@ def streaming_kinesis_sim_consume(spark: SparkSession, sf_dir: str) -> DataFrame
         register_kinesis_sim,
     )
 
-    configure_session(spark)
     register_kinesis_sim(spark)
     raw = (
         spark.readStream.format("kinesis_sim")
@@ -1351,7 +1329,6 @@ def metrics_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_metrics_sink,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").filter(F.expr(_STREAM_FILTER))
     now_val = events.agg(F.max("ts")).collect()[0][0]
     src_dir = tempfile.mkdtemp(prefix="kinesis_events_sink_")
@@ -1392,14 +1369,8 @@ def streaming_corpus_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_token_stats,
     )
 
-    configure_session(spark)
     docs = load_table(spark, sf_dir, "documents")
-    src = tempfile.mkdtemp(prefix="docs_stream_")
-    docs.repartition(4).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
-    )
+    stream, _ = replay_feed(spark, _mod_chunks(docs, "doc_id"), "docs_stream_")
     out = with_quality_score(with_token_stats(stream)).select(
         "doc_id",
         "lang",
@@ -1471,13 +1442,7 @@ def streaming_trending_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     events)."""
     from pyspark.sql import Window as W
 
-    configure_session(spark)
-    path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
-    src_dir = tempfile.mkdtemp(prefix="trending_stream_")
-    os.symlink(path, os.path.join(src_dir, "events.parquet"))
-    raw = restore_timestamp(spark.readStream.schema(schema).parquet(src_dir), "ts")
-    counts = raw.groupBy(
+    counts = stream_table(spark, sf_dir, "events").groupBy(
         F.window(F.col("ts"), f"{_TREND_WINDOW_S} seconds", f"{_TREND_SLIDE_S} seconds").alias("w"),
         "event_type",
     ).agg(F.count(F.lit(1)).alias("n_events"))
@@ -1529,17 +1494,12 @@ def streaming_enriched_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream side, no stream-side state for the join); the running aggregate
     keeps |event_type| state rows. The deployment shape for 'enrich ingest
     against yesterday's user table'."""
-    configure_session(spark)
-    path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
-    src_dir = tempfile.mkdtemp(prefix="enrich_stream_")
-    os.symlink(path, os.path.join(src_dir, "events.parquet"))
     profile = (
         load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.min("ts").alias("first_ts"))
     )
-    raw = restore_timestamp(spark.readStream.schema(schema).parquet(src_dir), "ts")
+    raw = stream_table(spark, sf_dir, "events")
     enriched = raw.select("ts", "user_id", "event_type").join(
         F.broadcast(profile), "user_id"
     )
@@ -1583,7 +1543,6 @@ def streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         cusum_stream,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     m = (
         events.groupBy(
@@ -1640,7 +1599,6 @@ def streaming_hysteresis_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
         hysteresis_stream,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     m = (
         events.groupBy(
@@ -1737,7 +1695,6 @@ def retention_expiry_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_kinesis_sim,
     )
 
-    configure_session(spark)
     register_kinesis_sim(spark)
     raw = (
         spark.read.format("kinesis_sim")
@@ -1859,7 +1816,6 @@ def consumer_fanout_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window
 
-    configure_session(spark)
     register_kinesis_sim(spark)
     raw = (
         spark.read.format("kinesis_sim")
@@ -2004,7 +1960,6 @@ def kinesis_e2e_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_kinesis_sim,
     )
 
-    configure_session(spark)
     register_kinesis_sim(spark)
     raw = (
         spark.read.format("kinesis_sim")
@@ -2125,16 +2080,10 @@ def streaming_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         drift_wire_payload,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_type", "ts", "value", "user_id", "event_id"
     )
-    src = tempfile.mkdtemp(prefix="drift_stream_")
-    events.repartition(4).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
-    )
+    stream, _ = replay_feed(spark, _mod_chunks(events, "event_id"), "drift_stream_")
     bounds = events.agg(F.date_trunc("day", F.min("ts")).alias("d0"))
     early = F.expr(f"ts < d0 + INTERVAL {_DRIFT_CUT_DAYS} DAY")
     wire = stream.crossJoin(F.broadcast(bounds)).select(
@@ -2232,11 +2181,6 @@ def streaming_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     version by construction (contiguous windows, open-ended tail) — the
     conservation the batch twin's equality with the plain event count
     proves in the hash."""
-    configure_session(spark)
-    path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
-    src_dir = tempfile.mkdtemp(prefix="scd2_stream_")
-    os.symlink(path, os.path.join(src_dir, "events.parquet"))
     events = load_table(spark, sf_dir, "events")
     bounds = events.agg(F.date_trunc("day", F.min("ts")).alias("d0"))
     versions = spark.createDataFrame([(0,), (1,), (2,)], "ver int")
@@ -2260,7 +2204,7 @@ def streaming_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("tier"),
         )
     )
-    raw = restore_timestamp(spark.readStream.schema(schema).parquet(src_dir), "ts")
+    raw = stream_table(spark, sf_dir, "events")
     enriched = raw.select("ts", "user_id", "event_type", "value").join(
         F.broadcast(dim),
         on=[
@@ -2316,7 +2260,6 @@ def streaming_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
         rate_limit_stream,
     )
 
-    configure_session(spark)
     rows = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.expr(f"CAST(ts AS LONG) * {_RL_T} + event_id").alias("s"),
@@ -2412,7 +2355,6 @@ def streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     N's watermark derives from batch N-1's data; the poison value and the
     dropped-row counter turn any future regression of that rule into a
     loud hash/assert failure rather than silent acceptance."""
-    configure_session(spark)
     e = _LATE_EPOCH
     files = [
         [(s, e + m * 60 + 30, 100 + m) for s in _LATE_STREAMS for m in range(10)],
@@ -2522,7 +2464,6 @@ def kcl_subsequence_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_kinesis_sim,
     )
 
-    configure_session(spark)
     register_kinesis_sim(spark)
     raw = (
         spark.read.format("kinesis_sim")
@@ -2656,7 +2597,6 @@ def streaming_fanin_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_kinesis_sim,
     )
 
-    configure_session(spark)
     register_kinesis_sim(spark)
 
     def leg(c: dict) -> DataFrame:
@@ -2727,7 +2667,6 @@ def streaming_lease_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     would be swapped in object storage."""
     import glob as _glob
 
-    configure_session(spark)
     fleets = [["w0", "w1", "w2", "w3"], ["w0", "w1", "w2"]]
     stream, _ = replay_feed(
         spark,
@@ -2844,7 +2783,6 @@ def streaming_ewma_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
         ewma_stream,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     feed_rows = (
         events.groupBy(
@@ -2900,7 +2838,6 @@ def streaming_control_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
         ensemble_stream,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     m = (
         events.groupBy(
@@ -3015,7 +2952,6 @@ def shard_iterator_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_kinesis_sim,
     )
 
-    configure_session(spark)
     register_kinesis_sim(spark)
     raw = (
         spark.read.format("kinesis_sim")
@@ -3119,7 +3055,6 @@ def producer_retry_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     record, and a single per-stream aggregation. count(DISTINCT pk) makes
     Spark pre-group on (stream, pk) — the dedup itself IS the map-side
     partial aggregation, no second pass."""
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     base = events.select(
         F.col("event_type").alias("stream_name"),
@@ -3195,7 +3130,6 @@ def streaming_forecast_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
         forecast_stream,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     daily = events.groupBy(
         F.col("event_type").alias("stream_name"),
@@ -3281,7 +3215,6 @@ def streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         sprt_stream,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
     trials = (
         events.groupBy(
@@ -3412,7 +3345,6 @@ def streaming_journey_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         journey_stream,
     )
 
-    configure_session(spark)
     events = load_table(spark, sf_dir, "events")
 
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -3532,7 +3464,6 @@ def streaming_pack_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         pack_stream,
     )
 
-    configure_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     feed_rows = docs.select(
         "source",
@@ -3615,7 +3546,6 @@ def streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         quality_gate_stream,
     )
 
-    configure_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     feed_rows = (
         gopher_flags_df(docs)

@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 from amazon_kinesis_data_streams_health_check_spark.operators.textstats import TOKEN_RE
 from amazon_kinesis_data_streams_health_check_spark.plans.registry import register
-from amazon_kinesis_data_streams_health_check_spark.session import configure_session
 from amazon_kinesis_data_streams_health_check_spark.sources.tables import load_table, parallel_scan
 
 _DUCK_TOK = f"regexp_extract_all(lower(text), '{TOKEN_RE}')"
@@ -69,7 +68,6 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ops; at 100 TB this runs scan-bound across however many input splits
     the lake provides. Chunk ids are ``offset / stride`` so downstream
     packing can reconstruct adjacency without re-reading the parent doc."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     offs = docs.select(
         "doc_id",
@@ -121,7 +119,6 @@ def denylist_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern subset used (alternation, non-capturing group, ``\\b``) behaves
     identically in Java regex and RE2, so the DuckDB twin hash-matches the
     scrubbed bytes, not just the counts."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     scrubbed = F.regexp_replace("text", F.lit(_DENY_RE), F.lit("<TERM>"))
     return docs.select(
@@ -180,7 +177,6 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase local-then-merge slice — never ``row_number`` over a full
     per-source candidate set, whose partitions would hold the whole
     vocabulary per source at 100 TB."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", "source", F.explode(F.expr(_SPARK_TOK)).alias("term")
@@ -255,7 +251,6 @@ def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``collect_list`` per term would hold a stopword's entire posting list
     (billions of ids at 100 TB) in one aggregation buffer; this never
     materializes more than ``cap`` ids per (term, partition)."""
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     pairs = docs.select(
         "doc_id", F.explode(F.expr(_SPARK_TOK)).alias("term")
@@ -311,7 +306,6 @@ def length_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     a GLOBAL ntile would force a single-partition total sort and is
     deliberately not offered). Both engines assign ntile identically over
     the unique total order (n_chars, doc_id)."""
-    configure_session(spark)
     from pyspark.sql.window import Window
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -355,7 +349,6 @@ def doc_length_rankings(spark: SparkSession, sf_dir: str) -> DataFrame:
     catalog cardinality); over a unique total order percent_rank and
     cume_dist are (rank-1)/(n-1) and rank/n — exact integer ratios, so the
     doubles are engine-identical."""
-    configure_session(spark)
     from pyspark.sql.window import Window
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -417,7 +410,6 @@ def doc_length_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    configure_session(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
@@ -560,7 +552,6 @@ def chunk_retrieval_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         topk_per_query,
     )
 
-    configure_session(spark)
     docs = parallel_scan(spark, sf_dir, "documents")
     chunks = (
         docs.select(

@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from amazon_kinesis_data_streams_health_check_spark.plans.registry import register
-from amazon_kinesis_data_streams_health_check_spark.session import configure_session
 from amazon_kinesis_data_streams_health_check_spark.sources.tables import load_table
 
 _PRICE = "CAST(l_extendedprice AS DECIMAL(18,2))"
@@ -65,7 +64,6 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01'
     tags=("relational", "bench"),
 )
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     filtered = li.filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -102,7 +100,6 @@ GROUP BY o_orderpriority
     tags=("relational",),
 )
 def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-07-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-10-01").cast("timestamp"))
@@ -151,7 +148,6 @@ GROUP BY 1, 2, 3
     tags=("relational",),
 )
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     nation = load_table(spark, sf_dir, "nation")
@@ -214,7 +210,6 @@ GROUP BY 1
     tags=("relational",),
 )
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate"
@@ -282,7 +277,6 @@ GROUP BY 1, 2
     tags=("relational", "bench"),
 )
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
@@ -336,7 +330,6 @@ LIMIT 20
     tags=("relational",),
 )
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-10-01").cast("timestamp"))
@@ -395,7 +388,6 @@ WHERE rev * 20 > (SELECT sum(rev) FROM nr)
     tags=("relational",),
 )
 def q11_important_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     nation = load_table(spark, sf_dir, "nation")
     supp = (
@@ -447,7 +439,6 @@ GROUP BY l_returnflag
     tags=("relational",),
 )
 def q12_late_lines_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
     )
@@ -490,7 +481,6 @@ WHERE l_shipdate >= TIMESTAMP '1996-09-01'
     tags=("relational",),
 )
 def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-09-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-10-01").cast("timestamp"))
@@ -535,7 +525,6 @@ WHERE total_rev = (SELECT max(total_rev) FROM rev)
     tags=("relational",),
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
@@ -578,7 +567,6 @@ GROUP BY p_brand, p_size
     tags=("relational",),
 )
 def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     part = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1")
@@ -621,7 +609,6 @@ WHERE (p_brand = 'Brand#3'  AND p_size BETWEEN 1 AND 15  AND l_quantity BETWEEN 
     tags=("relational",),
 )
 def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
     j = li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
@@ -684,7 +671,6 @@ WHERE p_size BETWEEN 15 AND 20
     tags=("relational",),
 )
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").filter(F.col("p_size").between(15, 20))
     nation = load_table(spark, sf_dir, "nation")
@@ -774,7 +760,6 @@ GROUP BY c_count
     tags=("relational",),
 )
 def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority"
@@ -826,7 +811,6 @@ SEMI JOIN (
     tags=("relational",),
 )
 def q20_heavy_volume_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
@@ -860,7 +844,6 @@ def q20_heavy_volume_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational",),
 )
 def q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_session(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = (
         load_table(spark, sf_dir, "orders")

@@ -1,10 +1,19 @@
-"""SparkSession construction tuned for the engine.
+"""SparkSession construction and the engine's session contract.
 
 All timestamps in the engine are UTC instants (the reference works purely in
 UTC: ``Instant.now()`` / ``SimpleDateFormat(...UTC...)``, see
-HealthCheckConsumerHandler.java:102-107). ``configure_session`` is applied to
-externally-provided sessions (the driver owns the session in verify runs) so
-oracle comparisons against DuckDB's naive timestamps are stable.
+HealthCheckConsumerHandler.java:102-107). The session contract is the set of
+runtime confs in ``RUNTIME_CONFS``, applied by ``configure_session`` in
+exactly two places:
+
+* ``get_spark`` — sessions the engine builds (tests, bench, CLI, tools);
+* ``plans.registry`` — every ``Query.builder`` applies it before building,
+  which covers sessions the caller owns (the driver contract in
+  ``__spark_entry__.py``) without any per-plan prologue.
+
+Three confs are correctness-critical (``CRITICAL_CONFS``: UTC session zone,
+ANSI off, ``nanosAsLong``); ``configure_session`` raises if one of them cannot
+be set. The rest are best-effort.
 """
 
 from __future__ import annotations
@@ -16,7 +25,8 @@ import zipfile
 
 from pyspark.sql import SparkSession
 
-#: Runtime-settable confs applied even to sessions we did not build.
+#: The session contract: runtime-settable confs applied even to sessions we
+#: did not build.
 #: ANSI off: the reference swallows every malformed-input error and drops the
 #: record (HealthCheckConsumerHandler.java:87-93); null-on-error parse
 #: semantics reproduce that (and match the DuckDB oracle's TRY_CAST twins).
@@ -46,6 +56,17 @@ RUNTIME_CONFS = {
     # n_docs rows once, not the token stream — so 256 stays.
     "spark.sql.codegen.maxFields": "256",
 }
+
+#: The RUNTIME_CONFS whose values outputs depend on: lags are computed between
+#: UTC instants, malformed input must parse to NULL instead of raising, and the
+#: driver's TIMESTAMP(NANOS) columns are unreadable without ``nanosAsLong``.
+#: ``inferTimestampNTZ`` has the ``restore_timestamp`` fallback and
+#: ``codegen.maxFields`` only affects speed, so those two stay best-effort.
+CRITICAL_CONFS = (
+    "spark.sql.session.timeZone",
+    "spark.sql.ansi.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
 
 #: Build-time confs for sessions we own (tests, bench).
 BUILD_CONFS = {
@@ -120,12 +141,25 @@ def _ship_package(spark: SparkSession) -> None:
 
 
 def configure_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine confs to an existing session."""
+    """Apply the session contract (``RUNTIME_CONFS``) to a session.
+
+    Called by ``get_spark`` and by every registry ``Query.builder``; plan
+    code never calls it. Raises ``RuntimeError`` naming the conf when one of
+    ``CRITICAL_CONFS`` cannot be set or reads back a different value. A
+    best-effort conf that the deployment refuses is left as it is.
+    """
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # immutable in this deployment; engine still works, tests pin UTC
+        except Exception as e:
+            if k in CRITICAL_CONFS:
+                raise RuntimeError(f"cannot set session conf {k}={v}: {e}") from e
+    for k in CRITICAL_CONFS:
+        got = spark.conf.get(k)
+        if got != RUNTIME_CONFS[k]:
+            raise RuntimeError(
+                f"session conf {k} reads back {got!r}, need {RUNTIME_CONFS[k]!r}"
+            )
     _ship_package(spark)
     return spark
 

@@ -8,6 +8,7 @@ At 100 TB these reads are the dominant cost: loaders stay declarative
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -15,7 +16,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
 from amazon_kinesis_data_streams_health_check_spark.schemas import TESTDATA_TABLES
-from amazon_kinesis_data_streams_health_check_spark.session import configure_session
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -51,24 +51,44 @@ def restore_timestamp(df: DataFrame, col: str) -> DataFrame:
     return df
 
 
+def _normalize_timestamps(df: DataFrame, name: str) -> DataFrame:
+    """Give every timestamp column of table ``name`` session-zone
+    TimestampType: the nano-long columns are restored, and any remaining NTZ
+    column is cast too, so every downstream operator sees one timestamp type
+    across testdata vintages."""
+    for c in _NANOS_TS_COLS.get(name, ()):
+        if c in df.columns:
+            df = restore_timestamp(df, c)
+    for f_ in df.schema.fields:
+        if isinstance(f_.dataType, TimestampNTZType):
+            df = df.withColumn(f_.name, F.col(f_.name).cast("timestamp"))
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table (TESTDATA.md: ``{sf_dir}/{name}.parquet``)."""
-    configure_session(spark)
     key = (spark.sparkContext.applicationId, sf_dir, name)
     cached = _TABLE_CACHE.get(key)
     if cached is not None:
         return cached
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    for c in _NANOS_TS_COLS.get(name, ()):
-        if c in df.columns:
-            df = restore_timestamp(df, c)
-    # Normalize any remaining NTZ column too, so every downstream operator
-    # sees one timestamp type across testdata vintages.
-    for f_ in df.schema.fields:
-        if isinstance(f_.dataType, TimestampNTZType):
-            df = df.withColumn(f_.name, F.col(f_.name).cast("timestamp"))
+    df = _normalize_timestamps(df, name)
     _TABLE_CACHE[key] = df
     return df
+
+
+def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One testdata table as a bounded file stream (a backfill replay of the
+    whole table), with ``load_table``'s timestamp normalisation.
+
+    The file source wants a directory and the table is a single file, so it
+    is exposed through a symlink in a fresh temp dir (zero-copy).
+    """
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    src_dir = tempfile.mkdtemp(prefix=f"{name}_stream_")
+    os.symlink(path, os.path.join(src_dir, f"{name}.parquet"))
+    schema = spark.read.parquet(path).schema
+    return _normalize_timestamps(spark.readStream.schema(schema).parquet(src_dir), name)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

@@ -44,10 +44,17 @@ def run_bench(tier: str, cpus: int) -> dict:
         env=env,
         cwd=REPO,
     )
+    if out.returncode != 0:
+        raise RuntimeError(
+            f"bench at {cpus} cpus exited {out.returncode}:\n{out.stderr[-2000:]}"
+        )
     for line in reversed(out.stdout.splitlines()):
         line = line.strip()
         if line.startswith("{"):
-            return json.loads(line)
+            doc = json.loads(line)
+            if "queries" in doc and "value" in doc:
+                return doc
+            raise RuntimeError(f"bench at {cpus} cpus: result line lacks queries/value: {line}")
     raise RuntimeError(f"bench at {cpus} cpus produced no JSON:\n{out.stderr[-2000:]}")
 
 
