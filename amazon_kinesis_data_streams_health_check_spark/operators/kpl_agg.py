@@ -40,6 +40,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from amazon_kinesis_data_streams_health_check_spark import pyworker
 from amazon_kinesis_data_streams_health_check_spark.functions.kpl import (
     deaggregate,
     encode_aggregated,
@@ -71,6 +72,7 @@ def pack_kpl(
     )
 
     def _pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        pyworker.ready()
         pdf = pdf.sort_values(order_col, kind="mergesort")
         rows = []
         recs = list(zip(pdf[pk_col], pdf[data_col]))
@@ -128,6 +130,7 @@ def explode_kpl(
     cols = list(keep_cols)
 
     def _explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.ready()
         for pdf in batches:
             rows = []
             for rec in pdf.itertuples(index=False):

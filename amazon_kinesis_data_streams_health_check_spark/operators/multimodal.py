@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from amazon_kinesis_data_streams_health_check_spark import pyworker
 from amazon_kinesis_data_streams_health_check_spark.schemas import (
     MEDIA_FEATURE_SCHEMA,
     MEDIA_RESIZE_SCHEMA,
@@ -97,6 +98,7 @@ def decode_media(media: DataFrame, decoder: str = "fake") -> DataFrame:
         raise ValueError(f"unknown decoder: {decoder}")
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.ready()
         for pdf in batches:
             feats = []
             for payload, kind in zip(pdf["payload"], pdf["kind"]):
@@ -138,6 +140,7 @@ def resize_media(media: DataFrame, max_dim: int = 64) -> DataFrame:
     )
 
     def shrink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.ready()
         for pdf in batches:
             out_bytes = []
             for payload, nw, nh in zip(pdf["payload"], pdf["new_width"], pdf["new_height"]):
@@ -226,6 +229,7 @@ def audio_windows(
     """
 
     def frame(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.ready()
         for pdf in batches:
             out = {
                 "media_id": [],

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from amazon_kinesis_data_streams_health_check_spark import pyworker
 from amazon_kinesis_data_streams_health_check_spark.operators.textstats import TOKEN_RE
 from amazon_kinesis_data_streams_health_check_spark.plans.registry import register
 from amazon_kinesis_data_streams_health_check_spark.sources.tables import load_table, parallel_scan
@@ -415,6 +416,7 @@ def doc_length_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def _mad(pdf: pd.DataFrame) -> pd.DataFrame:
+        pyworker.ready()
         x = pdf["n_chars"].to_numpy(dtype="float64")
         med = float(np.median(x))
         adev = np.abs(x - med)

@@ -18,8 +18,10 @@ be set. The rest are best-effort.
 
 from __future__ import annotations
 
+import atexit
 import os
 import pathlib
+import shutil
 import tempfile
 import zipfile
 
@@ -97,6 +99,9 @@ BUILD_CONFS = {
 #: applicationIds the package zip has already been shipped to.
 _SHIPPED_APPS: set[str] = set()
 
+#: This process's directory for the shipped package zip (``_ship_package``).
+_SHIP_DIR: str | None = None
+
 
 def _default_driver_mem() -> str:
     """Driver-heap default sized from the host: half of MemAvailable,
@@ -116,20 +121,27 @@ def _default_driver_mem() -> str:
 def _ship_package(spark: SparkSession) -> None:
     """Make this package importable on executor Python workers.
 
-    Pandas-UDF closures (mapInPandas/applyInPandas paths) reference this
-    package by module name, so workers must be able to import it. The driver
-    may own the session and run from any cwd, so we ship a zip of the package
-    via ``addPyFile`` — the same mechanism a real cluster submit would use
-    (``--py-files``).
+    Every engine UDF body references the engine (``pyworker.ready()``, the
+    Python-worker contract in ``pyworker.py``), so workers must be able to
+    import it. The driver may own the session and run from any cwd, so we
+    ship a zip of the package via ``addPyFile`` — the same mechanism a real
+    cluster submit would use (``--py-files``).
+
+    Spark may fetch the zip at any point while the context lives, so it
+    stays until the driver process exits: it is written into one
+    ``tempfile.mkdtemp()`` directory per process, which an ``atexit`` hook
+    removes.
     """
+    global _SHIP_DIR
     sc = spark.sparkContext
     app_id = sc.applicationId
     if app_id in _SHIPPED_APPS:
         return
     pkg_dir = pathlib.Path(__file__).resolve().parent
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"{pkg_dir.name}-pyfiles-{os.getpid()}.zip"
-    )
+    if _SHIP_DIR is None:
+        _SHIP_DIR = tempfile.mkdtemp(prefix=f"{pkg_dir.name}-pyfiles-")
+        atexit.register(shutil.rmtree, _SHIP_DIR, ignore_errors=True)
+    zip_path = os.path.join(_SHIP_DIR, f"{pkg_dir.name}.zip")
     with zipfile.ZipFile(zip_path, "w") as zf:
         for py in sorted(pkg_dir.rglob("*.py")):
             zf.write(py, arcname=str(pathlib.Path(pkg_dir.name) / py.relative_to(pkg_dir)))

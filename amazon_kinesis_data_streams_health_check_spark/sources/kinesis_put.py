@@ -60,6 +60,10 @@ class KinesisPutWriter(DataSourceWriter):
         self.stream = options.get("stream", "health-check-stream")
 
     def write(self, iterator) -> _PutCommit:
+        # Imported in the body for the reason given in kinesis_sim._read_shard:
+        # this module is pickled by value; writes run on executors.
+        from amazon_kinesis_data_streams_health_check_spark import pyworker  # noqa: F401
+
         os.makedirs(os.path.join(self.path, "_pending"), exist_ok=True)
         rel = f"{uuid.uuid4().hex}.jsonl"
         tmp = os.path.join(self.path, "_pending", rel)

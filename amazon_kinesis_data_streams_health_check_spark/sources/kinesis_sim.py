@@ -83,6 +83,11 @@ class _ShardPartition(InputPartition):
 
 
 def _read_shard(p: _ShardPartition) -> Iterator[tuple]:
+    # Imported in the body: this module is pickled by value (see
+    # register_kinesis_sim), and a module-level reference would make the
+    # driver-side runner, which cannot import the engine, import it too.
+    # Shard reads run on executors, where the shipped package is importable.
+    from amazon_kinesis_data_streams_health_check_spark import pyworker  # noqa: F401
     o = p.opts
     for seq in range(p.start_seq, p.end_seq):
         yield _record(

@@ -32,6 +32,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from amazon_kinesis_data_streams_health_check_spark import pyworker
+
 CUSUM_OUTPUT_SCHEMA = StructType(
     [
         StructField("stream_name", StringType()),
@@ -65,6 +67,7 @@ def make_cusum_fn():
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        pyworker.ready()
         stream_name = key[0]
         if state.exists:
             p_pos, p_neg, lo_pos, lo_neg = state.get
@@ -141,6 +144,7 @@ def make_hysteresis_fn(hi_milli: int = _HYST_HI_MILLI, lo_milli: int = _HYST_LO_
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        pyworker.ready()
         stream_name = key[0]
         cur = state.get[0] if state.exists else "OK"
         seen_any = state.exists  # a prior period exists => lag() is defined

@@ -33,6 +33,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from amazon_kinesis_data_streams_health_check_spark import pyworker
+
 ENS_WIN = 60
 ENS_MIN = 30
 ENS_K2 = 9
@@ -70,6 +72,7 @@ def make_ensemble_fn():
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        pyworker.ready()
         stream_name = key[0]
         if state.exists:
             hist, p_pos, lo_pos = state.get

@@ -33,6 +33,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from amazon_kinesis_data_streams_health_check_spark import pyworker
+
 EWMA_H = 12
 EWMA_MULT = 2
 _FULL_MASS = (1 << EWMA_H) - 1
@@ -68,6 +70,7 @@ def make_ewma_fn(h: int = EWMA_H, mult: int = EWMA_MULT):
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        pyworker.ready()
         stream_name = key[0]
         hist: list[int] = list(state.get[0]) if state.exists else []
 

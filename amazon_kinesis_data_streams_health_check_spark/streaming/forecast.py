@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from amazon_kinesis_data_streams_health_check_spark import pyworker
+
 FORECAST_H = 3
 
 FORECAST_OUTPUT_SCHEMA = StructType(
@@ -55,6 +57,7 @@ def make_forecast_fn(h: int = FORECAST_H):
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        pyworker.ready()
         stream_name = key[0]
         hist: list[int] = list(state.get[0]) if state.exists else []
 

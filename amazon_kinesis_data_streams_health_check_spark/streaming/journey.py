@@ -35,6 +35,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from amazon_kinesis_data_streams_health_check_spark import pyworker
+
 JOURNEY_OUTPUT_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -71,6 +73,7 @@ def make_journey_fn(costs: dict[tuple[str, str], int]):
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        pyworker.ready()
         user_id = int(key[0])
         if state.exists:
             last_type, n_trans, sum_bits = state.get

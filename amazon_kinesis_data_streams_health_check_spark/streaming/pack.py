@@ -32,6 +32,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from amazon_kinesis_data_streams_health_check_spark import pyworker
+
 PACK_OUTPUT_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -54,6 +56,7 @@ def make_pack_fn(budget: int):
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        pyworker.ready()
         source = str(key[0])
         cum = int(state.get[0]) if state.exists else 0
 

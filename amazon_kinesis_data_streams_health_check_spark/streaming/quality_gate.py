@@ -35,6 +35,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from amazon_kinesis_data_streams_health_check_spark import pyworker
+
 GATE_OUTPUT_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -60,6 +62,7 @@ def gate_fn(
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
+    pyworker.ready()
     source = str(key[0])
     if state.exists:
         n_seen, n_passed = (int(x) for x in state.get)

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StructField, StructType
 
+from amazon_kinesis_data_streams_health_check_spark import pyworker
+
 RL_OUTPUT_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -54,6 +56,7 @@ def make_rate_limit_fn(cap: int, refill_s: int):
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        pyworker.ready()
         user_id = int(key[0])
         if state.exists:
             last_s, tokens, n_thr, n_ev = state.get

@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from amazon_kinesis_data_streams_health_check_spark import pyworker
+
 SPRT_STEP_MBITS = 290
 SPRT_BOUND_MBITS = 4248
 
@@ -55,6 +57,7 @@ def make_sprt_fn(step: int = SPRT_STEP_MBITS):
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        pyworker.ready()
         stream_name = key[0]
         llr, trials = (state.get if state.exists else (0, 0))
 

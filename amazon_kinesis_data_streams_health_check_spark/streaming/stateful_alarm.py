@@ -12,6 +12,13 @@ transition only).
 
 State is one tiny tuple per stream key — state-store pressure is O(streams),
 independent of event volume, so this scales to any input rate.
+
+The alarm itself takes a few milliseconds per key; a small micro-batch's cost
+is the Arrow/Python boundary. Each stateful task starts two Python worker
+invocations (new data, then the timeout pass), and on CPython < 3.13 each one
+re-read ``pyspark.zip`` (0.1-0.3 s) before the UDF ran. Every alarm function
+here calls ``pyworker.ready()``, which brings the engine's lazy zip-cache
+invalidation onto the worker (``pyworker.py``).
 """
 
 from __future__ import annotations
@@ -31,6 +38,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from amazon_kinesis_data_streams_health_check_spark import pyworker
 
 #: Output row shape (mirrors the batch alert shape, FIXTURES.md section 5,
 #: with processing-time semantics).
@@ -62,6 +71,7 @@ def make_alarm_fn(threshold: float = 1.0, timeout_ms: int = 60_000):
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        pyworker.ready()
         stream_name = key[0]
         prev_state, n_seen = state.get if state.exists else ("OK", 0)
 
@@ -142,6 +152,7 @@ def make_event_time_alarm_fn(threshold: float = 1.0, gap_ms: int = 60_000):
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        pyworker.ready()
         stream_name = key[0]
         prev_state, n_seen, max_ts_ms = (
             state.get if state.exists else ("OK", 0, 0)
@@ -247,6 +258,7 @@ def make_period_alarm_fn(
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        pyworker.ready()
         stream_name = key[0]
         if state.exists:
             cur_state, last_ws = state.get

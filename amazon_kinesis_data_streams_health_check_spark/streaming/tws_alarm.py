@@ -51,6 +51,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from amazon_kinesis_data_streams_health_check_spark import pyworker
+
 try:  # pragma: no cover - availability depends on the deployment image
     import google.protobuf  # noqa: F401
 
@@ -120,6 +122,7 @@ class CloudWatchAlarmProcessor(StatefulProcessor):
 
     # -- lifecycle ---------------------------------------------------------
     def init(self, handle: StatefulProcessorHandle) -> None:
+        pyworker.ready()
         self.handle = handle
         self.machine = handle.getValueState("machine", "cur_state STRING")
         self.flags = handle.getListState("flags", "breached INT")

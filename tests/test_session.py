@@ -3,8 +3,14 @@ builder re-applies the contract to a session it did not build."""
 
 from __future__ import annotations
 
+import atexit
+import os
+import tempfile
+import zipfile
+
 import pytest
 
+from amazon_kinesis_data_streams_health_check_spark import session
 from amazon_kinesis_data_streams_health_check_spark.plans.registry import get
 from amazon_kinesis_data_streams_health_check_spark.session import (
     RUNTIME_CONFS,
@@ -59,3 +65,39 @@ def test_registry_builder_reapplies_contract_to_foreign_session(spark, sf_small)
         assert spark.conf.get(ansi) == RUNTIME_CONFS[ansi] == "false"
     finally:
         configure_session(spark)
+
+
+class _ShipContext:
+    applicationId = "app-ship-test"
+
+    def __init__(self):
+        self.py_files: list[str] = []
+
+    def addPyFile(self, path):
+        self.py_files.append(path)
+
+
+class _ShipSession:
+    def __init__(self):
+        self.sparkContext = _ShipContext()
+
+
+def test_shipped_package_zip_is_removed_at_exit(monkeypatch, tmp_path):
+    """The zip outlives the call (Spark fetches it while the context lives)
+    and the one exit hook removes it with its directory."""
+    hooks = []
+    monkeypatch.setattr(atexit, "register", lambda fn, *a, **kw: hooks.append((fn, a, kw)))
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(session, "_SHIPPED_APPS", set())
+    monkeypatch.setattr(session, "_SHIP_DIR", None)
+    fake = _ShipSession()
+    session._ship_package(fake)
+    session._ship_package(fake)  # same application: shipped once
+
+    (zip_path,) = fake.sparkContext.py_files
+    assert os.path.dirname(os.path.dirname(zip_path)) == str(tmp_path)
+    with zipfile.ZipFile(zip_path) as zf:
+        assert "amazon_kinesis_data_streams_health_check_spark/pyworker.py" in zf.namelist()
+    ((fn, args, kwargs),) = hooks
+    fn(*args, **kwargs)
+    assert os.listdir(tmp_path) == []
