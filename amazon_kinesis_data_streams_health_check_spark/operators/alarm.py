@@ -7,7 +7,7 @@ lag metric grouped by the StreamName dimension, breach when ``> threshold``
 N-of-M datapoint evaluation (``:176,181`` — degenerate 1-of-1 there, general
 here), and actions that fire only on state *transition* (``:178,183``).
 
-All operators are pure DataFrame->DataFrame compositions of built-in
+The batch operators are pure DataFrame->DataFrame compositions of built-in
 functions — no UDFs, no collect. Scale notes:
 
 - the tumbling aggregation is the only wide stage over raw data; it partial-
@@ -15,9 +15,15 @@ functions — no UDFs, no collect. Scale notes:
 - everything after it operates on ``keys x periods`` rows (tiny relative to
   input at any scale), so the grid join and the window functions are cheap;
   AQE broadcasts the aggregated side at runtime.
+
+The streaming alarms (``streaming/stateful_alarm.py``) evaluate one period at
+a time: each calls ``step``, the per-period form of ``evaluate_alarm``, and
+keeps only its own timing (timeouts, watermark gaps, period walks, timers).
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -29,6 +35,62 @@ DEFAULT_THRESHOLD = 1.0
 STATE_OK = "OK"
 STATE_ALARM = "ALARM"
 STATE_INSUFFICIENT = "INSUFFICIENT_DATA"
+
+#: CloudWatch ``TreatMissingData`` spellings -> the vote a missing period
+#: casts into its evaluation slot (None: occupies a slot without voting).
+#: ``ignore`` is absent on purpose: its missing periods take no slot at all.
+_MISSING_VOTE = {"breaching": 1, "notBreaching": 0, "missing": None}
+
+
+@dataclass(frozen=True)
+class AlarmConfig:
+    """The CfnAlarm knobs (KinesisHealthCheckStack.java:165-183)."""
+
+    threshold: float = DEFAULT_THRESHOLD  # breach iff value > threshold
+    evaluation_periods: int = 1  # N
+    datapoints_to_alarm: int = 1  # M
+    missing_data: str = "breaching"  # breaching|notBreaching|ignore|missing
+
+    def __post_init__(self) -> None:
+        if self.missing_data not in (*_MISSING_VOTE, "ignore"):
+            raise ValueError(f"unknown treat_missing: {self.missing_data}")
+        if self.evaluation_periods < 1:
+            raise ValueError(f"evaluation_periods < 1: {self.evaluation_periods}")
+
+
+def step(
+    prev_state: str | None,
+    window: list[int | None],
+    max_value: float | None,
+    cfg: AlarmConfig,
+) -> tuple[str, list[int | None], bool]:
+    """Evaluate one period: ``evaluate_alarm``'s semantics for a single row.
+
+    ``window`` holds the slots of the last N evaluated periods (1 breaching,
+    0 not, None a missing period that votes nothing); ``max_value`` None or
+    NaN is a missing period. Returns ``(state, window, transitioned)``:
+
+    - ``breaching``/``notBreaching``: a missing period votes 1/0 in a slot,
+    - ``missing``: it occupies a slot without voting; INSUFFICIENT_DATA when
+      none of the last N slots is present,
+    - ``ignore``: it neither votes nor takes a slot and keeps the previous
+      state (OK when there is none),
+    - ALARM iff >= M slots breach, breach being strict ``> threshold``,
+    - ``transitioned`` only against a previous state (actions on transition).
+    """
+    missing = max_value is None or max_value != max_value  # None or NaN
+    if missing and cfg.missing_data == "ignore":
+        state = prev_state or STATE_OK
+    else:
+        vote = _MISSING_VOTE[cfg.missing_data] if missing else int(max_value > cfg.threshold)
+        window = [*window, vote][-cfg.evaluation_periods :]
+        if cfg.missing_data == "missing" and all(v is None for v in window):
+            state = STATE_INSUFFICIENT
+        elif sum(v for v in window if v) >= cfg.datapoints_to_alarm:
+            state = STATE_ALARM
+        else:
+            state = STATE_OK
+    return state, list(window), prev_state is not None and state != prev_state
 
 
 def tumbling_max(
@@ -156,14 +218,16 @@ def evaluate_alarm(
     - ``treat_missing``: 'breaching' | 'notBreaching' | 'ignore' (missing
       periods inherit the previous resolved state, and present periods
       evaluate M-of-N over the most recent N PRESENT datapoints — missing
-      periods neither vote nor occupy evaluation slots, matching CloudWatch
-      and the transformWithState twin in streaming/tws_alarm.py) | 'missing'
-      (INSUFFICIENT_DATA when every period in the eval window is absent),
+      periods neither vote nor occupy evaluation slots, as in CloudWatch)
+      | 'missing' (INSUFFICIENT_DATA when every period in the eval window
+      is absent),
     - ``transitioned`` true when state differs from the previous period's
       state (actions fire only on transition, :178,183).
+
+    ``step`` is the same machine one period at a time; the streaming alarms
+    call it, and tests/test_alarm_step.py holds every variant equal to this.
     """
-    if treat_missing not in {"breaching", "notBreaching", "ignore", "missing"}:
-        raise ValueError(f"unknown treat_missing: {treat_missing}")
+    AlarmConfig(threshold, evaluation_periods, datapoints_to_alarm, treat_missing)  # validates
 
     missing = F.col("max_value").isNull()
     over_threshold = F.col("max_value") > F.lit(threshold)

@@ -1083,20 +1083,21 @@ def composite_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_datapoints"),
         )
     )
-    gridded = with_period_grid(metrics)
-    lag_state = F.when(
-        F.col("max_value").isNotNull() & (F.col("max_value") > FLAGSHIP_THRESHOLD),
-        F.lit("ALARM"),
-    ).otherwise(F.lit("OK"))
+    # Lag child: the reference alarm with missing=notBreaching.
+    lag_child = evaluate_alarm(
+        with_period_grid(metrics),
+        threshold=FLAGSHIP_THRESHOLD,
+        treat_missing="notBreaching",
+    )
     data_state = F.when(F.col("n_datapoints") == 0, F.lit("ALARM")).otherwise(
         F.lit("OK")
     )
-    comp = gridded.select(
+    comp = lag_child.select(
         "stream_name",
         "window_start",
         F.col("max_value").cast("double").alias("max_lag"),
         "n_datapoints",
-        lag_state.alias("lag_state"),
+        F.col("state").alias("lag_state"),
         data_state.alias("data_state"),
     ).withColumn(
         "state",

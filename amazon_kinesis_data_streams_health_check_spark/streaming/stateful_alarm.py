@@ -1,35 +1,53 @@
-"""W4/W6: the stateful heartbeat-timeout alarm — the one genuinely stateful
-piece of streaming engineering in the pipeline (SURVEY.md section 4).
+"""W4/W6: the streaming forms of the CloudWatch alarm — the one genuinely
+stateful piece of streaming engineering in the pipeline (SURVEY.md section 4).
 
 CloudWatch's ``TreatMissingData.BREACHING`` (KinesisHealthCheckStack.java:179)
 fires the alarm when metrics STOP ARRIVING — a negative condition no
-per-record operator can produce. Streaming form: ``applyInPandasWithState``
-keyed by stream_name with a processing-time timeout approximately equal to
-the alarm period; when a key's timeout expires with no new data, a synthetic
-breaching row is emitted and the alarm transitions to ALARM
-(state machine per KinesisHealthCheckStack.java:172-183: OK/ALARM, actions on
-transition only).
+per-record operator can produce. Each variant here turns silence into a
+missing period with its own timer, and hands every period, present or
+missing, to ``operators.alarm.step``: the one alarm state machine, the
+batch ``evaluate_alarm``'s semantics one period at a time. The variants
+differ only in timing:
 
-State is one tiny tuple per stream key — state-store pressure is O(streams),
-independent of event volume, so this scales to any input rate.
+- ``alarm_state_stream``: ``applyInPandasWithState`` with a processing-time
+  timeout (heartbeat silence, wall-clock paced);
+- ``alarm_state_stream_event_time``: an event-time timeout, so absence is
+  judged against the watermark and a replay gives the same alarms;
+- ``period_alarm_stream``: walks a per-period max feed in order and
+  synthesizes every period the feed skipped (the oracle-checked form);
+- ``alarm_tws_stream``: a ``transformWithStateInPandas`` processor with the
+  full M-of-N and ``TreatMissingData`` config, a processing-time timer per
+  key and typed state (``ValueState`` for the state, ``ListState`` for the
+  evaluation window).
+
+State is O(streams) (x N slots for the TWS window), independent of event
+volume. The processing- and event-time variants seed the previous state with
+OK; the period walk starts with none, as the batch does.
+
+The TWS state-server protocol needs ``google.protobuf`` on the Python
+workers; without it ``TWS_AVAILABLE`` is False and ``alarm_tws_stream``
+raises. The processor itself is tested through fake state handles either way
+(tests/test_tws_alarm.py, tests/test_alarm_step.py).
 
 The alarm itself takes a few milliseconds per key; a small micro-batch's cost
-is the Arrow/Python boundary. Each stateful task starts two Python worker
-invocations (new data, then the timeout pass), and on CPython < 3.13 each one
-re-read ``pyspark.zip`` (0.1-0.3 s) before the UDF ran. Every alarm function
-here calls ``pyworker.ready()``, which brings the engine's lazy zip-cache
-invalidation onto the worker (``pyworker.py``).
+is the Arrow/Python boundary. Every UDF body here calls ``pyworker.ready()``,
+which brings the engine's lazy zip-cache invalidation onto the worker
+(``pyworker.py``).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from typing import Any
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.stateful_processor import (
+    StatefulProcessor,
+    StatefulProcessorHandle,
+)
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -40,13 +58,25 @@ from pyspark.sql.types import (
 )
 
 from amazon_kinesis_data_streams_health_check_spark import pyworker
+from amazon_kinesis_data_streams_health_check_spark.operators.alarm import (
+    STATE_OK,
+    AlarmConfig,
+    step,
+)
+
+try:  # pragma: no cover - availability depends on the deployment image
+    import google.protobuf  # noqa: F401
+
+    TWS_AVAILABLE = True
+except Exception:  # pragma: no cover
+    TWS_AVAILABLE = False
 
 #: Output row shape (mirrors the batch alert shape, FIXTURES.md section 5,
 #: with processing-time semantics).
 ALARM_OUTPUT_SCHEMA = StructType(
     [
         StructField("stream_name", StringType()),
-        StructField("reason", StringType()),  # 'data' | 'timeout'
+        StructField("reason", StringType()),  # 'data' | 'timeout' | 'gap'
         StructField("max_lag", DoubleType()),
         StructField("state", StringType()),
         StructField("prev_state", StringType()),
@@ -54,17 +84,29 @@ ALARM_OUTPUT_SCHEMA = StructType(
     ]
 )
 
-#: Persisted state: current alarm state + datapoints seen.
-ALARM_STATE_SCHEMA = StructType(
-    [
-        StructField("cur_state", StringType()),
-        StructField("n_seen", LongType()),
-    ]
-)
+#: Persisted state: the current alarm state.
+ALARM_STATE_SCHEMA = StructType([StructField("cur_state", StringType())])
+
+
+def period_max(chunks: Iterable[pd.DataFrame], col: str = "value") -> float | None:
+    """Max of ``col`` over one key's Arrow chunks, NULL/NaN skipped; None (a
+    missing period) when no chunk holds a value. Python's ``max`` would make
+    the result depend on chunk order: ``max(nan, 2.0)`` is nan."""
+    present = [m for m in (c[col].max() for c in chunks) if pd.notna(m)]
+    return float(max(present)) if present else None
+
+
+def _row(schema: StructType, **cols: Any) -> pd.DataFrame:
+    """One output row, in ``schema``'s column order."""
+    return pd.DataFrame({f.name: [cols[f.name]] for f in schema.fields})
 
 
 def make_alarm_fn(threshold: float = 1.0, timeout_ms: int = 60_000):
-    """Build the applyInPandasWithState function for a given threshold/period."""
+    """Build the applyInPandasWithState function for a given threshold/period.
+
+    Each call evaluates one period: the key's new rows, or its timeout with
+    none (a missing period). N = 1, so no evaluation window is kept."""
+    cfg = AlarmConfig(threshold=threshold)
 
     def alarm_fn(
         key: tuple[Any, ...],
@@ -72,45 +114,22 @@ def make_alarm_fn(threshold: float = 1.0, timeout_ms: int = 60_000):
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
         pyworker.ready()
-        stream_name = key[0]
-        prev_state, n_seen = state.get if state.exists else ("OK", 0)
-
-        if state.hasTimedOut:
-            # Heartbeat stopped: missing data => BREACHING => ALARM.
-            new_state = "ALARM"
-            out = pd.DataFrame(
-                {
-                    "stream_name": [stream_name],
-                    "reason": ["timeout"],
-                    "max_lag": [None],
-                    "state": [new_state],
-                    "prev_state": [prev_state],
-                    "transitioned": [new_state != prev_state],
-                }
-            )
-            state.update((new_state, n_seen))
-            state.setTimeoutDuration(timeout_ms)
-            yield out
-            return
-
-        max_lag = None
-        for pdf in pdfs:
-            if len(pdf):
-                m = pdf["value"].max()
-                max_lag = m if max_lag is None else max(max_lag, m)
-                n_seen += len(pdf)
-        new_state = "ALARM" if (max_lag is not None and max_lag > threshold) else "OK"
-        state.update((new_state, n_seen))
+        prev = state.get[0] if state.exists else STATE_OK
+        if state.hasTimedOut:  # heartbeat stopped
+            reason, max_lag = "timeout", None
+        else:
+            reason, max_lag = "data", period_max(pdfs)
+        new, _, transitioned = step(prev, [], max_lag, cfg)
+        state.update((new,))
         state.setTimeoutDuration(timeout_ms)
-        yield pd.DataFrame(
-            {
-                "stream_name": [stream_name],
-                "reason": ["data"],
-                "max_lag": [None if max_lag is None else float(max_lag)],
-                "state": [new_state],
-                "prev_state": [prev_state],
-                "transitioned": [new_state != prev_state],
-            }
+        yield _row(
+            ALARM_OUTPUT_SCHEMA,
+            stream_name=key[0],
+            reason=reason,
+            max_lag=max_lag,
+            state=new,
+            prev_state=prev,
+            transitioned=transitioned,
         )
 
     return alarm_fn
@@ -132,11 +151,10 @@ def alarm_state_stream(
     )
 
 
-#: Event-time variant state: alarm state + datapoints + max event time (ms).
+#: Event-time variant state: alarm state + max event time (ms).
 ALARM_STATE_SCHEMA_ET = StructType(
     [
         StructField("cur_state", StringType()),
-        StructField("n_seen", LongType()),
         StructField("max_ts_ms", LongType()),
     ]
 )
@@ -146,6 +164,7 @@ def make_event_time_alarm_fn(threshold: float = 1.0, gap_ms: int = 60_000):
     """applyInPandasWithState function using EVENT-time timeouts: a key goes
     BREACHING when the stream's watermark (not the wall clock) passes its last
     event time + ``gap_ms``."""
+    cfg = AlarmConfig(threshold=threshold)
 
     def alarm_fn(
         key: tuple[Any, ...],
@@ -153,54 +172,32 @@ def make_event_time_alarm_fn(threshold: float = 1.0, gap_ms: int = 60_000):
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
         pyworker.ready()
-        stream_name = key[0]
-        prev_state, n_seen, max_ts_ms = (
-            state.get if state.exists else ("OK", 0, 0)
-        )
-
+        prev, max_ts_ms = state.get if state.exists else (STATE_OK, 0)
         if state.hasTimedOut:
-            new_state = "ALARM"
-            out = pd.DataFrame(
-                {
-                    "stream_name": [stream_name],
-                    "reason": ["gap"],
-                    "max_lag": [None],
-                    "state": [new_state],
-                    "prev_state": [prev_state],
-                    "transitioned": [new_state != prev_state],
-                }
-            )
+            reason, max_lag = "gap", None
             # No new data: leave the silence armed one gap further out so a
             # still-dead stream re-fires as the watermark keeps advancing.
-            state.update((new_state, n_seen, max_ts_ms))
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + gap_ms)
-            yield out
-            return
-
-        max_lag = None
-        for pdf in pdfs:
-            if len(pdf):
-                m = pdf["value"].max()
-                max_lag = m if max_lag is None else max(max_lag, m)
-                n_seen += len(pdf)
-                batch_max_ms = int(pdf["ts"].max().value // 1_000_000)
-                max_ts_ms = max(max_ts_ms, batch_max_ms)
-        new_state = "ALARM" if (max_lag is not None and max_lag > threshold) else "OK"
-        state.update((new_state, n_seen, max_ts_ms))
-        # Deterministic on replay: the deadline is data-derived (last event
-        # time + gap), clamped above the current watermark as the API requires.
-        state.setTimeoutTimestamp(
-            max(max_ts_ms + gap_ms, state.getCurrentWatermarkMs() + 1)
-        )
-        yield pd.DataFrame(
-            {
-                "stream_name": [stream_name],
-                "reason": ["data"],
-                "max_lag": [None if max_lag is None else float(max_lag)],
-                "state": [new_state],
-                "prev_state": [prev_state],
-                "transitioned": [new_state != prev_state],
-            }
+            deadline = state.getCurrentWatermarkMs() + gap_ms
+        else:
+            chunks = [pdf for pdf in pdfs if len(pdf)]
+            reason, max_lag = "data", period_max(chunks)
+            for pdf in chunks:
+                max_ts_ms = max(max_ts_ms, int(pdf["ts"].max().value // 1_000_000))
+            # Deterministic on replay: the deadline is data-derived (last
+            # event time + gap), clamped above the current watermark as the
+            # API requires.
+            deadline = max(max_ts_ms + gap_ms, state.getCurrentWatermarkMs() + 1)
+        new, _, transitioned = step(prev, [], max_lag, cfg)
+        state.update((new, max_ts_ms))
+        state.setTimeoutTimestamp(deadline)
+        yield _row(
+            ALARM_OUTPUT_SCHEMA,
+            stream_name=key[0],
+            reason=reason,
+            max_lag=max_lag,
+            state=new,
+            prev_state=prev,
+            transitioned=transitioned,
         )
 
     return alarm_fn
@@ -237,14 +234,12 @@ def make_period_alarm_fn(
     """Build the applyInPandasWithState function that walks the period grid.
 
     The reference alarm evaluates EVERY period in order
-    (KinesisHealthCheckStack.java:165-183: 1-min max -> ``> threshold`` ->
-    ``TreatMissingData.BREACHING`` -> actions on transition only). The state
-    machine here consumes per-(stream, period) max rows sorted by period and
-    synthesizes the BREACHING evaluation for every period the feed skipped —
-    so its output is one row per grid period, byte-identical to the batch
-    ``alarm_pipeline`` whatever the micro-batch slicing was, as long as
-    periods arrive in nondecreasing order per key (the bounded drive orders
-    its feed files by modification time).
+    (KinesisHealthCheckStack.java:165-183). The walk consumes per-(stream,
+    period) max rows sorted by period and evaluates every period the feed
+    skipped as missing — so its output is one row per grid period,
+    byte-identical to the batch ``alarm_pipeline`` whatever the micro-batch
+    slicing was, as long as periods arrive in nondecreasing order per key
+    (the bounded drive orders its feed files by modification time).
 
     A row with ``ws_s > hi_s`` is a flush sentinel: it walks the remaining
     missing periods out to ``hi_s`` and emits nothing for itself.
@@ -252,6 +247,7 @@ def make_period_alarm_fn(
     State is one (state, last-period) pair per stream — O(streams),
     independent of event volume.
     """
+    cfg = AlarmConfig(threshold=threshold)
 
     def alarm_fn(
         key: tuple[Any, ...],
@@ -265,27 +261,18 @@ def make_period_alarm_fn(
         else:
             cur_state, last_ws = None, lo_s - period_s
 
-        out: dict[str, list] = {
-            "stream_name": [],
-            "ws_s": [],
-            "max_lag": [],
-            "n_datapoints": [],
-            "state": [],
-            "prev_state": [],
-            "transitioned": [],
-        }
+        out: dict[str, list] = {f.name: [] for f in PERIOD_ALARM_OUTPUT_SCHEMA.fields}
 
         def emit(ws: int, max_v, n: int) -> None:
             nonlocal cur_state, last_ws
-            breaching = max_v is None or max_v > threshold
-            new_state = "ALARM" if breaching else "OK"
+            new_state, _, transitioned = step(cur_state, [], max_v, cfg)
             out["stream_name"].append(stream_name)
             out["ws_s"].append(ws)
             out["max_lag"].append(max_v)
             out["n_datapoints"].append(n)
             out["state"].append(new_state)
             out["prev_state"].append(cur_state)
-            out["transitioned"].append(cur_state is not None and new_state != cur_state)
+            out["transitioned"].append(transitioned)
             cur_state = new_state
             last_ws = ws
 
@@ -346,4 +333,102 @@ def alarm_state_stream_event_time(
             outputMode="update",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
+    )
+
+
+#: TWS output schema: one row per (key, period evaluation).
+TWS_ALARM_OUTPUT_SCHEMA = StructType(
+    [
+        StructField("stream_name", StringType()),
+        StructField("reason", StringType()),  # 'data' | 'missing'
+        StructField("max_lag", DoubleType()),
+        StructField("n_breaching", LongType()),  # of the window's slots
+        StructField("state", StringType()),
+        StructField("prev_state", StringType()),
+        StructField("transitioned", BooleanType()),
+    ]
+)
+
+
+class CloudWatchAlarmProcessor(StatefulProcessor):
+    """transformWithStateInPandas processor: one evaluation per micro-batch
+    with data, plus a timer-driven evaluation for each silent period."""
+
+    def __init__(self, cfg: AlarmConfig | None = None, period_ms: int = 60_000) -> None:
+        self.cfg = cfg or AlarmConfig()
+        self.period_ms = period_ms
+
+    def init(self, handle: StatefulProcessorHandle) -> None:
+        pyworker.ready()
+        self.handle = handle
+        self.machine = handle.getValueState("machine", "cur_state STRING")
+        self.window = handle.getListState("flags", "breached INT")
+
+    def close(self) -> None:  # pragma: no cover - nothing to release
+        pass
+
+    def _evaluate(
+        self, key: tuple[Any, ...], reason: str, max_lag: float | None, timerValues: Any
+    ) -> pd.DataFrame:
+        prev = self.machine.get()[0] if self.machine.exists() else STATE_OK
+        window = (  # a NULL (missing-period) slot may read back as NaN
+            [None if pd.isna(v) else int(v) for (v,) in self.window.get()]
+            if self.window.exists()
+            else []
+        )
+        state, window, transitioned = step(prev, window, max_lag, self.cfg)
+        self.machine.update((state,))
+        if window:
+            self.window.put([(v,) for v in window])
+        else:
+            self.window.clear()
+        # One live timer per key: drop stale ones, arm the next period edge.
+        for t in self.handle.listTimers():
+            self.handle.deleteTimer(t)
+        self.handle.registerTimer(
+            timerValues.getCurrentProcessingTimeInMs() + self.period_ms
+        )
+        return _row(
+            TWS_ALARM_OUTPUT_SCHEMA,
+            stream_name=key[0],
+            reason=reason,
+            max_lag=max_lag,
+            n_breaching=sum(v for v in window if v),
+            state=state,
+            prev_state=prev,
+            transitioned=transitioned,
+        )
+
+    def handleInputRows(
+        self, key: tuple[Any, ...], rows: Iterator[pd.DataFrame], timerValues: Any
+    ) -> Iterator[pd.DataFrame]:
+        yield self._evaluate(key, "data", period_max(rows), timerValues)
+
+    def handleExpiredTimer(
+        self, key: tuple[Any, ...], timerValues: Any, expiredTimerInfo: Any
+    ) -> Iterator[pd.DataFrame]:
+        yield self._evaluate(key, "missing", None, timerValues)
+
+
+def alarm_tws_stream(metrics: DataFrame, cfg: AlarmConfig | None = None) -> DataFrame:
+    """metric rows (stream_name, value, ...) -> alarm evaluations via
+    transformWithStateInPandas, one period per 60 s timer (the processor's
+    default ``period_ms``). Requires protobuf on workers (TWS_AVAILABLE)
+    and the RocksDB state store provider (set it before starting the query):
+
+        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider")
+    """
+    if not TWS_AVAILABLE:  # pragma: no cover - exercised only without protobuf
+        raise NotImplementedError(
+            "transformWithStateInPandas needs google.protobuf on the Python "
+            "workers, which is not installed. Use alarm_state_stream "
+            "(applyInPandasWithState) here."
+        )
+    return metrics.groupBy("stream_name").transformWithStateInPandas(
+        CloudWatchAlarmProcessor(cfg),
+        outputStructType=TWS_ALARM_OUTPUT_SCHEMA,
+        outputMode="Update",
+        timeMode="ProcessingTime",
     )

@@ -2,7 +2,8 @@
 
 - asof_join vs pandas.merge_asof (independent reference implementation),
 - the CloudWatch alarm pipeline (grid + treat-missing + N-of-M + transitions)
-  vs a direct Python state-machine model.
+  and the per-period ``step`` it shares with the streaming alarms, both vs a
+  direct Python state-machine model.
 
 Example counts are kept small: each example drives real Spark jobs.
 """
@@ -16,7 +17,9 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from amazon_kinesis_data_streams_health_check_spark.operators.alarm import (
+    AlarmConfig,
     evaluate_alarm,
+    step,
     with_period_grid,
 )
 from amazon_kinesis_data_streams_health_check_spark.operators.temporal import asof_join
@@ -157,6 +160,28 @@ def test_alarm_matches_model(spark, points, m, policy, data):
         )
         for r in evaluated.collect()
     }
+    assert got == _alarm_model(points, 1.0, m, n, policy)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    points=st.dictionaries(
+        st.integers(0, 12), st.sampled_from([0.5, 1.0, 1.5, 3.0]), min_size=1, max_size=10
+    ),
+    m=st.integers(1, 4),
+    policy=st.sampled_from(["breaching", "notBreaching", "ignore", "missing"]),
+    data=st.data(),
+)
+def test_alarm_step_fold_matches_model(points, m, policy, data):
+    """Spark-free: ``step`` folded over the period grid is the same machine
+    as the model (and so as ``evaluate_alarm``), prev_state included."""
+    n = data.draw(st.integers(1, m))
+    cfg = AlarmConfig(1.0, evaluation_periods=m, datapoints_to_alarm=n, missing_data=policy)
+    got, state, window = {}, None, []
+    for t in range(min(points), max(points) + 1):
+        prev = state
+        state, window, moved = step(prev, window, points.get(t), cfg)
+        got[t] = (state, prev, moved)
     assert got == _alarm_model(points, 1.0, m, n, policy)
 
 

@@ -3,7 +3,8 @@
 The container lacks protobuf, so the real TWS drive is gated; the processor
 is exercised end-to-end through fake typed-state handles (same call pattern
 the TWS runtime uses: init -> handleInputRows / handleExpiredTimer), and the
-M-of-N + missing-data state machine is pinned as a pure function.
+M-of-N + missing-data state machine it calls (``operators.alarm.step``) is
+pinned as a pure function.
 """
 
 from __future__ import annotations
@@ -11,14 +12,14 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from amazon_kinesis_data_streams_health_check_spark.streaming.tws_alarm import (
-    MISSING_BREACHING,
-    MISSING_IGNORE,
-    MISSING_NOT_BREACHING,
-    TWS_AVAILABLE,
+from amazon_kinesis_data_streams_health_check_spark.operators.alarm import (
     AlarmConfig,
+    evaluate_alarm,
+    step,
+)
+from amazon_kinesis_data_streams_health_check_spark.streaming.stateful_alarm import (
+    TWS_AVAILABLE,
     CloudWatchAlarmProcessor,
-    evaluate_period,
 )
 
 
@@ -29,35 +30,60 @@ def test_one_of_one_matches_reference_config():
     """The reference deploys N=1/M=1: every breaching period alarms, every
     clean period clears (KinesisHealthCheckStack.java:175-181)."""
     cfg = AlarmConfig(evaluation_periods=1, datapoints_to_alarm=1)
-    flags, n, state = evaluate_period([], 1, cfg, "OK")
-    assert (flags, n, state) == ([1], 1, "ALARM")
-    flags, n, state = evaluate_period(flags, 0, cfg, state)
-    assert (flags, n, state) == ([0], 0, "OK")
+    state, window, moved = step("OK", [], 2.0, cfg)
+    assert (state, window, moved) == ("ALARM", [1], True)
+    state, window, moved = step(state, window, 0.5, cfg)
+    assert (state, window, moved) == ("OK", [0], True)
 
 
 def test_m_of_n_requires_m_breaches():
     cfg = AlarmConfig(evaluation_periods=3, datapoints_to_alarm=2)
-    flags, state = [], "OK"
-    flags, n, state = evaluate_period(flags, 1, cfg, state)
+    state, window = "OK", []
+    state, window, _ = step(state, window, 2.0, cfg)
     assert state == "OK"  # 1 of 3 < M
-    flags, n, state = evaluate_period(flags, 0, cfg, state)
+    state, window, _ = step(state, window, 0.5, cfg)
     assert state == "OK"
-    flags, n, state = evaluate_period(flags, 1, cfg, state)
-    assert (n, state) == (2, "ALARM")  # window [1,0,1]
-    # Oldest breach slides out: [0,1,X]
-    flags, n, state = evaluate_period(flags, 0, cfg, state)
-    assert (n, state) == (1, "OK")
+    state, window, moved = step(state, window, 2.0, cfg)
+    assert (window, state, moved) == ([1, 0, 1], "ALARM", True)
+    # Oldest breach slides out: [0,1,0]
+    state, window, _ = step(state, window, 0.5, cfg)
+    assert (window, state) == ([0, 1, 0], "OK")
 
 
-def test_missing_ignore_holds_state_until_full_window():
-    cfg = AlarmConfig(
-        evaluation_periods=3, datapoints_to_alarm=2, missing_data=MISSING_IGNORE
-    )
-    # Insufficient data (window shorter than N) -> hold previous state.
-    flags, n, state = evaluate_period([1], None, cfg, "ALARM")
-    assert (flags, state) == ([1], "ALARM")
-    flags, n, state = evaluate_period([0, 0, 0], None, cfg, "ALARM")
-    assert state == "OK"  # full window of clean periods clears
+def test_threshold_is_strict_and_nan_is_missing():
+    cfg = AlarmConfig(threshold=1.0, missing_data="notBreaching")
+    assert step("OK", [], 1.0, cfg)[0] == "OK"  # GREATER_THAN, not >=
+    assert step("OK", [], float("nan"), cfg)[:2] == ("OK", [0])
+    assert step("OK", [], float("nan"), AlarmConfig())[:2] == ("ALARM", [1])
+
+
+def test_missing_ignore_first_breach_alarms_without_full_window():
+    """Under ``ignore`` a missing period takes no slot and keeps the state,
+    and a present period is judged on the slots it has: N=3, M=1 alarms on
+    the first breach, as the batch ``evaluate_alarm`` does."""
+    cfg = AlarmConfig(evaluation_periods=3, datapoints_to_alarm=1, missing_data="ignore")
+    assert step("OK", [], None, cfg) == ("OK", [], False)
+    assert step(None, [], None, cfg) == ("OK", [], False)
+    assert step("OK", [], 2.0, cfg) == ("ALARM", [1], True)
+    # A missing period holds ALARM and leaves the window untouched.
+    assert step("ALARM", [1], None, cfg) == ("ALARM", [1], False)
+
+
+def test_missing_policy_is_insufficient_only_without_present_slots():
+    cfg = AlarmConfig(evaluation_periods=2, datapoints_to_alarm=1, missing_data="missing")
+    assert step(None, [], None, cfg) == ("INSUFFICIENT_DATA", [None], False)
+    assert step("OK", [0], None, cfg) == ("OK", [0, None], False)
+    assert step("OK", [0, None], None, cfg) == ("INSUFFICIENT_DATA", [None, None], True)
+
+
+def test_unknown_policy_raises_in_streaming_and_batch():
+    """One vocabulary (CloudWatch's spellings), validated once by
+    ``AlarmConfig``: the streaming config and the batch operator both raise
+    instead of treating an unknown policy as not-breaching."""
+    with pytest.raises(ValueError, match="not_breaching"):
+        AlarmConfig(missing_data="not_breaching")
+    with pytest.raises(ValueError, match="not_breaching"):
+        evaluate_alarm(None, treat_missing="not_breaching")  # raises before any plan
 
 
 # ---------------------------------------------------------------------------
@@ -125,7 +151,7 @@ def _drive(proc, key, values, tv):
 def test_processor_data_then_silence_breaches():
     """Healthy heartbeat -> OK; timer fires on silence -> BREACHING -> ALARM;
     recovery heartbeat -> OK again. One live timer per key throughout."""
-    proc = CloudWatchAlarmProcessor(AlarmConfig(threshold=1.0, period_ms=60_000))
+    proc = CloudWatchAlarmProcessor(AlarmConfig(threshold=1.0), period_ms=60_000)
     h = FakeHandle()
     proc.init(h)
     tv = FakeTimerValues(1_000_000)
@@ -149,7 +175,7 @@ def test_processor_data_then_silence_breaches():
 
 def test_processor_not_breaching_policy_keeps_ok():
     proc = CloudWatchAlarmProcessor(
-        AlarmConfig(threshold=1.0, missing_data=MISSING_NOT_BREACHING)
+        AlarmConfig(threshold=1.0, missing_data="notBreaching")
     )
     h = FakeHandle()
     proc.init(h)
@@ -180,7 +206,7 @@ def test_tws_stream_end_to_end(spark, tmp_path):  # pragma: no cover
     from amazon_kinesis_data_streams_health_check_spark.streaming.pipeline import (
         drain_to_memory,
     )
-    from amazon_kinesis_data_streams_health_check_spark.streaming.tws_alarm import (
+    from amazon_kinesis_data_streams_health_check_spark.streaming.stateful_alarm import (
         alarm_tws_stream,
     )
 
