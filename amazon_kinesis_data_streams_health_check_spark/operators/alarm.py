@@ -263,32 +263,33 @@ def evaluate_alarm(
         # Missing periods inherit the last resolved state (CloudWatch "keep
         # current state"); leading missing periods resolve to OK. Present
         # periods evaluate over the last N PRESENT datapoints — a trailing
-        # window on the grid would let empty slots dilute the breach count
-        # (r01 advice: batch disagreed with the TWS twin on gappy data).
-        trailing_present = (
+        # window on the grid would let empty slots dilute the breach count.
+        # Numbering the present periods, the range window over that number
+        # spans exactly the last N of them; the missing rows it also spans
+        # add 0 breaches.
+        df = df.withColumn(
+            "present_seq",
+            F.sum((~missing).cast("int")).over(
+                order.rowsBetween(Window.unboundedPreceding, 0)
+            ),
+        )
+        last_n_present = (
             Window.partitionBy(key_col)
-            .orderBy("window_start")
-            .rowsBetween(-(evaluation_periods - 1), 0)
+            .orderBy("present_seq")
+            .rangeBetween(-(evaluation_periods - 1), 0)
         )
-        pres = (
-            gridded.filter(F.col("max_value").isNotNull())
-            .withColumn(
-                "_breach_p",
-                F.sum((F.col("max_value") > F.lit(threshold)).cast("int")).over(
-                    trailing_present
-                ),
-            )
-            .select(
-                F.col(key_col),
-                F.col("window_start"),
+        breach_present = F.sum(
+            F.coalesce(F.col("breaching").cast("int"), F.lit(0))
+        ).over(last_n_present)
+        df = df.withColumn(
+            "state_pt",
+            F.when(
+                ~missing,
                 F.when(
-                    F.col("_breach_p") >= F.lit(datapoints_to_alarm), F.lit(STATE_ALARM)
-                )
-                .otherwise(F.lit(STATE_OK))
-                .alias("state_pt"),
-            )
+                    breach_present >= F.lit(datapoints_to_alarm), F.lit(STATE_ALARM)
+                ).otherwise(F.lit(STATE_OK)),
+            ),
         )
-        df = df.join(pres, [key_col, "window_start"], "left")
         df = df.withColumn(
             "state",
             F.coalesce(
@@ -297,7 +298,7 @@ def evaluate_alarm(
                 ),
                 F.lit(STATE_OK),
             ),
-        ).drop("state_pt")
+        ).drop("present_seq", "state_pt")
     else:
         df = df.withColumn("state", raw_state)
 

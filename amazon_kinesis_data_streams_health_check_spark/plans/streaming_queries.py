@@ -62,11 +62,19 @@ def _mod_chunks(df: DataFrame, key: str) -> list[DataFrame]:
     return [df.filter(F.pmod(F.col(key), F.lit(4)) == i) for i in range(4)]
 
 
-def _range_chunks(
-    df: DataFrame, col: str, lo: int, hi: int, unit: int = 60
-) -> list[DataFrame]:
-    """Four ascending ranges of ``col`` over ``[lo, hi]``, cut on ``unit``
-    boundaries: the replay order of the period feeds."""
+def _bounds(df: DataFrame, col: str) -> tuple[int, int] | None:
+    """(min, max) of ``col`` over ``df``; None when ``df`` is empty."""
+    b = df.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).collect()[0]
+    return None if b["lo"] is None else (int(b["lo"]), int(b["hi"]))
+
+
+def _range_chunks(df: DataFrame, col: str, unit: int = 60) -> list[DataFrame]:
+    """Four ascending ranges of ``col`` over its data bounds, cut on ``unit``
+    boundaries: the replay order of the keyed-fold feeds."""
+    bounds = _bounds(df, col)
+    if bounds is None:
+        return [df]
+    lo, hi = bounds
     step = max(unit, ((hi - lo + unit) // 4 // unit) * unit)
     cuts = [lo + i * step for i in range(4)] + [hi + 2 * unit]
     c = F.col(col)
@@ -441,11 +449,10 @@ def streaming_stateful_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    b = metrics.agg(F.min("ws_s").alias("lo"), F.max("ws_s").alias("hi")).collect()[0]
-    lo_s, hi_s = int(b["lo"]), int(b["hi"])
+    lo_s, hi_s = _bounds(metrics, "ws_s")
 
     # Per-stream flush sentinels (ws past the grid) so trailing missing
-    # periods are evaluated; they live in the LAST feed file.
+    # periods are evaluated; they sort after every period of their stream.
     sentinels = metrics.select("stream_name").distinct().select(
         "stream_name",
         F.lit(hi_s + 60).cast("long").alias("ws_s"),
@@ -455,9 +462,9 @@ def streaming_stateful_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # 4 chunks by period range, replayed in order across 4 real
     # micro-batches, exercising cross-batch state persistence.
-    chunks = _range_chunks(metrics, "ws_s", lo_s, hi_s)
-    chunks[-1] = chunks[-1].unionByName(sentinels)
-    feed, _ = replay_feed(spark, chunks, "alarm_feed_")
+    feed, _ = replay_feed(
+        spark, _range_chunks(metrics.unionByName(sentinels), "ws_s"), "alarm_feed_"
+    )
     alarms = period_alarm_stream(feed, threshold=30.0, lo_s=lo_s, hi_s=hi_s)
     sunk = drain_to_memory(alarms, "stateful_alarm", output_mode="update")
     return sunk.select(
@@ -1561,13 +1568,10 @@ def streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed_rows = m.join(F.broadcast(mu), "stream_name").select(
         "stream_name", "ws", "x", "mu_milli", "slack_milli"
     )
-    b = feed_rows.agg(F.min("ws").alias("lo"), F.max("ws").alias("hi")).collect()[0]
-    lo_s, hi_s = int(b["lo"]), int(b["hi"])
-
     # 4 chunks by period range, replayed in order across 4 real
     # micro-batches, exercising the cross-batch carry.
     feed, _ = replay_feed(
-        spark, _range_chunks(feed_rows, "ws", lo_s, hi_s), "cusum_feed_"
+        spark, _range_chunks(feed_rows, "ws"), "cusum_feed_"
     )
     return drain_to_memory(cusum_stream(feed), "cusum", output_mode="update")
 
@@ -1614,10 +1618,7 @@ def streaming_hysteresis_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    b = m.agg(F.min("ws").alias("lo"), F.max("ws").alias("hi")).collect()[0]
-    lo_s, hi_s = int(b["lo"]), int(b["hi"])
-
-    feed, _ = replay_feed(spark, _range_chunks(m, "ws", lo_s, hi_s), "hyst_feed_")
+    feed, _ = replay_feed(spark, _range_chunks(m, "ws"), "hyst_feed_")
     return drain_to_memory(hysteresis_stream(feed), "hyst", output_mode="update")
 
 
@@ -2264,14 +2265,7 @@ def streaming_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.expr(f"CAST(ts AS LONG) * {_RL_T} + event_id").alias("s"),
     )
-    b = rows.agg(F.min("s").alias("lo"), F.max("s").alias("hi")).collect()[0]
-    lo, hi = int(b["lo"]), int(b["hi"])
-    step = (hi - lo) // 4 + 1
-    chunks = [
-        rows.filter((F.col("s") >= lo + i * step) & (F.col("s") < lo + (i + 1) * step))
-        for i in range(4)
-    ]
-    feed, _ = replay_feed(spark, chunks, "rl_feed_")
+    feed, _ = replay_feed(spark, _range_chunks(rows, "s", unit=1), "rl_feed_")
     drained = drain_to_memory(
         rate_limit_stream(feed, _RL_CAP, _RL_REFILL_S),
         "rate_limit",
@@ -2794,11 +2788,8 @@ def streaming_ewma_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("x"))
         .localCheckpoint(eager=False)
     )
-    b = feed_rows.agg(F.min("ws").alias("lo"), F.max("ws").alias("hi")).collect()[0]
-    lo_s, hi_s = int(b["lo"]), int(b["hi"])
-
     feed, _ = replay_feed(
-        spark, _range_chunks(feed_rows, "ws", lo_s, hi_s), "ewma_feed_"
+        spark, _range_chunks(feed_rows, "ws"), "ewma_feed_"
     )
     return drain_to_memory(ewma_stream(feed), "ewma", output_mode="update")
 
@@ -2859,11 +2850,8 @@ def streaming_control_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed_rows = m.join(F.broadcast(mu), "stream_name").select(
         "stream_name", "ws", "x", "mu_milli", "slack_milli"
     )
-    b = feed_rows.agg(F.min("ws").alias("lo"), F.max("ws").alias("hi")).collect()[0]
-    lo_s, hi_s = int(b["lo"]), int(b["hi"])
-
     feed, _ = replay_feed(
-        spark, _range_chunks(feed_rows, "ws", lo_s, hi_s), "ens_feed_"
+        spark, _range_chunks(feed_rows, "ws"), "ens_feed_"
     )
     return drain_to_memory(ensemble_stream(feed), "ens", output_mode="update")
 
@@ -3151,10 +3139,8 @@ def streaming_forecast_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("y"), F.lit(0)).alias("y"),
         )
     )
-    b = dense.agg(F.min("d_s").alias("lo"), F.max("d_s").alias("hi")).collect()[0]
-    lo_s, hi_s = int(b["lo"]), int(b["hi"])
     feed, _ = replay_feed(
-        spark, _range_chunks(dense, "d_s", lo_s, hi_s, unit=86400), "fcst_feed_"
+        spark, _range_chunks(dense, "d_s", unit=86400), "fcst_feed_"
     )
     drained = drain_to_memory(
         forecast_stream(feed), "fcst", output_mode="update"
@@ -3228,10 +3214,8 @@ def streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("stream_name", F.unix_timestamp("m").alias("m_s"), "n", "s")
         .localCheckpoint(eager=False)
     )
-    b = trials.agg(F.min("m_s").alias("lo"), F.max("m_s").alias("hi")).collect()[0]
-    lo_s, hi_s = int(b["lo"]), int(b["hi"])
     feed, _ = replay_feed(
-        spark, _range_chunks(trials, "m_s", lo_s, hi_s), "sprt_feed_"
+        spark, _range_chunks(trials, "m_s"), "sprt_feed_"
     )
     walk = drain_to_memory(sprt_stream(feed), "sprt", output_mode="update")
     walk = walk.localCheckpoint(eager=False)  # totals AND crossings
@@ -3384,13 +3368,8 @@ def streaming_journey_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("ts").alias("ts_us"),
         "event_type",
     ).localCheckpoint(eager=False)
-    b = feed_rows.agg(
-        F.min("ts_us").alias("lo"), F.max("ts_us").alias("hi")
-    ).collect()[0]
-    lo_s, hi_s = int(b["lo"]), int(b["hi"])
-
     feed, _ = replay_feed(
-        spark, _range_chunks(feed_rows, "ts_us", lo_s, hi_s, unit=1), "journey_feed_"
+        spark, _range_chunks(feed_rows, "ts_us", unit=1), "journey_feed_"
     )
     return drain_to_memory(
         journey_stream(feed, costs), "journey", output_mode="update"
@@ -3475,11 +3454,11 @@ def streaming_pack_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("n_tokens"),
     ).localCheckpoint(eager=False)
 
-    # 4 chunks cut on shuffle-key (ou) ranges of [0, 2^32), replayed in
-    # order: per-source arrival order across micro-batches equals the batch
-    # window's (ou, doc_id) order.
+    # 4 chunks cut on shuffle-key (ou) ranges, replayed in order: per-source
+    # arrival order across micro-batches equals the batch window's
+    # (ou, doc_id) order.
     feed, _ = replay_feed(
-        spark, _range_chunks(feed_rows, "ou", 0, (1 << 32) - 1, unit=1), "spack_feed_"
+        spark, _range_chunks(feed_rows, "ou", unit=1), "spack_feed_"
     )
     return drain_to_memory(
         pack_stream(feed, _SPACK_BUDGET), "spack", output_mode="update"
@@ -3559,7 +3538,7 @@ def streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     feed, _ = replay_feed(
-        spark, _range_chunks(feed_rows, "ou", 0, (1 << 32) - 1, unit=1), "sgate_feed_"
+        spark, _range_chunks(feed_rows, "ou", unit=1), "sgate_feed_"
     )
     return drain_to_memory(
         quality_gate_stream(feed), "sgate", output_mode="update"

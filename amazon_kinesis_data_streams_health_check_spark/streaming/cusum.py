@@ -17,13 +17,9 @@ files by modification time).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BooleanType,
     LongType,
@@ -32,7 +28,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from amazon_kinesis_data_streams_health_check_spark import pyworker
+from amazon_kinesis_data_streams_health_check_spark.streaming.keyed_fold import (
+    keyed_fold,
+)
 
 CUSUM_OUTPUT_SCHEMA = StructType(
     [
@@ -57,59 +55,41 @@ CUSUM_STATE_SCHEMA = StructType(
 )
 
 
-def make_cusum_fn():
-    """applyInPandasWithState function: fold (ws, x, mu, slack) rows into
-    the two-sided CUSUM, emitting one row per period with the statistic and
-    the h = mu decision flags."""
+def cusum_fold(
+    stream_name: str, state: tuple | None, rows: Iterable[tuple]
+) -> tuple[tuple, list[tuple]]:
+    """Fold (ws, x, mu, slack) rows into the two-sided CUSUM, emitting one
+    row per period with the statistic and the h = mu decision flags."""
+    if state is not None:
+        p_pos, p_neg, lo_pos, lo_neg = state
+    else:
+        p_pos = p_neg = 0
+        lo_pos = lo_neg = 0
 
-    def cusum_fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        pyworker.ready()
-        stream_name = key[0]
-        if state.exists:
-            p_pos, p_neg, lo_pos, lo_neg = state.get
-        else:
-            p_pos = p_neg = 0
-            lo_pos = lo_neg = 0
-
-        out: dict[str, list] = {f.name: [] for f in CUSUM_OUTPUT_SCHEMA.fields}
-        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values("ws")
-        for ws, x, mu, slack in zip(
-            pdf["ws"], pdf["x"], pdf["mu_milli"], pdf["slack_milli"]
-        ):
-            ws, x, mu, slack = int(ws), int(x), int(mu), int(slack)
-            p_pos += x - mu - slack
-            p_neg += mu - x - slack
-            lo_pos = min(lo_pos, p_pos)
-            lo_neg = min(lo_neg, p_neg)
-            c_pos = p_pos - min(0, lo_pos)
-            c_neg = p_neg - min(0, lo_neg)
-            out["stream_name"].append(stream_name)
-            out["window_start_s"].append(ws)
-            out["value_milli"].append(x)
-            out["cusum_pos"].append(c_pos)
-            out["cusum_neg"].append(c_neg)
-            out["drift_up"].append(c_pos > mu)
-            out["drift_down"].append(c_neg > mu)
-
-        state.update((p_pos, p_neg, lo_pos, lo_neg))
-        yield pd.DataFrame(out)
-
-    return cusum_fn
+    out = []
+    for ws, x, mu, slack in rows:
+        ws, x, mu, slack = int(ws), int(x), int(mu), int(slack)
+        p_pos += x - mu - slack
+        p_neg += mu - x - slack
+        lo_pos = min(lo_pos, p_pos)
+        lo_neg = min(lo_neg, p_neg)
+        c_pos = p_pos - min(0, lo_pos)
+        c_neg = p_neg - min(0, lo_neg)
+        out.append((stream_name, ws, x, c_pos, c_neg, c_pos > mu, c_neg > mu))
+    return (p_pos, p_neg, lo_pos, lo_neg), out
 
 
 def cusum_stream(feed: DataFrame) -> DataFrame:
     """(stream_name, ws, x, mu_milli, slack_milli) metric stream -> one
     CUSUM row per period, the carry pair held in the state store."""
-    return feed.groupBy("stream_name").applyInPandasWithState(
-        make_cusum_fn(),
-        outputStructType=CUSUM_OUTPUT_SCHEMA,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        feed,
+        "stream_name",
+        "ws",
+        ["ws", "x", "mu_milli", "slack_milli"],
+        cusum_fold,
+        CUSUM_STATE_SCHEMA,
+        CUSUM_OUTPUT_SCHEMA,
     )
 
 
@@ -138,45 +118,36 @@ _HYST_HI_MILLI = 400_000
 _HYST_LO_MILLI = 250_000
 
 
-def make_hysteresis_fn(hi_milli: int = _HYST_HI_MILLI, lo_milli: int = _HYST_LO_MILLI):
-    def hyst_fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        pyworker.ready()
-        stream_name = key[0]
-        cur = state.get[0] if state.exists else "OK"
-        seen_any = state.exists  # a prior period exists => lag() is defined
-        out: dict[str, list] = {f.name: [] for f in HYST_OUTPUT_SCHEMA.fields}
-        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values("ws")
-        for ws, x in zip(pdf["ws"], pdf["x"]):
-            ws, x = int(ws), int(x)
-            if x > hi_milli:
-                new = "ALARM"
-            elif x < lo_milli:
-                new = "OK"
-            else:
-                new = cur
-            out["stream_name"].append(stream_name)
-            out["window_start_s"].append(ws)
-            out["max_value_milli"].append(x)
-            out["state"].append(new)
-            out["transitioned"].append(seen_any and new != cur)
-            cur = new
-            seen_any = True
-        state.update((cur,))
-        yield pd.DataFrame(out)
-
-    return hyst_fn
+def hysteresis_fold(
+    stream_name: str, state: tuple | None, rows: Iterable[tuple]
+) -> tuple[tuple, list[tuple]]:
+    """Fold (ws, x) rows into the Schmitt trigger, one held-state row per
+    period."""
+    cur = state[0] if state is not None else "OK"
+    seen_any = state is not None  # a prior period exists => lag() is defined
+    out = []
+    for ws, x in rows:
+        ws, x = int(ws), int(x)
+        if x > _HYST_HI_MILLI:
+            new = "ALARM"
+        elif x < _HYST_LO_MILLI:
+            new = "OK"
+        else:
+            new = cur
+        out.append((stream_name, ws, x, new, seen_any and new != cur))
+        cur = new
+        seen_any = True
+    return (cur,), out
 
 
 def hysteresis_stream(feed: DataFrame) -> DataFrame:
     """(stream_name, ws, x) metric stream -> one held-state row per period."""
-    return feed.groupBy("stream_name").applyInPandasWithState(
-        make_hysteresis_fn(),
-        outputStructType=HYST_OUTPUT_SCHEMA,
-        stateStructType=HYST_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        feed,
+        "stream_name",
+        "ws",
+        ["ws", "x"],
+        hysteresis_fold,
+        HYST_STATE_SCHEMA,
+        HYST_OUTPUT_SCHEMA,
     )

@@ -17,13 +17,9 @@ feed files by modification time).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -33,7 +29,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from amazon_kinesis_data_streams_health_check_spark import pyworker
+from amazon_kinesis_data_streams_health_check_spark.streaming.keyed_fold import (
+    keyed_fold,
+)
 
 ENS_WIN = 60
 ENS_MIN = 30
@@ -63,76 +61,58 @@ ENSEMBLE_STATE_SCHEMA = StructType(
 )
 
 
-def make_ensemble_fn():
-    """applyInPandasWithState function: fold (ws, x, mu, slack) rows into
-    the three-chart ensemble, emitting one voted row per period."""
+def ensemble_fold(
+    stream_name: str, state: tuple | None, rows: Iterable[tuple]
+) -> tuple[tuple, list[tuple]]:
+    """Fold (ws, x, mu, slack) rows into the three-chart ensemble, emitting
+    one voted row per period."""
+    if state is not None:
+        hist, p_pos, lo_pos = state
+        hist = list(hist)
+    else:
+        hist, p_pos, lo_pos = [], 0, 0
 
-    def ens_fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        pyworker.ready()
-        stream_name = key[0]
-        if state.exists:
-            hist, p_pos, lo_pos = state.get
-            hist = list(hist)
-        else:
-            hist, p_pos, lo_pos = [], 0, 0
-
-        out: dict[str, list] = {f.name: [] for f in ENSEMBLE_OUTPUT_SCHEMA.fields}
-        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values("ws")
-        for ws, x, mu, slack in zip(
-            pdf["ws"], pdf["x"], pdf["mu_milli"], pdf["slack_milli"]
-        ):
-            ws, x, mu, slack = int(ws), int(x), int(mu), int(slack)
-            win = hist[-(ENS_WIN - 1):] + [x]
-            n = len(win)
-            s = sum(win)
-            ss = sum(v * v for v in win)
-            shew = (
-                n >= ENS_MIN
-                and (n - 1) * (x * n - s) * (x * n - s)
-                > ENS_K2 * n * (n * ss - s * s)
-            )
-            p_pos += x - mu - slack
-            lo_pos = min(lo_pos, p_pos)
-            cus = (p_pos - min(0, lo_pos)) > 8 * slack
-            enum_ = sum(
-                hist[-k] << (ENS_H - k)
-                for k in range(1, min(len(hist), ENS_H) + 1)
-            )
-            emass = sum(
-                1 << (ENS_H - k) for k in range(1, min(len(hist), ENS_H) + 1)
-            )
-            ew = emass == _EWMA_FULL and x * emass > 2 * enum_
-            total = int(shew) + int(cus) + int(ew)
-            out["stream_name"].append(stream_name)
-            out["window_start_s"].append(ws)
-            out["n_arrivals"].append(x)
-            out["shewhart"].append(shew)
-            out["cusum_up"].append(cus)
-            out["ewma"].append(ew)
-            out["n_alarms"].append(total)
-            out["consensus"].append(total >= 2)
-            hist.append(x)
-            if len(hist) > ENS_WIN - 1:
-                hist = hist[-(ENS_WIN - 1):]
-
-        state.update((hist, p_pos, lo_pos))
-        yield pd.DataFrame(out)
-
-    return ens_fn
+    out = []
+    for ws, x, mu, slack in rows:
+        ws, x, mu, slack = int(ws), int(x), int(mu), int(slack)
+        win = hist[-(ENS_WIN - 1):] + [x]
+        n = len(win)
+        s = sum(win)
+        ss = sum(v * v for v in win)
+        shew = (
+            n >= ENS_MIN
+            and (n - 1) * (x * n - s) * (x * n - s)
+            > ENS_K2 * n * (n * ss - s * s)
+        )
+        p_pos += x - mu - slack
+        lo_pos = min(lo_pos, p_pos)
+        cus = (p_pos - min(0, lo_pos)) > 8 * slack
+        enum_ = sum(
+            hist[-k] << (ENS_H - k)
+            for k in range(1, min(len(hist), ENS_H) + 1)
+        )
+        emass = sum(
+            1 << (ENS_H - k) for k in range(1, min(len(hist), ENS_H) + 1)
+        )
+        ew = emass == _EWMA_FULL and x * emass > 2 * enum_
+        total = int(shew) + int(cus) + int(ew)
+        out.append((stream_name, ws, x, shew, cus, ew, total, total >= 2))
+        hist.append(x)
+        if len(hist) > ENS_WIN - 1:
+            hist = hist[-(ENS_WIN - 1):]
+    return (hist, p_pos, lo_pos), out
 
 
 def ensemble_stream(feed: DataFrame) -> DataFrame:
     """(stream_name, ws, x, mu_milli, slack_milli) metric stream -> one
     voted ensemble row per period; 59 counts + the CUSUM carry pair held
     in the state store per stream."""
-    return feed.groupBy("stream_name").applyInPandasWithState(
-        make_ensemble_fn(),
-        outputStructType=ENSEMBLE_OUTPUT_SCHEMA,
-        stateStructType=ENSEMBLE_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        feed,
+        "stream_name",
+        "ws",
+        ["ws", "x", "mu_milli", "slack_milli"],
+        ensemble_fold,
+        ENSEMBLE_STATE_SCHEMA,
+        ENSEMBLE_OUTPUT_SCHEMA,
     )

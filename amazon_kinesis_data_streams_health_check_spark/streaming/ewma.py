@@ -17,13 +17,9 @@ files by modification time).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -33,11 +29,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from amazon_kinesis_data_streams_health_check_spark import pyworker
+from amazon_kinesis_data_streams_health_check_spark.streaming.keyed_fold import (
+    keyed_fold,
+)
 
 EWMA_H = 12
 EWMA_MULT = 2
-_FULL_MASS = (1 << EWMA_H) - 1
 
 EWMA_OUTPUT_SCHEMA = StructType(
     [
@@ -59,58 +56,48 @@ EWMA_STATE_SCHEMA = StructType(
 )
 
 
-def make_ewma_fn(h: int = EWMA_H, mult: int = EWMA_MULT):
-    """applyInPandasWithState function: fold (ws, x) rows into the
-    truncated-EWMA chart, emitting one row per period."""
-
-    full = (1 << h) - 1
-
-    def ewma_fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        pyworker.ready()
-        stream_name = key[0]
-        hist: list[int] = list(state.get[0]) if state.exists else []
-
-        out: dict[str, list] = {f.name: [] for f in EWMA_OUTPUT_SCHEMA.fields}
-        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values("ws")
-        for ws, x in zip(pdf["ws"], pdf["x"]):
-            ws, x = int(ws), int(x)
-            # hist is oldest-first; lag k reads hist[-k]
-            ewma_num = sum(
-                hist[-k] << (h - k) for k in range(1, min(len(hist), h) + 1)
+def ewma_fold(
+    stream_name: str, state: tuple | None, rows: Iterable[tuple]
+) -> tuple[tuple, list[tuple]]:
+    """Fold (ws, x) rows into the truncated-EWMA chart, emitting one row per
+    period."""
+    hist: list[int] = list(state[0]) if state is not None else []
+    out = []
+    for ws, x in rows:
+        ws, x = int(ws), int(x)
+        # hist is oldest-first; lag k reads hist[-k]
+        ewma_num = sum(
+            hist[-k] << (EWMA_H - k) for k in range(1, min(len(hist), EWMA_H) + 1)
+        )
+        mass = sum(1 << (EWMA_H - k) for k in range(1, min(len(hist), EWMA_H) + 1))
+        warmup = mass < (1 << EWMA_H) - 1
+        out.append(
+            (
+                stream_name,
+                ws,
+                x,
+                ewma_num,
+                mass,
+                warmup,
+                not warmup and x * mass > EWMA_MULT * ewma_num,
+                not warmup and EWMA_MULT * x * mass < ewma_num,
             )
-            mass = sum(
-                1 << (h - k) for k in range(1, min(len(hist), h) + 1)
-            )
-            warmup = mass < full
-            out["stream_name"].append(stream_name)
-            out["window_start_s"].append(ws)
-            out["n_arrivals"].append(x)
-            out["ewma_num"].append(ewma_num)
-            out["weight_sum"].append(mass)
-            out["warmup"].append(warmup)
-            out["spike_high"].append(not warmup and x * mass > mult * ewma_num)
-            out["spike_low"].append(not warmup and mult * x * mass < ewma_num)
-            hist.append(x)
-            if len(hist) > h:
-                hist = hist[-h:]
-
-        state.update((hist,))
-        yield pd.DataFrame(out)
-
-    return ewma_fn
+        )
+        hist.append(x)
+        if len(hist) > EWMA_H:
+            hist = hist[-EWMA_H:]
+    return (hist,), out
 
 
 def ewma_stream(feed: DataFrame) -> DataFrame:
     """(stream_name, ws, x) metric stream -> one chart row per period, the
     last-H counts held in the state store."""
-    return feed.groupBy("stream_name").applyInPandasWithState(
-        make_ewma_fn(),
-        outputStructType=EWMA_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        feed,
+        "stream_name",
+        "ws",
+        ["ws", "x"],
+        ewma_fold,
+        EWMA_STATE_SCHEMA,
+        EWMA_OUTPUT_SCHEMA,
     )

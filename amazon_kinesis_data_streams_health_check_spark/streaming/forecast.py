@@ -14,13 +14,9 @@ key (the bounded drive orders its feed files by modification time).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     LongType,
@@ -29,7 +25,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from amazon_kinesis_data_streams_health_check_spark import pyworker
+from amazon_kinesis_data_streams_health_check_spark.streaming.keyed_fold import (
+    keyed_fold,
+)
 
 FORECAST_H = 3
 
@@ -48,48 +46,42 @@ FORECAST_OUTPUT_SCHEMA = StructType(
 FORECAST_STATE_SCHEMA = StructType([StructField("hist", ArrayType(LongType()))])
 
 
-def make_forecast_fn(h: int = FORECAST_H):
-    """applyInPandasWithState function: fold (d_s, y) rows into one-step
-    forecasts, emitting a row per day once the history is full."""
-
-    def forecast_fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        pyworker.ready()
-        stream_name = key[0]
-        hist: list[int] = list(state.get[0]) if state.exists else []
-
-        out: dict[str, list] = {f.name: [] for f in FORECAST_OUTPUT_SCHEMA.fields}
-        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values("d_s")
-        for d_s, y in zip(pdf["d_s"], pdf["y"]):
-            d_s, y = int(d_s), int(y)
-            if len(hist) >= h:
-                y1, y2, y3 = hist[-1], hist[-2], hist[-3]
-                out["stream_name"].append(stream_name)
-                out["d_s"].append(d_s)
-                out["y"].append(y)
-                out["f_naive"].append(1000 * y1)
-                out["f_ma3"].append((1000 * (y1 + y2 + y3)) // 3)
-                out["f_drift"].append(1000 * (2 * y1 - y2))
-            hist.append(y)
-            if len(hist) > h:
-                hist = hist[-h:]
-
-        state.update((hist,))
-        yield pd.DataFrame(out)
-
-    return forecast_fn
+def forecast_fold(
+    stream_name: str, state: tuple | None, rows: Iterable[tuple]
+) -> tuple[tuple, list[tuple]]:
+    """Fold (d_s, y) rows into one-step forecasts, emitting a row per day
+    once the history is full."""
+    hist: list[int] = list(state[0]) if state is not None else []
+    out = []
+    for d_s, y in rows:
+        d_s, y = int(d_s), int(y)
+        if len(hist) >= FORECAST_H:
+            y1, y2, y3 = hist[-1], hist[-2], hist[-3]
+            out.append(
+                (
+                    stream_name,
+                    d_s,
+                    y,
+                    1000 * y1,
+                    (1000 * (y1 + y2 + y3)) // 3,
+                    1000 * (2 * y1 - y2),
+                )
+            )
+        hist.append(y)
+        if len(hist) > FORECAST_H:
+            hist = hist[-FORECAST_H:]
+    return (hist,), out
 
 
 def forecast_stream(feed: DataFrame) -> DataFrame:
     """(stream_name, d_s, y) daily series stream -> one forecast row per
     day past warmup, the 3-day history held in the state store."""
-    return feed.groupBy("stream_name").applyInPandasWithState(
-        make_forecast_fn(),
-        outputStructType=FORECAST_OUTPUT_SCHEMA,
-        stateStructType=FORECAST_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        feed,
+        "stream_name",
+        "d_s",
+        ["d_s", "y"],
+        forecast_fold,
+        FORECAST_STATE_SCHEMA,
+        FORECAST_OUTPUT_SCHEMA,
     )

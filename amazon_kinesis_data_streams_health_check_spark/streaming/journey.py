@@ -21,13 +21,10 @@ one user share the same wall-clock second.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
+from collections.abc import Iterable
+from functools import partial
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
     StringType,
@@ -35,7 +32,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from amazon_kinesis_data_streams_health_check_spark import pyworker
+from amazon_kinesis_data_streams_health_check_spark.streaming.keyed_fold import (
+    keyed_fold,
+)
 
 JOURNEY_OUTPUT_SCHEMA = StructType(
     [
@@ -56,10 +55,15 @@ JOURNEY_STATE_SCHEMA = StructType(
 )
 
 
-def make_journey_fn(costs: dict[tuple[str, str], int]):
-    """applyInPandasWithState function: fold (ts_us, event_id, event_type)
-    rows into running journey-surprisal prefixes, one output row per
-    transition.
+def journey_fold(
+    user_id: int,
+    state: tuple | None,
+    rows: Iterable[tuple],
+    *,
+    costs: dict[tuple[str, str], int],
+) -> tuple[tuple, list[tuple]]:
+    """Fold (event_type,) rows, in (ts_us, event_id) order, into running
+    journey-surprisal prefixes, one output row per transition.
 
     Transition pairs absent from the offline-fit cost matrix fall back to
     one bit above the matrix's maximum cost (a worst-case surprisal) rather
@@ -67,37 +71,21 @@ def make_journey_fn(costs: dict[tuple[str, str], int]):
     the fallback never fires there, but an open-vocabulary feed must not
     kill the streaming query."""
     fallback_cost = max(costs.values(), default=0) + 1
+    user_id = int(user_id)
+    if state is not None:
+        last_type, n_trans, sum_bits = state
+    else:
+        last_type, n_trans, sum_bits = None, 0, 0
 
-    def journey_fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        pyworker.ready()
-        user_id = int(key[0])
-        if state.exists:
-            last_type, n_trans, sum_bits = state.get
-        else:
-            last_type, n_trans, sum_bits = None, 0, 0
-
-        out: dict[str, list] = {f.name: [] for f in JOURNEY_OUTPUT_SCHEMA.fields}
-        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            ["ts_us", "event_id"]
-        )
-        for et in pdf["event_type"]:
-            et = str(et)
-            if last_type is not None:
-                n_trans += 1
-                sum_bits += costs.get((last_type, et), fallback_cost)
-                out["user_id"].append(user_id)
-                out["n_transitions"].append(n_trans)
-                out["sum_bits"].append(sum_bits)
-                out["score_micro_bits"].append(10**6 * sum_bits // n_trans)
-            last_type = et
-        state.update((last_type, n_trans, sum_bits))
-        yield pd.DataFrame(out)
-
-    return journey_fn
+    out = []
+    for (et,) in rows:
+        et = str(et)
+        if last_type is not None:
+            n_trans += 1
+            sum_bits += costs.get((last_type, et), fallback_cost)
+            out.append((user_id, n_trans, sum_bits, 10**6 * sum_bits // n_trans))
+        last_type = et
+    return (last_type, n_trans, sum_bits), out
 
 
 def journey_stream(
@@ -105,10 +93,12 @@ def journey_stream(
 ) -> DataFrame:
     """Wire the scorer onto a streaming (user_id, event_id, ts_us,
     event_type) feed."""
-    return feed.groupBy("user_id").applyInPandasWithState(
-        make_journey_fn(costs),
-        outputStructType=JOURNEY_OUTPUT_SCHEMA,
-        stateStructType=JOURNEY_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        feed,
+        "user_id",
+        ["ts_us", "event_id"],
+        ["event_type"],
+        partial(journey_fold, costs=costs),
+        JOURNEY_STATE_SCHEMA,
+        JOURNEY_OUTPUT_SCHEMA,
     )

@@ -18,13 +18,10 @@ window's exact compound order key.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
+from collections.abc import Iterable
+from functools import partial
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
     StringType,
@@ -32,7 +29,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from amazon_kinesis_data_streams_health_check_spark import pyworker
+from amazon_kinesis_data_streams_health_check_spark.streaming.keyed_fold import (
+    keyed_fold,
+)
 
 PACK_OUTPUT_SCHEMA = StructType(
     [
@@ -47,43 +46,29 @@ PACK_OUTPUT_SCHEMA = StructType(
 PACK_STATE_SCHEMA = StructType([StructField("cum", LongType())])
 
 
-def make_pack_fn(budget: int):
-    """applyInPandasWithState function: fold (ou, doc_id, n_tokens) rows
-    into running bin assignments, one output row per document."""
-
-    def pack_fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        pyworker.ready()
-        source = str(key[0])
-        cum = int(state.get[0]) if state.exists else 0
-
-        out: dict[str, list] = {f.name: [] for f in PACK_OUTPUT_SCHEMA.fields}
-        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            ["ou", "doc_id"]
-        )
-        for doc_id, n_tokens in zip(pdf["doc_id"], pdf["n_tokens"]):
-            cum += int(n_tokens)
-            out["doc_id"].append(int(doc_id))
-            out["source"].append(source)
-            out["n_tokens"].append(int(n_tokens))
-            out["cum_tokens"].append(cum)
-            out["bin"].append((cum - 1) // budget)
-        state.update((cum,))
-        yield pd.DataFrame(out)
-
-    return pack_fn
+def pack_fold(
+    source: str, state: tuple | None, rows: Iterable[tuple], *, budget: int
+) -> tuple[tuple, list[tuple]]:
+    """Fold (doc_id, n_tokens) rows, in (ou, doc_id) order, into running bin
+    assignments, one output row per document."""
+    source = str(source)
+    cum = int(state[0]) if state is not None else 0
+    out = []
+    for doc_id, n_tokens in rows:
+        cum += int(n_tokens)
+        out.append((int(doc_id), source, int(n_tokens), cum, (cum - 1) // budget))
+    return (cum,), out
 
 
 def pack_stream(feed: DataFrame, budget: int) -> DataFrame:
     """Wire the packer onto a streaming (source, ou, doc_id, n_tokens)
     feed."""
-    return feed.groupBy("source").applyInPandasWithState(
-        make_pack_fn(budget),
-        outputStructType=PACK_OUTPUT_SCHEMA,
-        stateStructType=PACK_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        feed,
+        "source",
+        ["ou", "doc_id"],
+        ["doc_id", "n_tokens"],
+        partial(pack_fold, budget=budget),
+        PACK_STATE_SCHEMA,
+        PACK_OUTPUT_SCHEMA,
     )

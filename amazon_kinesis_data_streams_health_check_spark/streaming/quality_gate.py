@@ -20,13 +20,9 @@ exact compound order key.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BooleanType,
     LongType,
@@ -35,7 +31,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from amazon_kinesis_data_streams_health_check_spark import pyworker
+from amazon_kinesis_data_streams_health_check_spark.streaming.keyed_fold import (
+    keyed_fold,
+)
 
 GATE_OUTPUT_SCHEMA = StructType(
     [
@@ -57,39 +55,34 @@ GATE_STATE_SCHEMA = StructType(
 )
 
 
-def gate_fn(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    pyworker.ready()
-    source = str(key[0])
-    if state.exists:
-        n_seen, n_passed = (int(x) for x in state.get)
+def quality_gate_fold(
+    source: str, state: tuple | None, rows: Iterable[tuple]
+) -> tuple[tuple, list[tuple]]:
+    """Fold (doc_id, passed) rows, in (ou, doc_id) order, into the running
+    acceptance trajectory, one output row per document."""
+    source = str(source)
+    if state is not None:
+        n_seen, n_passed = (int(x) for x in state)
     else:
         n_seen, n_passed = 0, 0
-
-    out: dict[str, list] = {f.name: [] for f in GATE_OUTPUT_SCHEMA.fields}
-    pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(["ou", "doc_id"])
-    for doc_id, passed in zip(pdf["doc_id"], pdf["passed"]):
+    out = []
+    for doc_id, passed in rows:
         n_seen += 1
         n_passed += int(bool(passed))
-        out["doc_id"].append(int(doc_id))
-        out["source"].append(source)
-        out["passed"].append(bool(passed))
-        out["n_seen"].append(n_seen)
-        out["n_passed"].append(n_passed)
-        out["accept_ppm"].append(10**6 * n_passed // n_seen)
-    state.update((n_seen, n_passed))
-    yield pd.DataFrame(out)
+        out.append(
+            (int(doc_id), source, bool(passed), n_seen, n_passed, 10**6 * n_passed // n_seen)
+        )
+    return (n_seen, n_passed), out
 
 
 def quality_gate_stream(feed: DataFrame) -> DataFrame:
     """Wire the gate onto a streaming (source, ou, doc_id, passed) feed."""
-    return feed.groupBy("source").applyInPandasWithState(
-        gate_fn,
-        outputStructType=GATE_OUTPUT_SCHEMA,
-        stateStructType=GATE_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        feed,
+        "source",
+        ["ou", "doc_id"],
+        ["doc_id", "passed"],
+        quality_gate_fold,
+        GATE_STATE_SCHEMA,
+        GATE_OUTPUT_SCHEMA,
     )

@@ -16,16 +16,15 @@ update mode — the dashboard read is "latest row per user".
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
+from collections.abc import Iterable
+from functools import partial
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StructField, StructType
 
-from amazon_kinesis_data_streams_health_check_spark import pyworker
+from amazon_kinesis_data_streams_health_check_spark.streaming.keyed_fold import (
+    keyed_fold,
+)
 
 RL_OUTPUT_SCHEMA = StructType(
     [
@@ -47,52 +46,43 @@ RL_STATE_SCHEMA = StructType(
 )
 
 
-def make_rate_limit_fn(cap: int, refill_s: int):
-    """applyInPandasWithState function: fold (s,) packed event scalars into
-    the per-user token bucket, emitting one cumulative row per batch."""
+def rate_limit_fold(
+    user_id: int,
+    state: tuple | None,
+    rows: Iterable[tuple],
+    *,
+    cap: int,
+    refill_s: int,
+) -> tuple[tuple, list[tuple]]:
+    """Fold (s,) packed event scalars into the per-user token bucket,
+    emitting one cumulative row per batch."""
+    if state is not None:
+        last_s, tokens, n_thr, n_ev = state
+    else:
+        last_s, tokens, n_thr, n_ev = 0, cap, 0, 0
 
-    def rl_fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        pyworker.ready()
-        user_id = int(key[0])
-        if state.exists:
-            last_s, tokens, n_thr, n_ev = state.get
+    for (s,) in rows:
+        sec = int(s) >> 24  # event pack: second * 2^24 + event_id
+        tokens = min(cap, tokens + (sec - last_s) // refill_s)
+        if tokens >= 1:
+            tokens -= 1
         else:
-            last_s, tokens, n_thr, n_ev = 0, cap, 0, 0
-
-        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values("s")
-        for s in pdf["s"]:
-            sec = int(s) >> 24  # event pack: second * 2^24 + event_id
-            tokens = min(cap, tokens + (sec - last_s) // refill_s)
-            if tokens >= 1:
-                tokens -= 1
-            else:
-                n_thr += 1
-            last_s = sec
-            n_ev += 1
-        state.update((last_s, tokens, n_thr, n_ev))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_events": [n_ev],
-                "n_throttled": [n_thr],
-                "throttled_ppm": [1_000_000 * n_thr // n_ev],
-                "tokens_left": [tokens],
-            }
-        )
-
-    return rl_fn
+            n_thr += 1
+        last_s = sec
+        n_ev += 1
+    return (last_s, tokens, n_thr, n_ev), [
+        (int(user_id), n_ev, n_thr, 1_000_000 * n_thr // n_ev, tokens)
+    ]
 
 
 def rate_limit_stream(feed: DataFrame, cap: int, refill_s: int) -> DataFrame:
     """``feed`` columns: user_id long, s long (second * 2^24 + event_id)."""
-    return feed.groupBy("user_id").applyInPandasWithState(
-        make_rate_limit_fn(cap, refill_s),
-        outputStructType=RL_OUTPUT_SCHEMA,
-        stateStructType=RL_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        feed,
+        "user_id",
+        "s",
+        ["s"],
+        partial(rate_limit_fold, cap=cap, refill_s=refill_s),
+        RL_STATE_SCHEMA,
+        RL_OUTPUT_SCHEMA,
     )

@@ -15,13 +15,9 @@ key (the bounded drive orders its feed files by modification time).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
     StringType,
@@ -29,7 +25,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from amazon_kinesis_data_streams_health_check_spark import pyworker
+from amazon_kinesis_data_streams_health_check_spark.streaming.keyed_fold import (
+    keyed_fold,
+)
 
 SPRT_STEP_MBITS = 290
 SPRT_BOUND_MBITS = 4248
@@ -48,43 +46,30 @@ SPRT_STATE_SCHEMA = StructType(
 )
 
 
-def make_sprt_fn(step: int = SPRT_STEP_MBITS):
-    """applyInPandasWithState function: fold (m_s, n, s) trial rollups into
-    the running LLR walk, emitting one row per minute."""
-
-    def sprt_fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        pyworker.ready()
-        stream_name = key[0]
-        llr, trials = (state.get if state.exists else (0, 0))
-
-        out: dict[str, list] = {f.name: [] for f in SPRT_OUTPUT_SCHEMA.fields}
-        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values("m_s")
-        for m_s, n, s in zip(pdf["m_s"], pdf["n"], pdf["s"]):
-            m_s, n, s = int(m_s), int(n), int(s)
-            llr += step * (2 * s - n)
-            trials += n
-            out["stream_name"].append(stream_name)
-            out["m_s"].append(m_s)
-            out["llr_mbits"].append(llr)
-            out["cum_trials"].append(trials)
-
-        state.update((llr, trials))
-        yield pd.DataFrame(out)
-
-    return sprt_fn
+def sprt_fold(
+    stream_name: str, state: tuple | None, rows: Iterable[tuple]
+) -> tuple[tuple, list[tuple]]:
+    """Fold (m_s, n, s) trial rollups into the running LLR walk, emitting
+    one row per minute."""
+    llr, trials = state if state is not None else (0, 0)
+    out = []
+    for m_s, n, s in rows:
+        m_s, n, s = int(m_s), int(n), int(s)
+        llr += SPRT_STEP_MBITS * (2 * s - n)
+        trials += n
+        out.append((stream_name, m_s, llr, trials))
+    return (llr, trials), out
 
 
 def sprt_stream(feed: DataFrame) -> DataFrame:
     """(stream_name, m_s, n, s) trial stream -> one walk row per minute,
     the (llr, trials) prefix held in the state store."""
-    return feed.groupBy("stream_name").applyInPandasWithState(
-        make_sprt_fn(),
-        outputStructType=SPRT_OUTPUT_SCHEMA,
-        stateStructType=SPRT_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        feed,
+        "stream_name",
+        "m_s",
+        ["m_s", "n", "s"],
+        sprt_fold,
+        SPRT_STATE_SCHEMA,
+        SPRT_OUTPUT_SCHEMA,
     )

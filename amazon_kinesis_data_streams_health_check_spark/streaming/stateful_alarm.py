@@ -13,8 +13,9 @@ differ only in timing:
   timeout (heartbeat silence, wall-clock paced);
 - ``alarm_state_stream_event_time``: an event-time timeout, so absence is
   judged against the watermark and a replay gives the same alarms;
-- ``period_alarm_stream``: walks a per-period max feed in order and
-  synthesizes every period the feed skipped (the oracle-checked form);
+- ``period_alarm_stream``: a pure fold (``period_alarm_fold``, run by
+  ``keyed_fold``) that walks a per-period max feed in order and synthesizes
+  every period the feed skipped (the oracle-checked form);
 - ``alarm_tws_stream``: a ``transformWithStateInPandas`` processor with the
   full M-of-N and ``TreatMissingData`` config, a processing-time timer per
   key and typed state (``ValueState`` for the state, ``ListState`` for the
@@ -30,14 +31,17 @@ raises. The processor itself is tested through fake state handles either way
 (tests/test_tws_alarm.py, tests/test_alarm_step.py).
 
 The alarm itself takes a few milliseconds per key; a small micro-batch's cost
-is the Arrow/Python boundary. Every UDF body here calls ``pyworker.ready()``,
-which brings the engine's lazy zip-cache invalidation onto the worker
-(``pyworker.py``).
+is the Arrow/Python boundary. Every UDF body here, and the keyed-fold
+harness that runs the period walk (``keyed_fold.py``), calls
+``pyworker.ready()``, which brings the engine's lazy zip-cache invalidation
+onto the worker (``pyworker.py``).
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterable, Iterator
+from functools import partial
 from typing import Any
 
 import pandas as pd
@@ -62,6 +66,9 @@ from amazon_kinesis_data_streams_health_check_spark.operators.alarm import (
     STATE_OK,
     AlarmConfig,
     step,
+)
+from amazon_kinesis_data_streams_health_check_spark.streaming.keyed_fold import (
+    keyed_fold,
 )
 
 try:  # pragma: no cover - availability depends on the deployment image
@@ -228,18 +235,29 @@ PERIOD_ALARM_STATE_SCHEMA = StructType(
 )
 
 
-def make_period_alarm_fn(
-    threshold: float, lo_s: int, hi_s: int, period_s: int = 60
-):
-    """Build the applyInPandasWithState function that walks the period grid.
+#: The period length of the walk's grid, in seconds.
+PERIOD_S = 60
+
+
+def period_alarm_fold(
+    stream_name: str,
+    state: tuple | None,
+    rows: Iterable[tuple],
+    *,
+    threshold: float,
+    lo_s: int,
+    hi_s: int,
+) -> tuple[tuple, list[tuple]]:
+    """Walk the period grid: fold (ws_s, max_value, n_datapoints) rows, in
+    ``ws_s`` order, into one alarm row per grid period.
 
     The reference alarm evaluates EVERY period in order
     (KinesisHealthCheckStack.java:165-183). The walk consumes per-(stream,
-    period) max rows sorted by period and evaluates every period the feed
-    skipped as missing — so its output is one row per grid period,
-    byte-identical to the batch ``alarm_pipeline`` whatever the micro-batch
-    slicing was, as long as periods arrive in nondecreasing order per key
-    (the bounded drive orders its feed files by modification time).
+    period) max rows and evaluates every period the feed skipped as missing
+    — so its output is one row per grid period, byte-identical to the batch
+    ``alarm_pipeline`` whatever the micro-batch slicing was, as long as
+    periods arrive in nondecreasing order per key (the bounded drive orders
+    its feed files by modification time).
 
     A row with ``ws_s > hi_s`` is a flush sentinel: it walks the remaining
     missing periods out to ``hi_s`` and emits nothing for itself.
@@ -248,68 +266,47 @@ def make_period_alarm_fn(
     independent of event volume.
     """
     cfg = AlarmConfig(threshold=threshold)
+    if state is not None:
+        cur_state, last_ws = state
+    else:
+        cur_state, last_ws = None, lo_s - PERIOD_S
 
-    def alarm_fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        pyworker.ready()
-        stream_name = key[0]
-        if state.exists:
-            cur_state, last_ws = state.get
-        else:
-            cur_state, last_ws = None, lo_s - period_s
+    out = []
 
-        out: dict[str, list] = {f.name: [] for f in PERIOD_ALARM_OUTPUT_SCHEMA.fields}
+    def emit(ws: int, max_v, n: int) -> None:
+        nonlocal cur_state, last_ws
+        new_state, _, transitioned = step(cur_state, [], max_v, cfg)
+        out.append((stream_name, ws, max_v, n, new_state, cur_state, transitioned))
+        cur_state = new_state
+        last_ws = ws
 
-        def emit(ws: int, max_v, n: int) -> None:
-            nonlocal cur_state, last_ws
-            new_state, _, transitioned = step(cur_state, [], max_v, cfg)
-            out["stream_name"].append(stream_name)
-            out["ws_s"].append(ws)
-            out["max_lag"].append(max_v)
-            out["n_datapoints"].append(n)
-            out["state"].append(new_state)
-            out["prev_state"].append(cur_state)
-            out["transitioned"].append(transitioned)
-            cur_state = new_state
-            last_ws = ws
-
-        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values("ws_s")
-        for ws, max_v, n in zip(pdf["ws_s"], pdf["max_value"], pdf["n_datapoints"]):
-            ws = int(ws)
-            if ws > hi_s:
-                # Flush sentinel: evaluate trailing missing periods to hi.
-                for g in range(last_ws + period_s, hi_s + period_s, period_s):
-                    emit(g, None, 0)
-                continue
-            for g in range(last_ws + period_s, ws, period_s):
+    for ws, max_v, n in rows:
+        ws = int(ws)
+        if ws > hi_s:
+            # Flush sentinel: evaluate trailing missing periods to hi.
+            for g in range(last_ws + PERIOD_S, hi_s + PERIOD_S, PERIOD_S):
                 emit(g, None, 0)
-            emit(ws, None if pd.isna(max_v) else float(max_v), int(n))
-
-        state.update((cur_state, last_ws))
-        yield pd.DataFrame(out)
-
-    return alarm_fn
+            continue
+        for g in range(last_ws + PERIOD_S, ws, PERIOD_S):
+            emit(g, None, 0)
+        emit(ws, None if math.isnan(max_v) else float(max_v), int(n))
+    return (cur_state, last_ws), out
 
 
 def period_alarm_stream(
-    feed: DataFrame,
-    threshold: float,
-    lo_s: int,
-    hi_s: int,
-    period_s: int = 60,
+    feed: DataFrame, threshold: float, lo_s: int, hi_s: int
 ) -> DataFrame:
     """(stream_name, ws_s, max_value, n_datapoints) metric stream -> one
     alarm-state row per grid period, with missing-period BREACHING synthesis
     and transition detection carried in the state store across batches."""
-    return feed.groupBy("stream_name").applyInPandasWithState(
-        make_period_alarm_fn(threshold=threshold, lo_s=lo_s, hi_s=hi_s, period_s=period_s),
-        outputStructType=PERIOD_ALARM_OUTPUT_SCHEMA,
-        stateStructType=PERIOD_ALARM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        feed,
+        "stream_name",
+        "ws_s",
+        ["ws_s", "max_value", "n_datapoints"],
+        partial(period_alarm_fold, threshold=threshold, lo_s=lo_s, hi_s=hi_s),
+        PERIOD_ALARM_STATE_SCHEMA,
+        PERIOD_ALARM_OUTPUT_SCHEMA,
     )
 
 

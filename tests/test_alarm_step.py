@@ -1,12 +1,13 @@
 """Differential test: every streaming alarm equals the batch alarm.
 
 ``operators.alarm.step`` is the one alarm state machine. Each streaming
-variant drives it with its own timing; this file drives each one through
-fake ``GroupState`` / TWS handles (no streaming query) over seeded feeds,
-one call per period: the key's rows when the period has any, a timeout or
-timer pass when it has none. The per-period (state, transitioned) table
-must equal ``evaluate_alarm`` over the same rows, for every policy the
-variant supports.
+variant drives it with its own timing; this file drives each one over
+seeded feeds with no streaming query. The timer-driven variants run through
+fake ``GroupState`` / TWS handles, one call per period: the key's rows when
+the period has any, a timeout or timer pass when it has none. The period
+walk is a pure fold, called on three slices of its feed. The per-period
+(state, transitioned) table must equal ``evaluate_alarm`` over the same
+rows, for every policy the variant supports.
 
 The processing-time, event-time and TWS variants seed the previous state
 with OK while the batch has none, so their first row is compared on state
@@ -17,6 +18,7 @@ from __future__ import annotations
 
 import datetime as dt
 import random
+from functools import partial
 
 import pandas as pd
 import pytest
@@ -28,10 +30,11 @@ from amazon_kinesis_data_streams_health_check_spark.operators.alarm import (
     with_period_grid,
 )
 from amazon_kinesis_data_streams_health_check_spark.streaming.stateful_alarm import (
+    PERIOD_ALARM_OUTPUT_SCHEMA,
     CloudWatchAlarmProcessor,
     make_alarm_fn,
     make_event_time_alarm_fn,
-    make_period_alarm_fn,
+    period_alarm_fold,
 )
 from tests.test_tws_alarm import FakeHandle, FakeTimerValues
 
@@ -122,7 +125,8 @@ def batch(spark) -> dict:
 
 
 class FakeGroupState:
-    """The slice of ``GroupState`` the applyInPandasWithState alarms use."""
+    """The slice of ``GroupState`` the applyInPandasWithState functions use:
+    the timeout alarms' and ``streaming.keyed_fold``'s."""
 
     def __init__(self) -> None:
         self.value = None
@@ -204,7 +208,7 @@ def test_period_walk_equals_batch(batch):
     over three micro-batches, and synthesizes every missing one."""
     lo_s = int(T0.timestamp())
     hi_s = lo_s + (N_PERIODS - 1) * 60
-    fn = make_period_alarm_fn(THRESHOLD, lo_s, hi_s)
+    fold = partial(period_alarm_fold, threshold=THRESHOLD, lo_s=lo_s, hi_s=hi_s)
     for key, periods in FEED.items():
         feed = pd.DataFrame(
             [
@@ -214,11 +218,11 @@ def test_period_walk_equals_batch(batch):
             + [(hi_s + 60, NAN, 0)],
             columns=["ws_s", "max_value", "n_datapoints"],
         )
-        gs, rows = FakeGroupState(), []
+        state, rows = None, []
         for part in (feed.iloc[:2], feed.iloc[2:4], feed.iloc[4:]):
-            for df in fn((key,), iter([part]), gs):
-                rows += df.to_dict("records")
-        out = pd.DataFrame(rows)
+            state, part_rows = fold(key, state, part.itertuples(index=False, name=None))
+            rows += part_rows
+        out = pd.DataFrame(rows, columns=PERIOD_ALARM_OUTPUT_SCHEMA.fieldNames())
         assert list(out.ws_s) == list(range(lo_s, hi_s + 1, 60))
         got = list(zip(out.state, map(bool, out.transitioned)))
         assert got == batch[(0, key)], (key, got)

@@ -372,12 +372,11 @@ def test_streaming_cusum_matches_batch(spark, sf_small):
     assert got == want
 
 
-def test_ewma_slicing_invariant_and_matches_python(spark):
+def test_ewma_slicing_invariant(spark):
     """The streaming EWMA chart emits identical rows whether the feed
-    arrives as one micro-batch or three, and the emitted numerators match
-    an independent Python recurrence over the same series."""
+    arrives as one micro-batch or three (the numerator recurrence is pinned
+    Spark-free in tests/test_keyed_fold.py)."""
     from amazon_kinesis_data_streams_health_check_spark.streaming.ewma import (
-        EWMA_H,
         ewma_stream,
     )
 
@@ -410,16 +409,7 @@ def test_ewma_slicing_invariant_and_matches_python(spark):
     one = drive(1, "one")
     three = drive(3, "three")
     assert one == three
-    by_key = {(r[0], r[1]): r for r in one}
-    for s, xs in series.items():
-        for i, x in enumerate(xs):
-            r = by_key[(s, base + i * 60)]
-            past = xs[max(0, i - EWMA_H):i]
-            expected = sum(
-                v << (EWMA_H - k)
-                for k, v in zip(range(len(past), 0, -1), past)
-            )
-            assert r[3] == expected, (s, i, r)
+    assert len(one) == sum(map(len, series.values()))
     # the engineered spike fires exactly once, outside warmup
     spikes = [r for r in one if r[6]]
     assert spikes == [r for r in one if r[0] == "a" and r[1] == base + 12 * 60]
@@ -462,10 +452,10 @@ def test_ensemble_slicing_invariant(spark):
         assert r[7] == (r[6] >= 2), r
 
 
-def test_journey_stream_slicing_invariant_and_matches_python(spark):
+def test_journey_stream_slicing_invariant(spark):
     """The streaming journey scorer emits identical prefix rows whether the
-    feed arrives as one micro-batch or three, and the running bits match a
-    direct Python fold with the same cost matrix."""
+    feed arrives as one micro-batch or three (the running bits are pinned
+    Spark-free in tests/test_keyed_fold.py)."""
     from amazon_kinesis_data_streams_health_check_spark.streaming.journey import (
         journey_stream,
     )
@@ -504,20 +494,14 @@ def test_journey_stream_slicing_invariant_and_matches_python(spark):
     one = drive(1, "one")
     three = drive(3, "three")
     assert one == three
-
-    want = []
-    for u, ets in journeys.items():
-        s = 0
-        for i, (a, b) in enumerate(zip(ets, ets[1:]), start=1):
-            s += costs[(a, b)]
-            want.append((u, i, s, 10**6 * s // i))
-    assert one == sorted(want)
+    # one row per transition; user 3's single event emits none
+    assert sorted((r[0], r[1]) for r in one) == [(1, 1), (1, 2), (1, 3), (1, 4), (2, 1)]
 
 
-def test_pack_stream_slicing_invariant_and_matches_python(spark):
+def test_pack_stream_slicing_invariant(spark):
     """The streaming packer emits identical bin assignments whether the
-    feed arrives as one micro-batch or three, matching a direct Python
-    cumsum in shuffle-key order."""
+    feed arrives as one micro-batch or three (the cumsum is pinned
+    Spark-free in tests/test_keyed_fold.py)."""
     from amazon_kinesis_data_streams_health_check_spark.streaming.pack import (
         pack_stream,
     )
@@ -542,13 +526,7 @@ def test_pack_stream_slicing_invariant_and_matches_python(spark):
     one = drive(1, "one")
     three = drive(3, "three")
     assert one == three
-
-    want = []
-    cum: dict[str, int] = {}
-    for s, ou, d, n in sorted(rows, key=lambda r: (r[0], r[1], r[2])):
-        cum[s] = cum.get(s, 0) + n
-        want.append((d, s, n, cum[s], (cum[s] - 1) // 512))
-    assert one == sorted(want)
+    assert sorted(r[0] for r in one) == [r[2] for r in rows]
 
 
 def test_replay_feed_one_chunk_per_micro_batch_in_order(spark, tmp_path, monkeypatch):
